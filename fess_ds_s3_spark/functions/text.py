@@ -85,14 +85,6 @@ def stopword_ratio(text: Column | str,
         F.round(hits.cast("double") / tokens, 4))
 
 
-def mean_word_length(text: Column | str) -> Column:
-    t = F.trim(_col(text))
-    tokens = token_count_ws(t)
-    letters = _count_matches(t, r"\S")
-    return F.when(tokens == 0, F.lit(0.0)).otherwise(
-        F.round(letters.cast("double") / tokens, 4))
-
-
 def quality_score(text: Column | str) -> Column:
     """Composite quality heuristic in [0,1] (4 dp): rewards mid-length docs,
     normal punctuation density, and presence of stopwords — the standard

@@ -252,33 +252,9 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id", *,
             lambda b: F.struct(a.alias("a"), b.alias("b")))))
     return (buckets.select(F.explode(combos).alias("_p"))
             .select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
+            # a repeated id sorts next to its twin: (x, x) is not a pair
+            .filter(F.col("a") < F.col("b"))
             .distinct())
-
-
-def jaccard_verify(pairs: DataFrame, shingle_hashes: DataFrame,
-                   id_col: str = "doc_id", *,
-                   threshold: float = 0.8) -> DataFrame:
-    """Exact Jaccard over candidate pairs: join each side's shingle hashes,
-    count intersection/union. Returns (a, b, inter, union_, jaccard≥τ)."""
-    a_sh = shingle_hashes.select(F.col(id_col).alias("a"),
-                                 F.col("shingle_hash"))
-    b_sh = shingle_hashes.select(F.col(id_col).alias("b"),
-                                 F.col("shingle_hash"))
-    sizes = (shingle_hashes.groupBy(id_col)
-             .agg(F.countDistinct("shingle_hash").alias("n_sh")))
-    inter = (pairs.join(a_sh, "a").join(b_sh, ["b", "shingle_hash"])
-             .groupBy("a", "b")
-             .agg(F.countDistinct("shingle_hash").alias("inter")))
-    out = (inter
-           .join(sizes.select(F.col(id_col).alias("a"),
-                              F.col("n_sh").alias("na")), "a")
-           .join(sizes.select(F.col(id_col).alias("b"),
-                              F.col("n_sh").alias("nb")), "b")
-           .withColumn("union_", F.col("na") + F.col("nb") - F.col("inter"))
-           .withColumn("jaccard",
-                       F.round(F.col("inter") / F.col("union_"), 6)))
-    return out.filter(F.col("jaccard") >= threshold).select(
-        "a", "b", "inter", "union_", "jaccard")
 
 
 def dedup_minhash_lsh(df: DataFrame, text: str = "text",

@@ -18,14 +18,20 @@ lastKey``, AmazonS3Client.java:144-146). The engine generalizes both:
   spans become next-round frontier candidates (discovery_time = round
   sequence, priority = parent priority + 1).
 
-Commit order per round matters for crash safety: sinks first, ``seen`` next,
-``rounds`` ledger LAST. The ledger commit is the round's commit point and
-records the *snapshot id of every sink append*; all reads — the driver's own
-(``committed_seen``) and user-facing (``read_committed``) — are unions of
-exactly those ledgered snapshot deltas. A crash before the ledger commit
-leaves orphan appends whose snapshot ids never reach the ledger, so they
-stay invisible FOREVER — including after the round is replayed and committed
-(replay appends new snapshots; the orphans' ids are still absent from the
+Each round stages, then commits (sources/snapshots.py). Staging writes a
+sink's data files and commits nothing: ``indexed`` first, which materializes
+the cached round batch, then every other sink concurrently — none reads
+another's output. Only after every stage finished do the manifests commit,
+serially on the calling thread: ``indexed``, ``failures``, ``stats``,
+``lineage``, ``seen``, ``seen_bloom``, ``frontier`` links, ``link_edges``,
+and the ``rounds`` ledger LAST. If any stage raises, nothing commits. The
+ledger commit is the round's commit point and records the *snapshot id of
+every sink commit*; all reads — the driver's own (``committed_seen``) and
+user-facing (``read_committed``) — are unions of exactly those ledgered
+snapshot deltas. A crash before the ledger commit leaves orphan data
+directories or snapshots whose ids never reach the ledger, so they stay
+invisible FOREVER — including after the round is replayed and committed
+(replay commits new snapshots; the orphans' ids are still absent from the
 ledger). A crash after the ledger commit resumes at round N+1. Replay is
 deterministic because scheduling only reads frontier rows with
 ``round <= round_id`` (orphan link-candidates are stamped round N+1 and thus
@@ -38,6 +44,7 @@ ledger, so extra bits cost a little confirm work, never correctness.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 
@@ -45,13 +52,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
+from pyspark.util import inheritable_thread_target
 
 from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.operators import seen as seen_ops
 from fess_ds_s3_spark.operators.extract import extract_links
 from fess_ds_s3_spark.plans import lineage as lineage_ops
 from fess_ds_s3_spark.plans import round as round_plan
-from fess_ds_s3_spark.sources.snapshots import Catalog
+from fess_ds_s3_spark.sources.snapshots import (Catalog, SnapshotTable,
+                                              Staged)
 
 SEEN_SCHEMA = StructType([
     StructField("canonical_url", StringType(), True),
@@ -481,45 +490,38 @@ class CrawlDriver:
         # Cache the small admitted batch: it feeds 5 writes below.
         admitted = result.admitted.persist()
         processed = observed.withColumn("round", F.lit(round_id)).persist()
+        meta = {"round": round_id}
 
-        # 1-3. sinks (S5, S6, S7) — snapshot ids go into the rounds ledger;
-        # until that commit, these appends are invisible orphans
+        # 1. indexed (S5), staged alone: it materializes the cached batch
+        # and fills the round's Observation before the other sinks read it
         stored_cols = [c for c in processed.columns if c != "content"]
-        indexed_snap = self.indexed.append(
-            processed.filter(F.col("status") == "stored").select(*stored_cols),
-            {"round": round_id})
-        failures_snap = self.failures.append(
-            processed.filter(F.col("status") == "failed")
-            .select("url", "error_name", "error_message", "round"),
-            {"round": round_id})
-        stats_snap = self.stats.append(
-            lineage_ops.stats_events(processed, round_id), {"round": round_id})
-        lineage_snap = self.lineage.append(
-            lineage_ops.partition_lineage(admitted, round_id),
-            {"round": round_id})
+        indexed_data = self.indexed.stage(
+            processed.filter(F.col("status") == "stored").select(*stored_cols))
         metrics: dict[str, Any] = dict(obs.get)
 
-        # 4. seen delta (every admitted URL, stored or not)
-        seen_snap = self.seen.append(
-            result.seen_delta.withColumn("round", F.lit(round_id)),
-            {"round": round_id})
+        # 2. every other sink reads only the cached batch, never another
+        # sink's output: stage them concurrently. Frames are built here, on
+        # the calling thread; only the data-file writes run in the pool.
+        writes = [
+            (self.failures, processed.filter(F.col("status") == "failed")
+             .select("url", "error_name", "error_message", "round")),
+            (self.stats, lineage_ops.stats_events(processed, round_id)),
+            (self.lineage, lineage_ops.partition_lineage(admitted, round_id)),
+            # seen delta: every admitted URL, stored or not
+            (self.seen, result.seen_delta.withColumn("round",
+                                                     F.lit(round_id))),
+        ]
         if self.use_bloom:
             new_bloom = seen_ops.build_bloom(result.seen_delta, cfg)
-            merged = (seen_ops.merge_blooms(blooms, new_bloom)
-                      if blooms is not None else new_bloom)
-            self.seen_bloom.overwrite(
-                merged,
-                {"round": round_id,
-                 # metadata-only sizing for next round's probe choice —
-                 # the merge validates every blob shares these parameters
-                 "size_bytes": seen_ops.bloom_size_bytes(cfg)})
-
-        # 5. link extraction → next-round frontier candidates
-        new_links = 0
+            writes.append((self.seen_bloom,
+                           seen_ops.merge_blooms(blooms, new_bloom)
+                           if blooms is not None else new_bloom))
+        obs_links = obs_edges = None
         if docs is not None:
             from pyspark.sql import Observation
-            # join stored rows to their span payloads: by doc_id when the
-            # docs table carries one, else by url
+            # 3. link extraction → next-round frontier candidates. Join
+            # stored rows to their span payloads: by doc_id when the docs
+            # table carries one, else by url
             join_key = "doc_id" if ("doc_id" in docs.columns
                                     and "doc_id" in processed.columns) else "url"
             sel = [join_key] + (["priority"]
@@ -531,18 +533,16 @@ class CrawlDriver:
             if "doc_id" not in stored_docs.columns:
                 stored_docs = stored_docs.withColumn("doc_id", F.col("url"))
             links = extract_links(stored_docs)
-            candidates = self._frontier_candidates(links, round_id + 1)
-            # count rides the append as an observation — no extra Spark job
-            # recomputing link extraction (r2 ran candidates.count() here)
+            # counts ride the staged writes as observations — no extra
+            # Spark job recomputing link extraction; an empty delta is
+            # then never committed
             obs_links = Observation()
-            candidates = candidates.observe(
-                obs_links, F.count(F.lit(1)).alias("n"))
-            link_snap = self.frontier.append(candidates,
-                                             {"round": round_id + 1,
-                                              "kind": "links"})
+            writes.append((self.frontier, self._frontier_candidates(
+                links, round_id + 1).observe(
+                    obs_links, F.count(F.lit(1)).alias("n"))))
             if self.use_authority:
                 # host link edges for the authority fold: parent host →
-                # linked URL's host; same churn guard as the links delta
+                # linked URL's host
                 from fess_ds_s3_spark.functions.text import url_host
                 from fess_ds_s3_spark.operators.extract import \
                     links_from_spans
@@ -555,22 +555,37 @@ class CrawlDriver:
                                  & F.col("dst").isNotNull())
                          .distinct())
                 obs_edges = Observation()
-                edges = edges.observe(obs_edges,
-                                      F.count(F.lit(1)).alias("n"))
-                edge_snap = self.link_edges.append(edges,
-                                                   {"round": round_id})
-                if int(obs_edges.get["n"]) == 0:
-                    self.link_edges.drop_if_current(edge_snap)
+                writes.append((self.link_edges, edges.observe(
+                    obs_edges, F.count(F.lit(1)).alias("n"))))
+        staged = dict(zip((t.name for t, _ in writes),
+                          self._stage_all(writes)))
+
+        # 4. commits: manifests only, on the calling thread, in a fixed
+        # order; snapshot ids go into the rounds ledger and until that
+        # commit every one of them is an invisible orphan
+        indexed_snap = self.indexed.append(indexed_data, meta)
+        failures_snap = self.failures.append(staged["failures"], meta)
+        stats_snap = self.stats.append(staged["stats"], meta)
+        lineage_snap = self.lineage.append(staged["lineage"], meta)
+        seen_snap = self.seen.append(staged["seen"], meta)
+        if self.use_bloom:
+            self.seen_bloom.overwrite(
+                staged["seen_bloom"],
+                {"round": round_id,
+                 # metadata-only sizing for next round's probe choice —
+                 # the merge validates every blob shares these parameters
+                 "size_bytes": seen_ops.bloom_size_bytes(cfg)})
+        new_links = 0
+        if obs_links is not None:
             new_links = int(obs_links.get["n"])
-            if new_links == 0:
-                # the count rides the append's Observation (no second job
-                # recomputing link extraction), so a link-less round is only
-                # known AFTER the append — drop the empty delta rather than
-                # churn a snapshot + small files per round on long crawls
-                self.frontier.drop_if_current(link_snap)
+            if new_links:
+                self.frontier.append(staged["frontier"],
+                                     {"round": round_id + 1, "kind": "links"})
+        if obs_edges is not None and int(obs_edges.get["n"]):
+            self.link_edges.append(staged["link_edges"], meta)
         frontier_snap = self.frontier.current_snapshot_id()
 
-        # 6. round ledger — THE commit point
+        # 5. round ledger — THE commit point
         summary = RoundSummary(
             round_id=round_id,
             admitted=int(metrics.get("admitted") or 0),
@@ -585,10 +600,21 @@ class CrawlDriver:
                   failures_snap, stats_snap, lineage_snap, summary.admitted,
                   summary.stored, summary.discarded, summary.failed)],
                 ROUNDS_SCHEMA),
-            {"round": round_id})
+            meta)
         admitted.unpersist()
         processed.unpersist()
         return summary
+
+    def _stage_all(self, writes: list[tuple[SnapshotTable, DataFrame]]
+                   ) -> list[Staged]:
+        """Stage each ``(table, frame)`` write on its own thread and return
+        the handles in order. If any stage raises, wait for the rest and
+        re-raise: the caller then commits nothing."""
+        target = inheritable_thread_target(self.spark)
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = [pool.submit(target(table.stage), df)
+                       for table, df in writes]
+        return [f.result() for f in futures]
 
     def _frontier_candidates(self, links: DataFrame,
                              round_id: int) -> DataFrame:
@@ -714,11 +740,10 @@ class CrawlDriver:
         from pyspark.sql import Observation
         obs = Observation()
         ranks = ranks.observe(obs, F.count(F.lit(1)).alias("n"))
-        snap = self.authority.overwrite(ranks,
-                                        {"round": self.last_round()})
+        staged = self.authority.stage(ranks)
         n = int(obs.get["n"])
-        if n == 0:
-            self.authority.drop_if_current(snap)
+        if n:
+            self.authority.overwrite(staged, {"round": self.last_round()})
         return n
 
     # ----- cross-round failure retries ---------------------------------------
@@ -750,7 +775,7 @@ class CrawlDriver:
         and a duplicate re-append collapses in the round's dedup.
 
         Returns the number of URLs re-opened (an empty retry delta is
-        dropped, not committed)."""
+        staged but never committed)."""
         if max_attempts < 2:
             raise ValueError("max_attempts must be >= 2 (the first "
                              "attempt already happened)")
@@ -799,11 +824,11 @@ class CrawlDriver:
         from pyspark.sql import Observation
         obs = Observation()
         rows = rows.observe(obs, F.count(F.lit(1)).alias("n"))
-        snap = self.frontier.append(
-            rows, {"kind": "retry", "round": next_round})
+        staged = self.frontier.stage(rows)
         n = int(obs.get["n"])
-        if n == 0:
-            self.frontier.drop_if_current(snap)
+        if n:
+            self.frontier.append(staged,
+                                 {"kind": "retry", "round": next_round})
         return n
 
     # ----- incremental re-crawl cycles ---------------------------------------
@@ -916,22 +941,22 @@ class CrawlDriver:
         ).withColumn("round", F.lit(start_round))
         obs_c = Observation()
         cand_rows = cand_rows.observe(obs_c, F.count(F.lit(1)).alias("n"))
-        cand_snap = self.frontier.append(
-            cand_rows, {"round": start_round, "kind": "recrawl-candidates",
-                        "cycle": cycle_id})
+        staged = self.frontier.stage(cand_rows)
         n_cand = int(obs_c.get["n"])
-        if n_cand == 0:
-            self.frontier.drop_if_current(cand_snap)
+        if n_cand:
+            self.frontier.append(
+                staged, {"round": start_round, "kind": "recrawl-candidates",
+                         "cycle": cycle_id})
 
         obs_t = Observation()
         tomb_rows = (tombs.withColumn("round",
                                       F.lit(start_round).cast("int"))
                      .observe(obs_t, F.count(F.lit(1)).alias("n")))
-        tomb_snap = self.tombstones.append(
-            tomb_rows, {"round": start_round, "cycle": cycle_id})
+        staged = self.tombstones.stage(tomb_rows)
         n_tomb = int(obs_t.get["n"])
-        if n_tomb == 0:
-            self.tombstones.drop_if_current(tomb_snap)
+        if n_tomb:
+            self.tombstones.append(staged,
+                                   {"round": start_round, "cycle": cycle_id})
 
         self.listing.overwrite(listing_df, {"cycle": cycle_id})
         summary = CycleSummary(cycle=cycle_id, start_round=start_round,

@@ -5,15 +5,24 @@ so the crawl resumes exactly with per-partition lineage"). This sandbox has
 no Iceberg runtime jar (and no network to fetch one), so this module provides
 the same *semantics* over plain parquet:
 
-- **append(df)** → a new immutable snapshot: the delta is written to its own
-  directory; the manifest records the cumulative list of data directories.
-- **overwrite(df)** → a new snapshot whose data-file list is reset.
+- **stage(df)** → writes the data files to a fresh directory and commits
+  nothing: Iceberg's data-file write. A staged directory is invisible to
+  every read until a commit names it; an uncommitted one is an orphan.
+- **append(df | staged)** → a new immutable snapshot: the delta is written
+  (or was staged) to its own directory; the manifest records the
+  cumulative list of data directories. Committing a staged handle is
+  Iceberg's ``newAppend().appendFile(...).commit()``: a manifest write only.
+- **overwrite(df | staged)** → a new snapshot whose data-file list is reset.
 - **read(snapshot_id=None)** → DataFrame over exactly the data files of that
   snapshot (default: current) — time travel.
 - **commit is atomic** — manifest written to a temp file then ``os.replace``.
 - per-snapshot **lineage metadata** (round id, parent snapshot, caller
   metrics) is stored in the manifest, satisfying the "per-partition lineage +
   metrics" requirement together with ``plans.lineage``.
+
+Splitting the write lets a caller stage several tables' data files
+concurrently and then commit their manifests serially in a fixed order
+(plans/crawl.py does this per round).
 
 On a real cluster, swap this class for Iceberg by replacing ``append`` with
 ``df.writeTo(name).append()`` and ``read`` with
@@ -52,6 +61,13 @@ class Snapshot:
     def delta(self) -> str:
         # pre-delta_dir manifests: an append's own files are the last entry
         return self.delta_dir or self.data_dirs[-1]
+
+
+@dataclass(frozen=True)
+class Staged:
+    """Data files written by :meth:`SnapshotTable.stage`, not yet committed."""
+    root: str  # the owning table's root directory
+    rel: str   # the data directory, relative to ``root``
 
 
 class SnapshotTable:
@@ -104,56 +120,42 @@ class SnapshotTable:
                 return Snapshot(**s)
         raise KeyError(f"{self.name}: no snapshot {snapshot_id}")
 
-    def _write_data_dir(self, df: DataFrame) -> str:
+    def stage(self, df: DataFrame) -> Staged:
+        """Write ``df``'s data files to a fresh directory without committing
+        them; pass the handle to :meth:`append` or :meth:`overwrite`."""
         rel = os.path.join("data", f"snap-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-        return rel
+        return Staged(self.root, rel)
 
-    def _new(self, df: DataFrame, mode: str,
+    def _new(self, data: DataFrame | Staged, mode: str,
              metadata: dict[str, Any] | None) -> int:
+        staged = data if isinstance(data, Staged) else self.stage(data)
+        if staged.root != self.root:
+            raise ValueError(f"{self.name}: data staged for {staged.root}")
         manifest = self._load()
         parent = self._snapshot(manifest, None)
-        rel = self._write_data_dir(df)
-        dirs = [rel] if mode == "overwrite" else (
-            (parent.data_dirs if parent else []) + [rel])
+        dirs = [staged.rel] if mode == "overwrite" else (
+            (parent.data_dirs if parent else []) + [staged.rel])
         snap_id = (parent.snapshot_id + 1) if parent else 1
         manifest["snapshots"].append({
             "snapshot_id": snap_id,
             "parent_id": parent.snapshot_id if parent else None,
             "mode": mode,
             "data_dirs": dirs,
-            "delta_dir": rel,  # the files ADDED by this snapshot alone
+            "delta_dir": staged.rel,  # the files ADDED by this snapshot alone
             "metadata": {"committed_at": time.time(), **(metadata or {})},
         })
         manifest["current"] = snap_id
         self._commit(manifest)
         return snap_id
 
-    def append(self, df: DataFrame,
+    def append(self, data: DataFrame | Staged,
                metadata: dict[str, Any] | None = None) -> int:
-        return self._new(df, "append", metadata)
+        return self._new(data, "append", metadata)
 
-    def overwrite(self, df: DataFrame,
+    def overwrite(self, data: DataFrame | Staged,
                   metadata: dict[str, Any] | None = None) -> int:
-        return self._new(df, "overwrite", metadata)
-
-    def drop_if_current(self, snapshot_id: int) -> bool:
-        """Undo an append that turned out useless (e.g. an empty
-        link-candidate delta): drop ``snapshot_id`` iff it is still the
-        CURRENT snapshot — i.e. nothing committed after it and no ledger
-        references it yet — resetting current to its parent. Returns
-        whether the snapshot was dropped. The delta's data directory stays
-        on disk (unreferenced, like any orphan append); correctness never
-        depends on deleting data files, only on the manifest."""
-        manifest = self._load()
-        snaps = manifest["snapshots"]
-        if (manifest["current"] != snapshot_id or not snaps
-                or snaps[-1]["snapshot_id"] != snapshot_id):
-            return False
-        entry = snaps.pop()
-        manifest["current"] = entry["parent_id"]
-        self._commit(manifest)
-        return True
+        return self._new(data, "overwrite", metadata)
 
     def compact(self, partitions: int | None = None,
                 metadata: dict[str, Any] | None = None) -> int:

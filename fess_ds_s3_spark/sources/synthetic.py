@@ -209,25 +209,3 @@ def _span_struct(seed: int, n_hosts: int, i: F.Column) -> F.Column:
         F.when(i % 2 == 1, ref_of).alias("media_ref"),
         i.cast("int").alias("offset"),
     )
-
-
-def synth_host_budgets(spark: SparkSession, n_hosts: int, *,
-                       seed: int = 42) -> DataFrame:
-    """Seeded per-host politeness budgets: budget ∈ {1,2,4,8,16} and a
-    crawl delay ∈ {100,500,1000,5000} ms — exactly computable by the oracle."""
-    budgets = F.array(*[F.lit(x) for x in (1, 2, 4, 8, 16)])
-    delays = F.array(*[F.lit(x) for x in (100, 500, 1000, 5000)])
-    return (
-        spark.range(0, n_hosts)
-        .select(
-            F.format_string("host-%05d.example.com", F.col("id")).alias("host"),
-            F.element_at(budgets,
-                         (F.pmod(F.xxhash64(F.lit(seed + 23), F.col("id")),
-                                 F.lit(5)) + 1).cast("int"))
-            .alias("budget_per_round"),
-            F.element_at(delays,
-                         (F.pmod(F.xxhash64(F.lit(seed + 29), F.col("id")),
-                                 F.lit(4)) + 1).cast("int")).cast("long")
-            .alias("crawl_delay_ms"),
-        )
-    )

@@ -22,6 +22,18 @@ def _admission_set(driver):
     return {r.canonical_url for r in driver.committed_seen().collect()}
 
 
+def _linking_docs(frontier):
+    """Docs whose one media span links each URL to a page on another host."""
+    return (frontier.select("url")
+            .withColumn("doc_id", F.col("url"))
+            .withColumn("spans", F.array(F.struct(
+                F.lit("media").alias("kind"),
+                F.lit(None).cast("string").alias("text"),
+                F.concat(F.lit("https://l.example.com/"),
+                         F.md5("url")).alias("media_ref"),
+                F.lit(0).alias("offset")))))
+
+
 class TestMultiRound:
     def test_rounds_consume_frontier_exactly_once(self, spark, cfg, tmp_path):
         driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
@@ -258,14 +270,7 @@ class TestDriverActionDiet:
         from pyspark.sql import DataFrame
         driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
         frontier = synthetic.synth_frontier(spark, 40, n_hosts=3, seed=6)
-        docs = (frontier.select("url")
-                .withColumn("doc_id", F.col("url"))
-                .withColumn("spans", F.array(F.struct(
-                    F.lit("media").alias("kind"),
-                    F.lit(None).cast("string").alias("text"),
-                    F.concat(F.lit("https://l.example.com/"),
-                             F.md5("url")).alias("media_ref"),
-                    F.lit(0).alias("offset")))))
+        docs = _linking_docs(frontier)
         driver.seed(frontier)
         driver.run_round(0, docs=docs)  # warm: bloom table now exists
 
@@ -285,6 +290,94 @@ class TestDriverActionDiet:
         summary = driver.run_round(1, docs=docs)
         assert calls == []
         assert summary.admitted > 0
+
+
+class TestStageThenCommit:
+    TABLES = ("frontier", "seen", "seen_bloom", "indexed", "failures",
+              "stats", "lineage", "link_edges", "rounds")
+
+    def test_commits_run_in_order_on_the_calling_thread(self, spark, cfg,
+                                                        tmp_path,
+                                                        monkeypatch):
+        import threading
+        from fess_ds_s3_spark.sources.snapshots import SnapshotTable
+        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg,
+                             use_authority=True)
+        frontier = synthetic.synth_frontier(spark, 40, n_hosts=3, seed=6)
+        driver.seed(frontier)
+        driver.run_round(0, docs=_linking_docs(frontier))  # bloom exists
+        calls: list[tuple[str, str, int]] = []
+        stage_threads: set[int] = set()
+
+        def record(kind, orig):
+            def wrapper(self, *a, **kw):
+                calls.append((kind, self.name, threading.get_ident()))
+                return orig(self, *a, **kw)
+            return wrapper
+
+        def record_stage(orig):
+            def wrapper(self, *a, **kw):
+                stage_threads.add(threading.get_ident())
+                return orig(self, *a, **kw)
+            return wrapper
+
+        for kind in ("append", "overwrite"):
+            monkeypatch.setattr(SnapshotTable, kind,
+                                record(kind, getattr(SnapshotTable, kind)))
+        monkeypatch.setattr(SnapshotTable, "stage",
+                            record_stage(SnapshotTable.stage))
+        summary = driver.run_round(1, docs=_linking_docs(frontier))
+        assert summary.new_links > 0
+        assert [(k, n) for k, n, _ in calls] == [
+            ("append", "indexed"), ("append", "failures"),
+            ("append", "stats"), ("append", "lineage"), ("append", "seen"),
+            ("overwrite", "seen_bloom"), ("append", "frontier"),
+            ("append", "link_edges"), ("append", "rounds")]
+        main = threading.get_ident()
+        assert {t for _, _, t in calls} == {main}
+        assert stage_threads - {main}  # the other sinks staged in the pool
+
+    def test_failed_stage_commits_nothing_and_resume_matches(
+            self, spark, cfg, tmp_path, monkeypatch):
+        frontier = synthetic.synth_frontier(spark, 60, n_hosts=4, seed=3)
+        docs = _linking_docs(frontier)
+        twin = CrawlDriver(spark, str(tmp_path / "twin"), cfg,
+                           use_authority=True)
+        twin.seed(frontier)
+        twin.run(3, docs=docs, stop_when_empty=False)
+
+        crash = CrawlDriver(spark, str(tmp_path / "crash"), cfg,
+                            use_authority=True)
+        crash.seed(frontier)
+        crash.run_round(0, docs=docs)
+        before = {n: crash.catalog.table(n).current_snapshot_id()
+                  for n in self.TABLES}
+
+        def boom(df):
+            raise RuntimeError("simulated failure while staging seen")
+        monkeypatch.setattr(crash.seen, "stage", boom)
+        with pytest.raises(RuntimeError, match="staging seen"):
+            crash.run_round(1, docs=docs)
+        assert {n: crash.catalog.table(n).current_snapshot_id()
+                for n in self.TABLES} == before
+
+        resumed = CrawlDriver(spark, str(tmp_path / "crash"), cfg,
+                              use_authority=True)
+        assert resumed.last_round() == 0
+        resumed.run(2, docs=docs, stop_when_empty=False)
+
+        def state(d):
+            ledger = sorted(tuple(r) for r in d.rounds.read().select(
+                "round", "admitted", "stored", "discarded",
+                "failed").collect())
+            return (ledger, _admission_set(d),
+                    sorted(tuple(r) for r in d.read_committed("indexed")
+                           .select("url", "round").collect()),
+                    sorted(tuple(r) for r in d.read_committed("failures")
+                           .select("url", "round").collect()),
+                    sorted(tuple(r) for r in
+                           d.link_edges.read().distinct().collect()))
+        assert state(resumed) == state(twin)
 
 
 class TestStatsTaxonomy:

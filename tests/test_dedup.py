@@ -90,6 +90,19 @@ class TestMinHashLSH:
         assert len(got) < 40
         assert dedup.hot_shingle_count(docs, n=3, max_doc_freq=5) > 0
 
+    def test_repeated_doc_id_yields_no_self_pair(self, spark, docs):
+        """A doc_id that occurs twice shares every LSH bucket with itself;
+        neither the candidate pairs nor the verified pairs may contain
+        (x, x)."""
+        twice = docs.unionByName(docs.filter(F.col("doc_id") == 7))
+        sigs = dedup.minhash_signatures(twice, num_hashes=64)
+        cand = [(r.a, r.b) for r in
+                dedup.lsh_candidate_pairs(sigs, bands=16).collect()]
+        verified = [(r.a, r.b) for r in dedup.dedup_minhash_lsh(
+            twice, num_hashes=64, bands=16, threshold=0.5).collect()]
+        assert cand and verified
+        assert all(a < b for a, b in cand + verified)
+
     def test_signature_determinism(self, spark, docs):
         s1 = {(r.doc_id, tuple(r.signature)) for r in
               dedup.minhash_signatures(docs, num_hashes=16).collect()}

@@ -75,21 +75,34 @@ class TestSnapshots:
         assert [r.v for r in b.read().collect()] == [2]
 
 
-class TestDropIfCurrent:
-    def test_drops_only_current_head(self, spark, tmp_path):
-        from fess_ds_s3_spark.sources.snapshots import SnapshotTable
+class TestStage:
+    def test_staged_data_is_invisible_until_committed(self, spark, tmp_path):
         t = SnapshotTable(spark, str(tmp_path), "t")
-        s1 = t.append(spark.range(3), {"k": 1})
-        s2 = t.append(spark.range(2), {"k": 2})
-        assert not t.drop_if_current(s1)  # not the head
-        assert t.current_snapshot_id() == s2
-        assert t.drop_if_current(s2)
-        assert t.current_snapshot_id() == s1
-        assert t.read().count() == 3
-        assert not t.drop_if_current(s2)  # already gone
-        s3 = t.append(spark.range(5), {"k": 3})
-        assert s3 == s2  # ids continue from the surviving head
+        first = t.stage(spark.range(2))
+        assert t.current_snapshot_id() is None
+        with pytest.raises(KeyError):
+            t.read()
+        s1 = t.append(spark.range(3))
+        staged = t.stage(spark.range(10, 15))
+        assert os.path.isdir(os.path.join(t.root, staged.rel))
+        for view in (t, SnapshotTable(spark, str(tmp_path), "t")):
+            assert view.current_snapshot_id() == s1
+            assert [s.snapshot_id for s in view.snapshots()] == [s1]
+            assert view.read().count() == 3
+            assert view.read_deltas([s1]).count() == 3
+        # committing a handle writes the manifest only
+        s2 = t.append(staged, {"k": 2})
+        assert sorted(r.id for r in t.read_deltas([s2]).collect()) == \
+            list(range(10, 15))
         assert t.read().count() == 8
+        assert t.metadata(s2)["k"] == 2
+        s3 = t.overwrite(first)
+        assert t.read().count() == 2 and t.read(s2).count() == 8
+        assert s3 == s2 + 1
+        other = SnapshotTable(spark, str(tmp_path), "u")
+        with pytest.raises(ValueError):
+            other.append(t.stage(spark.range(1)))
+        assert other.current_snapshot_id() is None
 
     def test_linkless_round_drops_empty_frontier_delta(self, spark,
                                                        tmp_path):
