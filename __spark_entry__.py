@@ -781,13 +781,8 @@ def q_minhash_lsh(spark, sf_dir):
                       F.concat(F.col("text"), F.lit(" nearduplicate"))
                       .alias("text"))
     corpus = d.unionByName(clones)
-    # verify_scope="all": EVERY doc here has a planted clone, so the
-    # candidate set IS the corpus and the default semi-join prunes
-    # nothing — the all-docs verify is the right shape for this fixture
-    # (the "candidates" default is the right shape for real corpora)
     return (dedup.dedup_minhash_lsh(corpus, threshold=0.7, num_hashes=128,
-                                    bands=32, shingle_n=3,
-                                    verify_scope="all")
+                                    bands=32, shingle_n=3)
             .select("a", "b", "inter", "union_"))
 
 

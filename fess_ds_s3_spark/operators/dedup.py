@@ -5,10 +5,14 @@ Four tiers, cheapest-first — a 100 TB dedup pipeline runs them as a funnel:
 1. **Exact** — hash-groupBy on a normalized fingerprint (one shuffle on the
    16-byte hash, not the document text; map-side partial aggregation applies).
 2. **MinHash + LSH** — shingle → minhash signature → band buckets →
-   bucket-join candidate pairs → exact-Jaccard verify. The classic
-   near-dup pipeline (Broder; used by most web-corpus dedups). Everything
-   is built-in explode/groupBy/join except the signature, a vectorized
-   pandas UDF over Arrow batches.
+   in-bucket candidate pairs → exact-Jaccard verify. The classic
+   near-dup pipeline (Broder; used by most web-corpus dedups). One Arrow
+   shingle pass yields each doc's distinct hash set; NULL ids are dropped,
+   the sets are hash-partitioned on the id once, and banding and both
+   verify sides read that one exchange (Spark reuses it). The trade-off:
+   the hash sets cross one shuffle instead of the shingle kernel running
+   3–7 times. Everything is built-in explode/groupBy/join except the
+   shingler and the signature, vectorized over Arrow batches.
 3. **SimHash** — 64-bit Charikar fingerprint + Hamming-ball blocking (split
    into ``radius + 1`` pigeonhole blocks; exact-match on any block →
    candidate — complete at any requested radius ≤ 63).
@@ -18,7 +22,7 @@ Four tiers, cheapest-first — a 100 TB dedup pipeline runs them as a funnel:
 
 Scale notes: LSH bands are the shuffle key — ``(band_id, band_hash)`` — so
 candidate generation never compares across buckets; skewed buckets (boiler-
-plate shingles) are capped with a per-bucket limit before the pair join.
+plate shingles) are capped with a per-bucket limit before the pair expansion.
 """
 
 from __future__ import annotations
@@ -166,20 +170,29 @@ def _minhash_params(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]
     return a, b
 
 
-def minhash_signatures(df: DataFrame, text: str = "text",
-                       id_col: str = "doc_id", *, num_hashes: int = 128,
-                       shingle_n: int = 5, seed: int = 42) -> DataFrame:
-    """(id, signature:array<long>) — vectorized universal-hash minhash.
+def _hash_sets(df: DataFrame, text: str, id_col: str, n: int) -> DataFrame:
+    """(id, _hs: array<long>) — each doc's distinct xxhash64 shingle set,
+    from ONE Arrow shingle-kernel pass (functions/arrow_text.shingle_sets
+    builds the strings; the hash stays JVM xxhash64)."""
+    from fess_ds_s3_spark.functions.arrow_text import shingle_sets
+    hset = F.array_distinct(F.transform("shingle",
+                                        lambda s: F.xxhash64(s)))
+    return (shingle_sets(df, text=text, id_col=id_col, n=n)
+            .select(F.col(id_col), hset.alias("_hs")))
 
-    The per-doc shingle set is hashed JVM-side (xxhash64); the k permutations
-    ``(a*x + b) mod p`` run as one native-int64 numpy matrix op per doc —
-    p = 2^31-1 with 31-bit-folded shingle hashes keeps every intermediate
-    below 2^62 (no object-dtype fallback; this is the 100 TB dedup hot path).
-    """
+
+def _sign(num_hashes: int, seed: int):
+    """Pandas UDF: array<long> hash set → array<long> minhash signature.
+
+    The k permutations ``(a*x + b) mod p`` run as one native-int64 numpy
+    matrix op per batch — p = 2^31-1 with 31-bit-folded shingle hashes
+    keeps every intermediate below 2^62 (no object-dtype fallback; this is
+    the 100 TB dedup hot path). The min over a set equals the min over the
+    list it came from, so distinct or not, the signature is the same."""
     a, b = _minhash_params(num_hashes, seed)
 
     @pandas_udf(ArrayType(LongType()))
-    def _sign(hash_arrays: pd.Series) -> pd.Series:
+    def _sign_batch(hash_arrays: pd.Series) -> pd.Series:
         # r6: one batch-wide (k, Σn) matrix op + segment-min (reduceat)
         # instead of a small numpy op per document — same permutations,
         # same values, ~10× less per-doc dispatch overhead
@@ -205,19 +218,29 @@ def minhash_signatures(df: DataFrame, text: str = "text",
             out[i] = m.tolist()
         return pd.Series(out)
 
-    from fess_ds_s3_spark.functions.arrow_text import shingle_sets
-    sh = (shingle_sets(df, text=text, id_col=id_col, n=shingle_n)
-          .select(F.col(id_col),
-                  F.transform(F.col("shingle"),
-                              lambda s: F.xxhash64(s)).alias("sh")))
-    return sh.select(id_col, _sign(F.col("sh")).alias("signature"))
+    return _sign_batch
+
+
+def minhash_signatures(df: DataFrame, text: str = "text",
+                       id_col: str = "doc_id", *, num_hashes: int = 128,
+                       shingle_n: int = 5, seed: int = 42) -> DataFrame:
+    """(id, signature:array<long>) — vectorized universal-hash minhash.
+
+    The per-doc shingle set is hashed JVM-side (xxhash64, see
+    :func:`_hash_sets`) and signed by :func:`_sign`. Rows keep their id
+    as given, NULL included."""
+    sign = _sign(num_hashes, seed)
+    return (_hash_sets(df, text, id_col, shingle_n)
+            .select(id_col, sign(F.col("_hs")).alias("signature")))
 
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id", *,
                         bands: int = 16, max_bucket: int = 50) -> DataFrame:
     """Band the signatures and emit candidate pairs (a < b) from shared
-    buckets. ``max_bucket`` caps degenerate buckets (boilerplate) — capped
-    buckets are logged by the caller, not silently ideal."""
+    buckets. ``max_bucket`` caps degenerate buckets (boilerplate): only
+    the ``max_bucket`` lowest ids of a bucket pair within it. The cap is
+    silent — nothing counts or logs the ids it drops — and costs recall
+    only for pairs that share no other, uncapped bucket."""
     sig_len = F.size("signature")
     rows_col = (sig_len / bands).cast("int")
     banded = (
@@ -260,68 +283,38 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id", *,
 def dedup_minhash_lsh(df: DataFrame, text: str = "text",
                       id_col: str = "doc_id", *, num_hashes: int = 128,
                       bands: int = 16, shingle_n: int = 5,
-                      threshold: float = 0.8, seed: int = 42,
-                      verify_scope: str = "candidates",
-                      checkpoint_pairs: bool = False) -> DataFrame:
+                      threshold: float = 0.8, seed: int = 42) -> DataFrame:
     """Full near-dup pipeline → verified duplicate pairs (a < b).
 
-    ``verify_scope`` picks which docs the exact-Jaccard verify shingles:
+    The input and the shingle kernel run once. One relation
+    ``(id, _hs)`` — the distinct shingle-hash set per doc — is computed,
+    rows with a NULL id are dropped (they can never pair), and it is
+    hash-partitioned on the id. Banding signs ``_hs`` above that
+    exchange; both verify sides read the same relation, so all three
+    consumers share one id exchange (the plan shows it as
+    ``ReusedExchange``). The hash sets cross that shuffle instead of the
+    kernel re-running per consumer.
 
-    - ``"candidates"`` (default — the web-scale shape): semi-join the
-      corpus to the pair ids first, keeping the verify explode
-      O(candidates) instead of O(corpus). On a real crawl corpus the
-      candidate set is a sliver of the corpus and the all-docs explode
-      dominates the verify stage (measured 24% whole-pipeline win at
-      sf0.1, even though the candidate subtree is evaluated twice — once
-      for ids, once for verify).
-    - ``"all"``: shingle the whole corpus, no semi-join. FASTER when most
-      docs are candidates (e.g. planted-clone fixtures where every doc
-      has a near-dup): the semi-join then prunes nothing and its extra
-      subtree evaluation is pure overhead (2.6 s vs 5.3 s on the
-      100%-dense sf0.1 fixture).
+    Two details keep the exchange shareable: the signature is computed
+    ABOVE the repartition (below it, column pruning would split the
+    relation into a signature-only and a set-only branch), and the NULL
+    filter sits BELOW it (otherwise the joins' inferred ``isnotnull``
+    lands under the verify branches only). Either way the branches stop
+    being identical and nothing is reused.
 
-    Output is identical either way (the verify joins restrict to pair
-    members regardless).
-
-    ``checkpoint_pairs=True`` lazily ``localCheckpoint``s the pair set so
-    its subtree runs once (~25% further at sf0.1). Off by default:
-    localCheckpoint stores blocks on executors WITHOUT lineage, so an
-    executor loss fails the job instead of recomputing — fine for
-    single-node/bench runs, wrong default for a 1000-executor crawl
-    (there, materialize the pairs to a table between stages instead).
+    Verify is per PAIR: ``size(array_intersect(ha, hb))`` over each
+    side's distinct hash set, which equals the exploded shape's
+    countDistinct of shared hashes — including under (astronomically
+    unlikely) hash collisions, which both shapes fold the same way.
     """
-    if verify_scope not in ("candidates", "all"):
-        raise ValueError("verify_scope must be 'candidates' or 'all'")
-    sigs = minhash_signatures(df, text, id_col, num_hashes=num_hashes,
-                              shingle_n=shingle_n, seed=seed)
+    sets = (_hash_sets(df, text, id_col, shingle_n)
+            .filter(F.col(id_col).isNotNull())
+            .repartition(id_col))
+    sign = _sign(num_hashes, seed)
+    sigs = sets.select(id_col, sign(F.col("_hs")).alias("signature"))
     pairs = lsh_candidate_pairs(sigs, id_col, bands=bands)
-    if checkpoint_pairs:
-        pairs = pairs.localCheckpoint(eager=False)
-    verify_docs = df
-    if verify_scope == "candidates":
-        cand_ids = (pairs.select(F.col("a").alias(id_col))
-                    .union(pairs.select(F.col("b").alias(id_col)))
-                    .distinct())
-        verify_docs = df.join(cand_ids, on=id_col, how="left_semi")
-    # r6: verify per PAIR with set intersection of each side's distinct
-    # hash array instead of exploding every shingle into (id, hash) rows
-    # and re-aggregating — the candidate set is a sliver of the corpus,
-    # so two skinny joins + one array_intersect per pair replace two
-    # 10^5-row joins, a groupBy(a, b) and a per-doc countDistinct.
-    # Values are identical by construction: size(array_intersect(ha, hb))
-    # == countDistinct(shared hashes) and size(ha) == countDistinct per
-    # doc — including under (astronomically unlikely) hash collisions,
-    # which both shapes fold the same way.
-    from fess_ds_s3_spark.functions.arrow_text import shingle_sets
-    hset = F.array_distinct(F.transform("shingle",
-                                        lambda s: F.xxhash64(s)))
-    sets_df = (shingle_sets(verify_docs, text=text, id_col=id_col,
-                            n=shingle_n)
-               .select(F.col(id_col), hset.alias("_hs")))
-    a_side = sets_df.select(F.col(id_col).alias("a"),
-                            F.col("_hs").alias("_ha"))
-    b_side = sets_df.select(F.col(id_col).alias("b"),
-                            F.col("_hs").alias("_hb"))
+    a_side = sets.select(F.col(id_col).alias("a"), F.col("_hs").alias("_ha"))
+    b_side = sets.select(F.col(id_col).alias("b"), F.col("_hs").alias("_hb"))
     inter = F.size(F.array_intersect("_ha", "_hb")).cast("long")
     na = F.size("_ha").cast("long")
     nb = F.size("_hb").cast("long")

@@ -1,16 +1,20 @@
 """Dump formatted physical plans for the headline queries and grep the
 scale-critical properties: parquet filter pushdown (PushedFilters), column
 pruning (ReadSchema), broadcast joins for small dims, whole-stage codegen
-spans. Usage: PYTHONPATH=/root/repo python scripts/explain_plans.py [name...]
+spans, shuffles, reused exchanges and Python kernel passes.
+Usage: PYTHONPATH=<checkout> python scripts/explain_plans.py [name...]
 """
 
 from __future__ import annotations
 
 import io
+import os
+import re
 import sys
+from collections import Counter
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -39,12 +43,16 @@ def main():
         final = str(df._jdf.queryExecution().executedPlan())
         print(f"{'='*70}\n{name}\n{'='*70}")
         print(plan)
-        import re
         # executedPlan marks codegen stages as "*(N) Operator"
         wsc = len(set(re.findall(r"\*\((\d+)\)", final)))
+        # one "(N) Name" details header per node: a shuffle is a plain
+        # "Exchange"; a "ReusedExchange" re-reads one and is no shuffle
+        nodes = Counter(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
         print(f"--- summary: WholeStageCodegen spans={wsc}, "
-              f"broadcasts={plan.count('BroadcastExchange')}, "
-              f"shuffles={plan.count('Exchange') - plan.count('BroadcastExchange')}, "
+              f"broadcasts={nodes['BroadcastExchange']}, "
+              f"shuffles={nodes['Exchange']}, "
+              f"reused={nodes['ReusedExchange']}, "
+              f"mapinarrow={nodes['MapInArrow']}, "
               f"pushed={'PushedFilters: [' in plan}")
     spark.stop()
 

@@ -15,7 +15,11 @@ script derives a 10x copy of the three tables the headline queries read
   the source row, while fingerprints and 5-gram shingle sets are
   disjoint across copies — so exact-dedup group sizes, LSH bucket loads
   and near-dup structure stay realistic instead of exploding with 10
-  identical clones of every doc;
+  identical clones of every doc. Words are split on runs of whitespace
+  after a ``trim``, the same split ``operators.dedup.shingles`` uses, and
+  rejoined with single spaces. Two source docs with the same word
+  multiset (in any order or spacing) become exact clones of each other
+  in every copy after the first;
 - embeddings/events rows are verbatim copies under shifted ids.
 
 Usage: python scripts/make_sf_scale.py [out_dir] [copies]
@@ -50,7 +54,7 @@ def main():
     ev = spark.read.parquet(f"{SRC}/events.parquet")
 
     def shuffled_text(k: int):
-        words = F.split(F.col("text"), " ")
+        words = F.split(F.trim(F.col("text")), r"\s+")
         keyed = F.transform(
             words, lambda w: F.struct(F.xxhash64(w, F.lit(k)).alias("h"),
                                       w.alias("w")))

@@ -111,6 +111,61 @@ class TestMinHashLSH:
                   docs.repartition(7), num_hashes=16).collect()}
         assert s1 == s2
 
+    def test_signature_values_are_pinned(self, spark, docs):
+        """shingle → xxhash64 → sign has one code path; a drift in any
+        step (distinct or not, hash, permutation, fold) changes these."""
+        sig = (dedup.minhash_signatures(docs.filter(F.col("doc_id") == 0),
+                                        num_hashes=16)
+               .first().signature)
+        assert sig == [269199653, 140291832, 136394756, 88477839,
+                       270641545, 159735807, 207265713, 306069476,
+                       105767561, 38807436, 315232947, 42236173,
+                       111443824, 128912434, 86781186, 222331770]
+
+    def test_signatures_keep_null_ids(self, spark, docs):
+        nulls = spark.createDataFrame([(None, "some text here")],
+                                      "doc_id long, text string")
+        sigs = dedup.minhash_signatures(docs.unionByName(nulls),
+                                        num_hashes=16)
+        assert sigs.filter(F.col("doc_id").isNull()).count() == 1
+
+    def test_null_ids_are_dropped_before_pairing(self, spark, docs):
+        """Exchange reuse needs the NULL-id filter below the shared id
+        exchange; dropping those rows must not change any pair. NULL and
+        empty text stay: each shingles to one set and pairs with its
+        twin."""
+        base = docs.filter(F.col("doc_id") == 0).first().text
+        extra = spark.createDataFrame(
+            [(None, base), (None, None), (None, ""),
+             (40, None), (41, None), (42, ""), (43, "")],
+            "doc_id long, text string")
+        corpus = docs.unionByName(extra)
+        got = dedup.dedup_minhash_lsh(corpus, num_hashes=64, bands=16,
+                                      threshold=0.5).collect()
+        want = dedup.dedup_minhash_lsh(
+            corpus.filter(F.col("doc_id").isNotNull()), num_hashes=64,
+            bands=16, threshold=0.5).collect()
+        assert all(r.a is not None and r.b is not None for r in got)
+        assert sorted(got) == sorted(want)
+        assert {(40, 41), (42, 43), (0, 1)} <= {(r.a, r.b) for r in got}
+
+    def test_one_shingle_pass_shares_the_id_exchange(self, spark, docs):
+        """Banding and both verify sides read one id-partitioned relation:
+        the final AQE plan runs the shingle kernel and the signer once and
+        reuses the id exchange for the two verify sides."""
+        out = dedup.dedup_minhash_lsh(docs, num_hashes=64, bands=16,
+                                      threshold=0.5)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        # the AQE string also prints the Initial Plan; count the final one
+        final = plan.split("== Final Plan ==")[1] \
+            .split("== Initial Plan ==")[0]
+        assert final.count("MapInArrow") == 1
+        assert final.count("ArrowEvalPython") == 1
+        reused = [ln for ln in final.splitlines()
+                  if "ReusedExchange" in ln and "REPARTITION_BY_COL" in ln]
+        assert len(reused) >= 2
+
 
 class TestEmbeddingNearDup:
     def test_lsh_recalls_identical_clones_and_never_exceeds_exact(self, spark):
