@@ -133,19 +133,16 @@ class CrawlDriver:
     FsObjectStore root path or any ``StoreSpec`` (e.g. ``S3StoreSpec`` for
     a real S3/MinIO deployment).
 
-    ``robots_round_seconds``: the wall-clock a scheduling round represents
-    when converting robots ``Crawl-delay`` into per-round budgets
-    (budget = round_seconds / delay).
+    Robots ``Crawl-delay`` converts into per-round budgets at 60 s per
+    round (``operators.robots.crawl_delay_budgets``).
     """
 
     def __init__(self, spark: SparkSession, warehouse: str, cfg: CrawlConfig,
-                 *, use_bloom: bool = True, use_salting: bool = True,
-                 encode_urls: bool = True, per_round_cap: int | None = None,
+                 *, use_bloom: bool = True,
+                 per_round_cap: int | None = None,
                  object_store_root=None,
                  conditional_fetch: bool = False,
-                 robots_round_seconds: float = 60.0,
                  use_authority: bool = False,
-                 authority_iterations: int = 3,
                  use_prefetch_dedup: bool = False,
                  cap_mode: str = "page"):
         if per_round_cap is not None and per_round_cap <= 0:
@@ -157,8 +154,6 @@ class CrawlDriver:
         self.spark = spark
         self.cfg = cfg
         self.use_bloom = use_bloom
-        self.use_salting = use_salting
-        self.encode_urls = encode_urls
         self.per_round_cap = per_round_cap
         # how the cap picks rows: "page" = global top-K (reference listing
         # parity), "fair" = largest-remainder per-host quotas (host_budget)
@@ -169,7 +164,6 @@ class CrawlDriver:
         # (frontier rows without the column — seeds, links — read as null
         # via mergeSchema and fetch unconditionally)
         self.conditional_fetch = conditional_fetch
-        self.robots_round_seconds = robots_round_seconds
         # pre-fetch content-identity dedup (operators/dedup.prefetch_dedup):
         # admitted rows whose (e_tag, size) matches an already-indexed row
         # (or an in-batch twin) copy content instead of issuing the GET —
@@ -200,7 +194,6 @@ class CrawlDriver:
         # hosts fill the budget — within-host order is unaffected since
         # authority is a host-level score)
         self.use_authority = use_authority
-        self.authority_iterations = authority_iterations
         self.link_edges = self.catalog.table("link_edges")
         self.authority = self.catalog.table("authority")
 
@@ -221,8 +214,7 @@ class CrawlDriver:
         column (pure JVM) instead of re-running the canonicalize UDF per
         round per DAG branch."""
         return self.frontier.append(
-            round_plan.prepare_frontier(frontier_df, self.cfg,
-                                        encode_urls=self.encode_urls),
+            round_plan.prepare_frontier(frontier_df, self.cfg),
             {"kind": "seed"})
 
     def install_robots(self, robots_bodies: DataFrame) -> int:
@@ -295,13 +287,15 @@ class CrawlDriver:
         legacy_rounds = sorted(r[0] for r in rows if r[1] is None)
         return ids, legacy_rounds
 
-    def _committed(self, table, snap_col: str) -> DataFrame | None:
-        """Committed rows of one sink: the ledgered snapshot deltas, plus a
-        legacy-compat path for rounds committed by a pre-snapshot-column
-        engine (ADVICE r2): those rounds fall back to the old
-        ``round <= last committed`` read over the cumulative table, so an
-        upgrade never makes previously committed rows invisible."""
-        ids, legacy_rounds = self._ledgered(snap_col)
+    def _committed(self, table, snap_col: str,
+                   after_round: int = -1) -> DataFrame | None:
+        """Committed rows of one sink from rounds > ``after_round``: the
+        ledgered snapshot deltas, plus a legacy-compat path for rounds
+        committed by a pre-snapshot-column engine (ADVICE r2): those rounds
+        fall back to the old ``round <= last committed`` read over the
+        cumulative table, so an upgrade never makes previously committed
+        rows invisible."""
+        ids, legacy_rounds = self._ledgered(snap_col, after_round=after_round)
         parts = []
         if ids:
             parts.append(table.read_deltas(ids))
@@ -330,30 +324,24 @@ class CrawlDriver:
         earlier cycles become re-admittable without deleting anything.
         Bloom blobs keep accumulating across cycles; harmless, because a
         bloom positive is always confirmed against this scoped exact set."""
-        ckpt_round = -1
-        parts: list[DataFrame] = []
+        out = self._committed(self.seen, "seen_snapshot",
+                              after_round=self._checkpoint_round())
         if self.seen_checkpoint.exists():
-            ckpt_round = int(self.seen_checkpoint.metadata()
-                             .get("through_round", -1))
-            parts.append(self.seen_checkpoint.read())
-        ids, legacy_rounds = self._ledgered("seen_snapshot",
-                                            after_round=ckpt_round)
-        if ids:
-            parts.append(self.seen.read_deltas(ids))
-        if legacy_rounds and self.seen.exists():
-            legacy = self.seen.read()
-            if "round" in legacy.columns:
-                legacy = legacy.filter(F.col("round").isin(legacy_rounds))
-            parts.append(legacy)
-        if not parts:
+            ckpt = self.seen_checkpoint.read()
+            out = ckpt if out is None else ckpt.unionByName(
+                out, allowMissingColumns=True)
+        if out is None:
             return self.spark.createDataFrame([], SEEN_SCHEMA)
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra, allowMissingColumns=True)
         if min_round > 0:
             out = out.filter(
                 F.coalesce(F.col("round"), F.lit(0)) >= min_round)
         return out
+
+    def _checkpoint_round(self) -> int:
+        """Last round the seen checkpoint folds in (-1: none)."""
+        if not self.seen_checkpoint.exists():
+            return -1
+        return int(self.seen_checkpoint.metadata().get("through_round", -1))
 
     def compact_seen(self) -> int:
         """Checkpoint the committed seen-set: fold every ledgered delta up
@@ -448,9 +436,7 @@ class CrawlDriver:
             robots_rules, robots_rules_bytes = self._robots_rules()
             host_budgets = robots_ops.merge_host_budgets(
                 host_budgets,
-                robots_ops.crawl_delay_budgets(
-                    robots_rules, cfg,
-                    round_seconds=self.robots_round_seconds))
+                robots_ops.crawl_delay_budgets(robots_rules, cfg))
 
         # conditional GETs only once cycle candidates carry the prior ETag
         # (legacy/seed-only frontiers lack the column → unconditional)
@@ -478,7 +464,6 @@ class CrawlDriver:
             blooms=blooms, host_budgets=host_budgets,
             robots_rules=robots_rules,
             robots_rules_bytes=robots_rules_bytes,
-            use_salting=self.use_salting, encode_urls=self.encode_urls,
             # O2: optional per-round admission cap (engine knob; None =
             # admit everything budgets allow, reference-outcome-equivalent)
             global_cap=self.per_round_cap,
@@ -705,12 +690,8 @@ class CrawlDriver:
                 ("seen_checkpoint", self.seen_checkpoint, ())):
             out[name] = table.expire_snapshots(keep_last=keep_last,
                                                protect_ids=protect)
-        ckpt_round = -1
-        if self.seen_checkpoint.exists():
-            ckpt_round = int(self.seen_checkpoint.metadata()
-                             .get("through_round", -1))
-        ids, legacy_rounds = self._ledgered("seen_snapshot",
-                                            after_round=ckpt_round)
+        ids, legacy_rounds = self._ledgered(
+            "seen_snapshot", after_round=self._checkpoint_round())
         if legacy_rounds:
             out["seen"] = {"expired": 0, "deleted_dirs": 0}
         else:
@@ -735,8 +716,7 @@ class CrawlDriver:
             return 0
         from fess_ds_s3_spark.operators.graph import host_authority
         edges = self.link_edges.read().select("src", "dst").distinct()
-        ranks = host_authority(edges,
-                               iterations=self.authority_iterations)
+        ranks = host_authority(edges)
         from pyspark.sql import Observation
         obs = Observation()
         ranks = ranks.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -936,8 +916,7 @@ class CrawlDriver:
             # (fetch_objects IfNoneMatch); null for added rows
             cand_cols.append(F.col("prev_etag"))
         cand_rows = round_plan.prepare_frontier(
-            cand.select(*cand_cols), self.cfg,
-            encode_urls=self.encode_urls,
+            cand.select(*cand_cols), self.cfg
         ).withColumn("round", F.lit(start_round))
         obs_c = Observation()
         cand_rows = cand_rows.observe(obs_c, F.count(F.lit(1)).alias("n"))

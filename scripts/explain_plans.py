@@ -1,7 +1,8 @@
 """Dump formatted physical plans for the headline queries and grep the
 scale-critical properties: parquet filter pushdown (PushedFilters), column
 pruning (ReadSchema), broadcast joins for small dims, whole-stage codegen
-spans, shuffles, reused exchanges and Python kernel passes.
+spans, shuffles, reused exchanges, Python kernel passes and all-pairs
+(nested-loop or cartesian) joins.
 Usage: PYTHONPATH=<checkout> python scripts/explain_plans.py [name...]
 """
 
@@ -48,11 +49,14 @@ def main():
         # one "(N) Name" details header per node: a shuffle is a plain
         # "Exchange"; a "ReusedExchange" re-reads one and is no shuffle
         nodes = Counter(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
+        # an all-pairs join: what the exact top-k must never fall back to
+        nested = nodes["BroadcastNestedLoopJoin"] + nodes["CartesianProduct"]
         print(f"--- summary: WholeStageCodegen spans={wsc}, "
               f"broadcasts={nodes['BroadcastExchange']}, "
               f"shuffles={nodes['Exchange']}, "
               f"reused={nodes['ReusedExchange']}, "
               f"mapinarrow={nodes['MapInArrow']}, "
+              f"nestedloop={nested}, "
               f"pushed={'PushedFilters: [' in plan}")
     spark.stop()
 
