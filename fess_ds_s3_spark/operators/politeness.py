@@ -24,6 +24,11 @@ so the salted survivors are always a superset — then a second window over
 the ≤ k×budget survivors restores the exact global top-``budget`` per host.
 Output is bit-identical to the unsalted version; only the shuffle shape
 changes (max task input for a hot host drops by ~k).
+
+This module is the one admission core: budget resolution
+(``_with_budget``), the per-host rank-and-cut (:func:`admit_per_host`) and
+the round cap (:func:`cap_round`) serve both the shuffle round
+(plans/round.py) and the host-bucketed round (plans/bucketed.py).
 """
 
 from __future__ import annotations
@@ -49,6 +54,24 @@ def rank_within_host(df: DataFrame,
     return df.withColumn(rank_col, F.row_number().over(window))
 
 
+def _with_budget(df: DataFrame, cfg: CrawlConfig,
+                 host_budgets: DataFrame | None,
+                 partition_by: str = "host"):
+    """Resolve each row's per-round budget: returns ``(df, budget)``, the
+    frame (with a ``budget_per_round`` column when ``host_budgets`` is
+    given) and the budget expression. Hosts absent from the dim fall back
+    to ``cfg.default_host_budget``. A host listed more than once keeps its
+    least budget — the least-of rule ``robots.merge_host_budgets`` applies —
+    so the broadcast join never fans a frontier row out."""
+    default = F.lit(cfg.default_host_budget)
+    if host_budgets is None:
+        return df, default
+    per_host = (host_budgets.groupBy(F.col("host").alias(partition_by))
+                .agg(F.min("budget_per_round").alias("budget_per_round")))
+    joined = df.join(F.broadcast(per_host), on=partition_by, how="left")
+    return joined, F.coalesce(F.col("budget_per_round"), default)
+
+
 def admit_per_host(
     df: DataFrame,
     cfg: CrawlConfig,
@@ -60,21 +83,22 @@ def admit_per_host(
 
     ``host_budgets``: optional small dim ``(host, budget_per_round)`` —
     broadcast-joined; hosts not present fall back to
-    ``cfg.default_host_budget``. Returns the admitted rows with a
-    ``host_rank`` column (the within-host admission sequence).
+    ``cfg.default_host_budget``, a repeated host keeps its least budget.
+    Returns the admitted rows with a ``host_rank`` column (the within-host
+    admission sequence).
     """
-    ranked = rank_within_host(df, partition_by, rank_by)
-    if host_budgets is not None:
-        ranked = ranked.join(
-            F.broadcast(host_budgets.select(
-                F.col("host").alias(partition_by),
-                F.col("budget_per_round"))),
-            on=partition_by, how="left")
-        budget = F.coalesce(F.col("budget_per_round"),
-                            F.lit(cfg.default_host_budget))
-        return (ranked.filter(F.col("host_rank") <= budget)
-                .drop("budget_per_round"))
-    return ranked.filter(F.col("host_rank") <= cfg.default_host_budget)
+    budgeted, budget = _with_budget(df, cfg, host_budgets, partition_by)
+    ranked = rank_within_host(budgeted, partition_by, rank_by)
+    admitted = ranked.filter(F.col("host_rank") <= budget)
+    if host_budgets is None:
+        return admitted
+    return admitted.drop("budget_per_round")
+
+
+def find_hot_hosts(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Hosts with more than ``cfg.salt_threshold`` rows in ``df``."""
+    return (df.groupBy("host").count()
+            .filter(F.col("count") > cfg.salt_threshold).select("host"))
 
 
 def admit_per_host_salted(
@@ -96,50 +120,56 @@ def admit_per_host_salted(
       pass 1 — window over (host, salt): keep rank ≤ budget within each salt.
                This upper-bounds survivors at k × budget per host but cuts
                the max task input for a hot host by ~k.
-      pass 2 — window over (host) on the ≤ k×budget survivors: exact global
-               top-budget per host. Cheap because pass 1 already shrank the
-               data to scheduler-output scale.
+      pass 2 — :func:`admit_per_host` on the ≤ k×budget survivors: exact
+               global top-budget per host. Cheap because pass 1 already
+               shrank the data to scheduler-output scale.
     """
-    k = cfg.salt_buckets
-    if hot_hosts is None:
-        hot_hosts = (df.groupBy("host").count()
-                     .filter(F.col("count") > cfg.salt_threshold)
-                     .select("host"))
+    hot = find_hot_hosts(df, cfg) if hot_hosts is None else hot_hosts
     flagged = df.join(
-        F.broadcast(hot_hosts.select("host").withColumn("_hot", F.lit(True))),
+        F.broadcast(hot.select("host").withColumn("_hot", F.lit(True))),
         on="host", how="left")
     salted = flagged.withColumn(
         "_salt",
         F.when(F.col("_hot").isNotNull(),
-               F.pmod(F.xxhash64("url"), F.lit(k)).cast("int"))
+               F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)).cast("int"))
         .otherwise(F.lit(0)))
-
-    if host_budgets is not None:
-        salted = salted.join(
-            F.broadcast(host_budgets.select("host", "budget_per_round")),
-            on="host", how="left")
-        budget = F.coalesce(F.col("budget_per_round"),
-                            F.lit(cfg.default_host_budget))
-    else:
-        budget = F.lit(cfg.default_host_budget)
+    salted, budget = _with_budget(salted, cfg, host_budgets)
 
     # Pass 1: per-(host, salt) pre-rank; each salt keeps the full budget so
     # pass 2 always sees a superset of the true per-host top-budget.
-    pre_window = (Window.partitionBy("host", "_salt")
-                  .orderBy(*[F.col(c).asc() for c in rank_by]))
-    survivors = (salted
-                 .withColumn("_pre_rank", F.row_number().over(pre_window))
+    survivors = (rank_within_host(salted, ("host", "_salt"), rank_by,
+                                  rank_col="_pre_rank")
                  .filter(F.col("_pre_rank") <= budget))
+    # Pass 2: exact per-host rank and cut over the shrunken survivor set.
+    return admit_per_host(
+        survivors.drop("_hot", "_salt", "_pre_rank", "budget_per_round"),
+        cfg, host_budgets=host_budgets, rank_by=rank_by)
 
-    # Pass 2: exact per-host rank over the shrunken survivor set.
-    final_window = (Window.partitionBy("host")
-                    .orderBy(*[F.col(c).asc() for c in rank_by]))
-    admitted = (survivors
-                .withColumn("host_rank", F.row_number().over(final_window))
-                .filter(F.col("host_rank") <= budget))
-    drop = [c for c in ("_hot", "_salt", "_pre_rank", "budget_per_round")
-            if c in admitted.columns]
-    return admitted.drop(*drop)
+
+def cap_round(admitted: DataFrame, global_cap: int | None,
+              cap_mode: str = "page",
+              rank_by: Sequence[str] = DEFAULT_RANK_COLS) -> DataFrame:
+    """Apply the per-round admission cap to an admitted batch (a no-op when
+    ``global_cap`` is None).
+
+    - ``"page"``: global top-``global_cap`` by ``rank_by`` — a distributed
+      top-K (TakeOrderedAndProject), never a full global sort.
+    - ``"fair"``: each host keeps its ``host_rank ≤ quota`` prefix, the
+      quotas apportioned by :func:`host_budget` over the admitted backlog.
+    """
+    if cap_mode not in ("page", "fair"):
+        raise ValueError("cap_mode must be 'page' or 'fair'")
+    if global_cap is None:
+        return admitted
+    if cap_mode == "page":
+        return (admitted.orderBy(*[F.col(c).asc() for c in rank_by])
+                .limit(global_cap))
+    backlog = (admitted.groupBy("host")
+               .agg(F.count(F.lit(1)).alias("pending")))
+    quotas = host_budget(backlog, global_cap).select("host", "quota")
+    return (admitted.join(F.broadcast(quotas), "host")
+            .filter(F.col("host_rank") <= F.col("quota"))
+            .drop("quota"))
 
 
 def reference_order_admission(df: DataFrame, max_keys: int) -> DataFrame:

@@ -35,23 +35,15 @@ partitioning (Spark bucketed tables):
 
 Semantics are identical to ``plans.round.schedule`` (same dedup winner —
 the rank order ends with the unique ``url`` tie-break — same unseen set,
-same admission ranks); equality is test-pinned.
+same admission ranks); equality is test-pinned. Budget resolution, the
+per-host rank-and-cut and the round cap are the shared admission core in
+``operators/politeness.py``; this module differs from the shuffle round
+only in input layout.
 
-Trade-offs vs the shuffle path, by design:
-
-- **Skew**: a bucket is one task, so a single pathological host bigger than
-  a bucket-worth of memory wants the salted shuffle path
-  (``politeness.admit_per_host_salted``). Use bucketed mode when per-host
-  frontier mass is bounded (object-store crawls: host = bucket endpoint);
-  the standard round remains the fallback for adversarial web skew.
-- **Catalog**: bucketing metadata lives in the session catalog. A restarted
-  session re-attaches with :func:`register_frontier_table` (pure DDL over
-  the existing files — the files themselves carry the bucket ids in their
-  names). In production the same layout is an Iceberg ``bucket(n, host)``
-  partition transform; sources/snapshots.py documents the swap.
-- **File growth**: each ingest appends one file per bucket it touches;
-  :func:`compact_frontier_bucketed` rewrites the table to one row per
-  canonical URL (keeping a single committed marker for seen URLs).
+Skew precondition: a bucket is one task, so every host must fit one bucket
+task. A host larger than that belongs on the salted shuffle round
+(``plans.round.schedule``, ``politeness.admit_per_host_salted``), which is
+the round ``CrawlDriver`` runs.
 
 Reference parity note: the reference has no frontier table at all — its
 "frontier" is the in-flight S3 listing page (AmazonS3Client.java:137-148).
@@ -60,15 +52,12 @@ This module is a north-rule addition (10^10-URL frontier scale).
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.operators import politeness
 from fess_ds_s3_spark.plans.round import prepare_frontier
-from fess_ds_s3_spark.plans.round import schedule as round_plan_schedule
 
 #: canonical column set of a bucketed frontier table, with Spark SQL types.
 #: ``committed = true`` rows are URL-seen markers (only host/canonical_url
@@ -125,10 +114,9 @@ def mark_committed(admitted: DataFrame, *, table: str, path: str,
     """Append URL-seen markers (``committed = true``) for an admitted batch.
 
     The marker carries only (host, canonical_url); scheduling treats any
-    group containing a marker as seen. The pending rows it supersedes stay
-    until :func:`compact_frontier_bucketed` rewrites them away — exactly the
-    seen-delta append the snapshot ledger does, but colocated with the
-    frontier so the probe costs no join.
+    group containing a marker as seen, and the pending rows it supersedes
+    stay in the table — exactly the seen-delta append the snapshot ledger
+    does, but colocated with the frontier so the probe costs no join.
     """
     markers = _conform(
         admitted.select("host", "canonical_url",
@@ -139,23 +127,6 @@ def mark_committed(admitted: DataFrame, *, table: str, path: str,
      .bucketBy(n_buckets, "host")
      .option("path", path)
      .saveAsTable(table))
-
-
-def register_frontier_table(spark: SparkSession, table: str, path: str,
-                            n_buckets: int) -> None:
-    """Re-attach an existing bucketed frontier directory after a session
-    restart (the in-memory catalog forgets; the FILES don't — Spark bucket
-    ids ride the file names). Pure DDL, no data movement.
-
-    Only register directories written by :func:`ingest_frontier` /
-    :func:`mark_committed`: declaring a non-bucketed directory bucketed
-    would silently mis-schedule.
-    """
-    cols = ", ".join(f"{n} {t}" for n, t in FRONTIER_TABLE_COLUMNS)
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING PARQUET "
-        f"CLUSTERED BY (host) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'")
 
 
 def schedule_bucketed(frontier: DataFrame, cfg: CrawlConfig, *,
@@ -188,155 +159,4 @@ def schedule_bucketed(frontier: DataFrame, cfg: CrawlConfig, *,
     admitted = politeness.admit_per_host(deduped, cfg,
                                          host_budgets=host_budgets,
                                          rank_by=rank_by)
-    if global_cap is not None:
-        rank = [F.col(c).asc() for c in rank_by]
-        admitted = admitted.orderBy(*rank).limit(global_cap)
-    return admitted
-
-
-def crawl_rounds_bucketed(spark: SparkSession, *, table: str, path: str,
-                          n_buckets: int, cfg: CrawlConfig, n_rounds: int,
-                          log_path: str,
-                          host_budgets: DataFrame | None = None,
-                          rank_by=politeness.DEFAULT_RANK_COLS,
-                          global_cap: int | None = None) -> DataFrame:
-    """Multi-round crawl loop over the bucketed frontier: each round admits
-    (exchange-free), appends the admitted batch to a parquet admissions log,
-    and derives the committed markers FROM the materialized log — the log
-    write is the commit point, so markers can never disagree with what was
-    recorded, and a crash between the two writes re-admits (idempotent: a
-    second marker append for the same URLs is dedup-absorbed).
-
-    Returns the admissions log DataFrame with a ``round`` column. Multiround
-    equivalence with the shuffle path's seen-set accumulation is pinned in
-    tests/test_bucketed.py. The budget-bounded admitted batch is the only
-    per-round materialization; the frontier itself is never shuffled.
-    """
-    for r in range(n_rounds):
-        adm = schedule_bucketed(spark.table(table), cfg,
-                                host_budgets=host_budgets, rank_by=rank_by,
-                                global_cap=global_cap)
-        (adm.withColumn("round", F.lit(r).cast("int"))
-         .write.mode("append").parquet(log_path))
-        committed = (spark.read.parquet(log_path)
-                     .filter(F.col("round") == r)
-                     .select("host", "canonical_url"))
-        mark_committed(committed, table=table, path=path,
-                       n_buckets=n_buckets)
-    return spark.read.parquet(log_path)
-
-
-class FrontierStats(NamedTuple):
-    """Planner statistics over a bucketed frontier's PENDING rows."""
-    pending_rows: int
-    n_hosts: int
-    max_host_rows: int
-
-
-#: Above this many pending rows on a single host, a bucket task's window
-#: sort over that host becomes the round's straggler (one bucket = one
-#: task), so the salted shuffle path — which spreads a hot host across
-#: ``salt_buckets`` tasks — wins despite its two exchanges.
-DEFAULT_SKEW_THRESHOLD_ROWS = 5_000_000
-
-
-def frontier_stats(frontier: DataFrame) -> FrontierStats:
-    """One tiny planner-statistics job over the bucketed scan: per-host
-    pending counts aggregate WITHOUT an exchange (the scan's
-    ``HashPartitioning(host)`` satisfies the groupBy), and only the
-    O(n_hosts) count rows collapse to the driver. This is the runtime
-    statistic AQE would gather at the first exchange — the bucketed plan
-    has no exchange, so we gather it explicitly (callers cache it across
-    rounds via ``schedule_auto(stats=...)``; admission only shrinks hosts,
-    so a stale max is an upper bound and the decision stays safe)."""
-    per_host = (frontier.filter(~F.col("committed"))
-                .groupBy("host").count())
-    row = per_host.agg(
-        F.coalesce(F.sum("count"), F.lit(0)).alias("pending_rows"),
-        F.count("*").alias("n_hosts"),
-        F.coalesce(F.max("count"), F.lit(0)).alias("max_host_rows")
-    ).collect()[0]
-    return FrontierStats(int(row.pending_rows), int(row.n_hosts),
-                         int(row.max_host_rows))
-
-
-class AutoSchedule(NamedTuple):
-    admitted: DataFrame
-    path: str          # "bucketed" | "shuffle_salted"
-    stats: FrontierStats
-
-
-def schedule_auto(spark: SparkSession, table: str, cfg: CrawlConfig, *,
-                  host_budgets: DataFrame | None = None,
-                  global_cap: int | None = None,
-                  skew_threshold_rows: int = DEFAULT_SKEW_THRESHOLD_ROWS,
-                  stats: FrontierStats | None = None) -> AutoSchedule:
-    """Skew-aware path picker: schedule off the bucketed table
-    exchange-free when every host fits a single bucket task, else fall
-    back to the salted shuffle round (``plans.round.schedule``) which
-    spreads hot hosts across ``cfg.salt_buckets`` tasks.
-
-    Both paths admit the IDENTICAL batch (test-pinned): the shuffle
-    fallback feeds the table's pending rows and committed markers into
-    the standard round, whose dedup winner / unseen set / admission
-    ranks match ``schedule_bucketed`` by construction (same rank order,
-    ``url`` tie-break). Ranking is the default
-    ``politeness.DEFAULT_RANK_COLS`` on both paths.
-
-    The decision costs one :func:`frontier_stats` job unless the caller
-    passes a cached ``stats`` (markers only ever shrink pending counts,
-    so reusing a previous round's stats is a safe upper bound).
-    """
-    if stats is None:
-        stats = frontier_stats(spark.table(table))
-    out_cols = [n for n, _ in FRONTIER_TABLE_COLUMNS
-                if n != "committed"] + ["host_rank"]
-    if stats.max_host_rows > skew_threshold_rows:
-        t = spark.table(table)
-        pending = t.filter(~F.col("committed")).drop("committed")
-        seen = t.filter(F.col("committed")).select("canonical_url")
-        admitted = round_plan_schedule(
-            pending, cfg, seen_exact=seen, host_budgets=host_budgets,
-            use_salting=True, narrow=False, global_cap=global_cap)
-        return AutoSchedule(admitted.select(*out_cols), "shuffle_salted",
-                            stats)
-    admitted = schedule_bucketed(spark.table(table), cfg,
-                                 host_budgets=host_budgets,
-                                 global_cap=global_cap)
-    return AutoSchedule(admitted.select(*out_cols), "bucketed", stats)
-
-
-def compact_frontier_bucketed(spark: SparkSession, src_table: str, *,
-                              dst_table: str, dst_path: str,
-                              n_buckets: int,
-                              rank_by=politeness.DEFAULT_RANK_COLS) -> None:
-    """Rewrite the frontier to one row per canonical URL: seen URLs keep a
-    single committed marker, unseen URLs keep their dedup-winner pending
-    row. Reads shuffle-free off the bucketing; each read task holds exactly
-    one bucket, so the bucketed write needs no repartition either.
-
-    Writes to a NEW table/path (Spark cannot overwrite a path it is
-    reading); the caller swaps names — production would wrap the swap in
-    the snapshot ledger's atomic manifest replace (sources/snapshots.py).
-    """
-    t = spark.table(src_table)
-    order = [F.col("committed").asc()] + [F.col(c).asc() for c in rank_by]
-    w_rank = Window.partitionBy("host", "canonical_url").orderBy(*order)
-    w_full = w_rank.rowsBetween(Window.unboundedPreceding,
-                                Window.unboundedFollowing)
-    flagged = (t.withColumn("_rn", F.row_number().over(w_rank))
-               .withColumn("_seen", F.max("committed").over(w_full)))
-    # seen group → its FIRST marker row (markers sort last, so the first
-    # marker is at rn = count(pending) + 1; identify it as the first row
-    # with committed = true via a rank among markers)
-    w_marker = Window.partitionBy("host", "canonical_url").orderBy(
-        F.col("committed").desc(), *[F.col(c).asc() for c in rank_by])
-    flagged = flagged.withColumn("_mrn", F.row_number().over(w_marker))
-    keep = flagged.filter(
-        (~F.col("_seen") & (F.col("_rn") == 1))
-        | (F.col("_seen") & F.col("committed") & (F.col("_mrn") == 1)))
-    (keep.drop("_rn", "_seen", "_mrn")
-     .write.mode("overwrite").format("parquet")
-     .bucketBy(n_buckets, "host")
-     .option("path", dst_path)
-     .saveAsTable(dst_table))
+    return politeness.cap_round(admitted, global_cap, "page", rank_by)

@@ -57,8 +57,7 @@ class RoundResult:
     seen_delta: DataFrame   # canonical_url + url_hash of every admitted URL
 
 
-def prepare_frontier(frontier: DataFrame, cfg: CrawlConfig, *,
-                     encode_urls: bool = True) -> DataFrame:
+def prepare_frontier(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """Attach url (if absent), canonical_url, host. Narrow, codegen-friendly."""
     df = bucket_filter(frontier, cfg)
     # Contract: a frontier with a non-void `url` column has it fully
@@ -70,7 +69,7 @@ def prepare_frontier(frontier: DataFrame, cfg: CrawlConfig, *,
     if "url" not in df.columns or dict(df.dtypes).get("url") == "void":
         df = (df.drop("url") if "url" in df.columns else df).withColumn(
             "url", build_object_url("bucket", "key", cfg.region,
-                                    cfg.endpoint, encode=encode_urls))
+                                    cfg.endpoint))
     # canonical_url is a property of the URL: the frontier stores it at
     # ingestion time (CrawlDriver.seed / link extraction), so per-round
     # scheduling is pure JVM. Computing it here per round would pay the
@@ -125,7 +124,6 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
              blooms: DataFrame | None = None,
              host_budgets: DataFrame | None = None,
              use_salting: bool = True,
-             encode_urls: bool = True,
              narrow: bool = True,
              global_cap: int | None = None,
              cap_mode: str = "page",
@@ -145,7 +143,8 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
     (priority, discovery_time, url) → Spark plans a distributed top-K
     (TakeOrderedAndProject), never a full global sort.
 
-    ``cap_mode`` picks HOW the cap selects its rows:
+    ``cap_mode`` picks HOW the cap selects its rows
+    (``politeness.cap_round``):
 
     - ``"page"`` (default, reference-parity): global top-``global_cap``
       by (priority, discovery_time, url) — one whale host full of
@@ -159,9 +158,7 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
       one small per-host aggregate over the admitted batch plus a
       broadcast join of the quota table.
     """
-    if cap_mode not in ("page", "fair"):
-        raise ValueError("cap_mode must be 'page' or 'fair'")
-    df = prepare_frontier(frontier, cfg, encode_urls=encode_urls)
+    df = prepare_frontier(frontier, cfg)
     if narrow:
         keep = [c for c in df.columns
                 if c in SCHEDULE_COLS or c == "round"]
@@ -185,31 +182,16 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
         # superset of the truly-hot hosts — salting a non-hot host is
         # correctness-neutral. Computing it downstream instead would
         # re-execute the UDF+dedup subtree (pruning changes the exchange
-        # schema, defeating ReuseExchange).
-        hot = (frontier.groupBy("host").count()
-               .filter(F.col("count") > cfg.salt_threshold).select("host")
-               if "host" in frontier.columns else
-               df.groupBy("host").count()
-               .filter(F.col("count") > cfg.salt_threshold).select("host"))
+        # schema, defeating ReuseExchange). A frontier without a host
+        # column leaves the count to admit_per_host_salted.
+        hot = (politeness.find_hot_hosts(frontier, cfg)
+               if "host" in frontier.columns else None)
         admitted = politeness.admit_per_host_salted(
             df, cfg, host_budgets=host_budgets, hot_hosts=hot)
     else:
         admitted = politeness.admit_per_host(df, cfg,
                                              host_budgets=host_budgets)
-    if global_cap is not None:
-        if cap_mode == "fair":
-            backlog = (admitted.groupBy("host")
-                       .agg(F.count(F.lit(1)).alias("pending")))
-            quotas = politeness.host_budget(backlog, global_cap) \
-                .select("host", "quota")
-            admitted = (admitted
-                        .join(F.broadcast(quotas), "host")
-                        .filter(F.col("host_rank") <= F.col("quota"))
-                        .drop("quota"))
-        else:
-            rank = [F.col(c).asc() for c in politeness.DEFAULT_RANK_COLS]
-            admitted = admitted.orderBy(*rank).limit(global_cap)
-    return admitted
+    return politeness.cap_round(admitted, global_cap, cap_mode)
 
 
 def process(admitted: DataFrame, cfg: CrawlConfig,
@@ -218,7 +200,6 @@ def process(admitted: DataFrame, cfg: CrawlConfig,
             robots_rules_bytes: int | None = None,
             object_store_root=None,
             if_none_match_col: str | None = None,
-            encode_urls: bool = True,
             prefetch_known: DataFrame | None = None) -> DataFrame:
     """Processing half: filter chain + fetch + extract + project. Returns
     the wide documents rows with status routing columns.
@@ -397,7 +378,7 @@ def process(admitted: DataFrame, cfg: CrawlConfig,
                           F.when(F.col("status") == "pending",
                                  F.lit(STATUS_STORED))
                           .otherwise(F.col("status"))))
-    return build_object_map(df, cfg, encode_urls=encode_urls)
+    return build_object_map(df, cfg)
 
 
 def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
@@ -409,8 +390,6 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
               robots_rules_bytes: int | None = None,
               object_store_root=None,
               if_none_match_col: str | None = None,
-              use_salting: bool = True,
-              encode_urls: bool = True,
               global_cap: int | None = None,
               cap_mode: str = "page",
               bloom_size_bytes: int | None = None,
@@ -420,8 +399,7 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
     each of the three sink writes + the seen delta."""
     admitted = schedule(
         frontier, cfg, seen_exact=seen_exact, blooms=blooms,
-        host_budgets=host_budgets, use_salting=use_salting,
-        encode_urls=encode_urls, narrow=True, global_cap=global_cap,
+        host_budgets=host_budgets, narrow=True, global_cap=global_cap,
         cap_mode=cap_mode, bloom_size_bytes=bloom_size_bytes)
     # late materialization: join the wide frontier columns back onto the
     # (budget-bounded, small) admitted batch only. One row per url on the
@@ -431,7 +409,7 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
                  if c not in admitted.columns and c not in ("url", "host",
                                                             "canonical_url")]
     if wide_cols:
-        prepared = prepare_frontier(frontier, cfg, encode_urls=encode_urls)
+        prepared = prepare_frontier(frontier, cfg)
         # Prune the frontier to the admitted URL set BEFORE the per-url
         # winner aggregation: the admitted batch is budget-bounded (small),
         # so a broadcast left-semi join keeps the wide-column aggregate from
@@ -451,7 +429,6 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
                         robots_rules_bytes=robots_rules_bytes,
                         object_store_root=object_store_root,
                         if_none_match_col=if_none_match_col,
-                        encode_urls=encode_urls,
                         prefetch_known=prefetch_known)
     return RoundResult(
         admitted=admitted,

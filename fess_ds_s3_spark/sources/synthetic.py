@@ -75,11 +75,6 @@ DOCS_SCHEMA = StructType([
 # Tier 1: reference-exact fixture (LocalAmazonS3 analog)
 # ---------------------------------------------------------------------------
 
-def reference_buckets(spark: SparkSession) -> DataFrame:
-    rows = [("fess-0", FIXTURE_EPOCH), ("fess-1", FIXTURE_EPOCH)]
-    return spark.createDataFrame(rows, "name string, creation_date timestamp")
-
-
 def reference_frontier(spark: SparkSession) -> DataFrame:
     """2 buckets × 2 objects, ascending binary key order per bucket.
 

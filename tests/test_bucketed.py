@@ -1,12 +1,12 @@
 """Host-bucketed frontier (plans/bucketed.py): exchange-free scheduling.
 
-Pins the three claims the module makes:
-- output equality with the shuffle path (plans.round.schedule) — same dedup
-  winners, same unseen set, same admission ranks;
+Pins the claims the module makes:
+- output equality with the shuffle path (plans.round.schedule), salted and
+  unsalted — same dedup winners, same unseen set, same admission ranks;
 - the executed scheduling plan contains ZERO Exchange nodes (the whole
   point: per-round network cost is storage-partitioning, paid at ingest);
-- durability of the layout: appends keep the bucketing, compaction keeps
-  the schedule, DDL re-registration after a catalog wipe keeps both.
+- appends keep the bucketing, and an admit → mark_committed loop over the
+  table equals the shuffle round with a growing seen set.
 """
 
 from __future__ import annotations
@@ -70,12 +70,13 @@ class TestScheduleBucketed:
         assert plan.count("Exchange") == 0, plan
         assert "Bucketed: true" in plan
 
-    def test_equals_shuffle_path(self, spark, cfg, table):
+    @pytest.mark.parametrize("use_salting", [False, True])
+    def test_equals_shuffle_path(self, spark, cfg, table, use_salting):
         adm = B.schedule_bucketed(spark.table(table["name"]), cfg)
         ref = round_plan.schedule(
             table["df"], cfg,
             seen_exact=table["seen"].select("canonical_url"),
-            use_salting=False, narrow=False)
+            use_salting=use_salting, narrow=False)
         assert _admissions(adm) == _admissions(ref)
 
     def test_seen_groups_are_filtered(self, spark, cfg, table):
@@ -97,38 +98,6 @@ class TestScheduleBucketed:
         assert all(r.host_rank <= bmap[r.host] for r in rows)
 
 
-class TestScheduleAuto:
-    def test_stats_match_manual_counts(self, spark, cfg, table):
-        stats = B.frontier_stats(spark.table(table["name"]))
-        pend = spark.table(table["name"]).filter(~F.col("committed"))
-        per_host = {r.host: r["count"] for r in
-                    pend.groupBy("host").count().collect()}
-        assert stats.pending_rows == sum(per_host.values())
-        assert stats.n_hosts == len(per_host)
-        assert stats.max_host_rows == max(per_host.values())
-
-    def test_stats_job_is_narrow(self, spark, cfg, table):
-        """The per-host count aggregates exchange-free off the bucketing;
-        only the O(n_hosts) count rows cross a (single-partition)
-        exchange."""
-        per_host = (spark.table(table["name"])
-                    .filter(~F.col("committed")).groupBy("host").count()
-                    .agg(F.sum("count"), F.count("*"), F.max("count")))
-        plan = per_host._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") <= 1, plan
-
-    def test_paths_pick_and_agree(self, spark, cfg, table):
-        low = B.schedule_auto(spark, table["name"], cfg,
-                              skew_threshold_rows=0)
-        high = B.schedule_auto(spark, table["name"], cfg,
-                               skew_threshold_rows=10**9,
-                               stats=low.stats)
-        assert low.path == "shuffle_salted"
-        assert high.path == "bucketed"
-        assert low.admitted.columns == high.admitted.columns
-        assert _admissions(low.admitted) == _admissions(high.admitted)
-
-
 class TestLayoutDurability:
     def test_append_preserves_bucketing(self, spark, cfg, table):
         extra = _frontier(spark, n=1000, hosts=23).withColumn(
@@ -141,24 +110,6 @@ class TestLayoutDurability:
         # late keys are now schedulable
         assert adm.filter(F.col("url").contains("/late/")).count() > 0
 
-    def test_compact_then_schedule_is_stable(self, spark, cfg, table,
-                                             tmp_path):
-        before = B.schedule_bucketed(spark.table(table["name"]), cfg)
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_frontier_c")
-        B.compact_frontier_bucketed(
-            spark, table["name"], dst_table="t_bucketed_frontier_c",
-            dst_path=str(tmp_path / "compacted"), n_buckets=N_BUCKETS)
-        compacted = spark.table("t_bucketed_frontier_c")
-        after = B.schedule_bucketed(compacted, cfg)
-        assert _admissions(after) == _admissions(before)
-        # one row per canonical URL survives
-        assert (compacted.groupBy("canonical_url").count()
-                .filter(F.col("count") > 1).count()) == 0
-        # seen URLs keep exactly their marker
-        assert (compacted.filter(F.col("committed"))
-                .join(table["seen"], on=["host", "canonical_url"],
-                      how="left_anti").count()) == 0
-
     def test_multiround_equals_shuffle_loop(self, spark, cfg, tmp_path):
         """3 bucketed admit→commit rounds ≡ the shuffle path with manual
         seen-set accumulation: same (round, url, host_rank) everywhere."""
@@ -168,11 +119,16 @@ class TestLayoutDurability:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         B.ingest_frontier(df, small, table=name, path=path,
                           n_buckets=N_BUCKETS, mode="overwrite")
-        log = B.crawl_rounds_bucketed(
-            spark, table=name, path=path, n_buckets=N_BUCKETS, cfg=small,
-            n_rounds=3, log_path=str(tmp_path / "mr_log"))
-        got = {(r.round, r.url, r.host_rank)
-               for r in log.select("round", "url", "host_rank").collect()}
+        got = set()
+        for rnd in range(3):
+            # materialize the batch before its markers change the table
+            rows = B.schedule_bucketed(spark.table(name), small).collect()
+            got |= {(rnd, r.url, r.host_rank) for r in rows}
+            batch = spark.createDataFrame(
+                [(r.host, r.canonical_url) for r in rows],
+                "host string, canonical_url string")
+            B.mark_committed(batch, table=name, path=path,
+                             n_buckets=N_BUCKETS)
 
         seen = None
         want = set()
@@ -187,14 +143,3 @@ class TestLayoutDurability:
         # every admitted URL exactly once across rounds (seen-set works)
         urls = [u for (_, u, _) in got]
         assert len(urls) == len(set(urls))
-
-    def test_reregister_after_catalog_wipe(self, spark, cfg, table):
-        before = B.schedule_bucketed(spark.table(table["name"]), cfg)
-        want = _admissions(before)
-        spark.sql(f"DROP TABLE {table['name']}")  # files survive (external)
-        B.register_frontier_table(spark, table["name"], table["path"],
-                                  N_BUCKETS)
-        adm = B.schedule_bucketed(spark.table(table["name"]), cfg)
-        plan = adm._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0
-        assert _admissions(adm) == want

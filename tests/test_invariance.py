@@ -111,3 +111,27 @@ class TestBloomBranchPlanShape:
         out.collect()  # materialize THIS df's adaptive plan to its final form
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ReusedExchange" in plan, plan
+
+
+class TestAdmissionPlanShape:
+    def test_salted_admission_without_budgets(self, spark):
+        """The crawl round's admission (no host_budgets) is two windows —
+        the (host, salt) pre-rank and the per-host rank-and-cut — and one
+        broadcast join, the hot-host flag: sharing the admission core with
+        admit_per_host must not add a budgets join or a third window."""
+        import re
+        from fess_ds_s3_spark.operators import politeness
+        cfg = CrawlConfig(region="r", default_host_budget=3,
+                          salt_threshold=10, salt_buckets=4)
+        frontier = synthetic.synth_frontier(spark, 500, n_hosts=30,
+                                            n_buckets=5, seed=7)
+        out = politeness.admit_per_host_salted(frontier, cfg)
+        out.collect()  # materialize the adaptive plan to its final form
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        # the AQE string also prints the Initial Plan; count the final one
+        final = plan.split("== Final Plan ==")[1] \
+            .split("== Initial Plan ==")[0]
+        assert len(re.findall(r"\bWindow \[", final)) == 2, final
+        assert final.count("BroadcastHashJoin") == 1, final
+        assert len(re.findall(r"\w*Join\b", final)) == 1, final
+        assert "budget_per_round" not in final, final

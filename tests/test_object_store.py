@@ -262,8 +262,7 @@ class TestEndpointOverride:
         assert hosts == {"b1.minio.local"}
         from fess_ds_s3_spark.plans.round import prepare_frontier
         listing = list_objects_df(spark, st.root, cfg)
-        frontier = prepare_frontier(_frontier_from_listing(listing), cfg,
-                                    encode_urls=False)
+        frontier = prepare_frontier(_frontier_from_listing(listing), cfg)
         f_hosts = {r.host for r in frontier.select("host").collect()}
         assert hosts <= f_hosts
 

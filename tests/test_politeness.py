@@ -65,6 +65,22 @@ class TestAdmission:
         assert sorted(map(_key, plain.collect())) == \
             sorted(map(_key, salted.collect()))
 
+    def test_repeated_budget_host_keeps_least_budget(self, spark, cfg,
+                                                     frontier):
+        """A budget dim that lists a host twice resolves to its least
+        budget on both paths: no frontier row is fanned out by the join."""
+        hot = "host-00000.example.com"
+        budgets = spark.createDataFrame(
+            [(hot, 4), (hot, 2)], "host string, budget_per_round int")
+        plain = politeness.admit_per_host(
+            frontier, cfg, host_budgets=budgets).collect()
+        salted = politeness.admit_per_host_salted(
+            frontier, cfg, host_budgets=budgets).collect()
+        assert sorted(map(_key, plain)) == sorted(map(_key, salted))
+        urls = [r.url for r in plain]
+        assert len(urls) == len(set(urls))
+        assert sum(r.host == hot for r in plain) == 2
+
     def test_invariant_under_partitioning(self, spark, cfg):
         """Admission set identical for any input partitioning — the engine
         analog of pagination invariance (AmazonS3ClientTest.java:187-201)."""
