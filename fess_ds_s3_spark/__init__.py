@@ -13,18 +13,17 @@ Fess) as an idiomatic Spark engine:
 - ``plans``     — the per-round DataFrame pipeline and the multi-round crawl
                   driver loop with checkpoint/resume + lineage.
 - ``streaming`` — Structured Streaming (foreachBatch) variant of the round.
-- ``oracle``    — single-threaded pure-Python transcription of the reference
-                  crawl semantics (AmazonS3DataStore.storeData), used as the
-                  correctness oracle in tests.
+
+The single-threaded pure-Python transcription of the reference crawl
+semantics (AmazonS3DataStore.storeData), the correctness oracle, lives in
+``tests/oracle.py``.
 
 Everything row-level is DataFrame ops + Arrow-vectorized pandas UDFs — no
 per-row Python in the hot path.
 """
 
 from fess_ds_s3_spark.config import ConfigError, CrawlConfig
-from fess_ds_s3_spark.session import (build_session, open_client,
-                                      validate_client_params)
+from fess_ds_s3_spark.session import validate_client_params
 
-__all__ = ["CrawlConfig", "ConfigError", "build_session", "open_client",
-           "validate_client_params"]
+__all__ = ["CrawlConfig", "ConfigError", "validate_client_params"]
 __version__ = "0.4.4"

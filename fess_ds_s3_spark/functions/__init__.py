@@ -6,8 +6,6 @@ from fess_ds_s3_spark.functions.urls import (
     canonicalize_url,
     encode_uri_path,
     filename_from_key,
-    host_from_url,
-    url_hash64,
 )
 
 __all__ = [
@@ -16,6 +14,4 @@ __all__ = [
     "canonicalize_url",
     "encode_uri_path",
     "filename_from_key",
-    "host_from_url",
-    "url_hash64",
 ]

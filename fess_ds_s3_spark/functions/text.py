@@ -85,18 +85,6 @@ def stopword_ratio(text: Column | str,
         F.round(hits.cast("double") / tokens, 4))
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite quality heuristic in [0,1] (4 dp): rewards mid-length docs,
-    normal punctuation density, and presence of stopwords — the standard
-    cheap pre-filter before expensive model-based scoring."""
-    t = _col(text)
-    length_term = F.least(F.length(t).cast("double") / F.lit(500.0),
-                          F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(t) * 4, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(t) * 5, F.lit(1.0))
-    return F.round((length_term + punct_term + stop_term) / 3, 4)
-
-
 def lang_id(text: Column | str) -> Column:
     """Marker-word language heuristic: the language with the most marker
     hits wins; ties and no-hits → 'und'. Deterministic and SQL-expressible

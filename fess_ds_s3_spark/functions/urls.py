@@ -1,4 +1,4 @@
-"""URL construction, encoding, canonicalization, hashing.
+"""URL construction, encoding, canonicalization, resolution.
 
 Reference parity targets:
 
@@ -9,9 +9,10 @@ Reference parity targets:
   path (space → %20; golden tests pin AmazonS3DataStoreTest.java:126-129,288-293).
 - P2 management-URL constructor (``getManagementUrl``, :412-415).
 - P3 filename extraction (:300-301) — last path segment of the key.
-- P12 URL canonicalization + murmur3/xxhash64 hashing is absent in the
-  reference (S3 keys are already canonical); it is required by the engine's
-  URL-seen set, so it is implemented here as an Arrow-batched pandas UDF.
+- P12 URL canonicalization is absent in the reference (S3 keys are already
+  canonical); the engine's URL-seen set requires it, so it is implemented
+  here as an Arrow-batched pandas UDF. The seen-set hashes (murmur3 /
+  xxhash64) are JVM-side, in ``operators/seen.with_seen_keys``.
 
 All per-value Python (quote/canonicalize) runs inside pandas UDFs over Arrow
 batches — never row-at-a-time Spark Python UDFs.
@@ -59,13 +60,6 @@ def object_url_py(bucket: str, key: str, region: str,
         split = urlsplit(endpoint)
         return f"{split.scheme}://{bucket}.{split.netloc}/{encoded}"
     return f"https://{bucket}.s3.{region}.amazonaws.com/{encoded}"
-
-
-def management_url_py(bucket: str, key: str, region: str) -> str:
-    """P2: AWS console object URL (getManagementUrl, :412-415)."""
-    encoded = java_uri_encode_path(key)
-    return (f"https://s3.console.aws.amazon.com/s3/object/{bucket}/{encoded}"
-            f"?region={region}")
 
 
 def _remove_dot_segments(path: str) -> str:
@@ -165,22 +159,6 @@ def filename_from_key(key: Column | str) -> Column:
     """P3: last path segment (FilenameUtils.getName analog, :300-301)."""
     key = F.col(key) if isinstance(key, str) else key
     return F.element_at(F.split(key, "/"), -1)
-
-
-def host_from_url(url: Column | str) -> Column:
-    """Extract the authority host from a URL (politeness partition key)."""
-    url = F.col(url) if isinstance(url, str) else url
-    return F.lower(F.parse_url(url, F.lit("HOST")))
-
-
-def url_hash64(url: Column | str) -> Column:
-    """64-bit URL hash for the seen-set ledger (xxhash64, JVM-side).
-
-    The bloom filter additionally uses ``F.hash`` (Murmur3-32) as the second
-    independent hash for double-hashing bit positions.
-    """
-    url = F.col(url) if isinstance(url, str) else url
-    return F.xxhash64(url)
 
 
 # --------------------------------------------------------------------------

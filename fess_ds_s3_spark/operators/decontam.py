@@ -1,4 +1,4 @@
-"""Eval-set decontamination: flag/drop corpus documents that overlap a
+"""Eval-set decontamination: flag corpus documents that overlap a
 benchmark (eval) set on exact word n-grams.
 
 No reference analog (fess-ds-s3 indexes whatever it crawls); this is the
@@ -85,22 +85,6 @@ def flag_contaminated(docs: DataFrame, eval_df: DataFrame, *,
                         F.col("eval_ngram_hits") >= F.lit(min_hits)))
 
 
-def decontaminate(docs: DataFrame, eval_df: DataFrame, *,
-                  text: str = "text", id_col: str = "doc_id",
-                  eval_text: str = "text", n: int = DEFAULT_NGRAM,
-                  min_hits: int = 1, broadcast: bool = True) -> DataFrame:
-    """Drop contaminated documents: ``docs`` minus every row
-    :func:`flag_contaminated` marks (anti-join on ``id_col``; all input
-    columns preserved). The keep/drop rule is exact and deterministic, so
-    re-running the pass over a grown corpus never resurrects a dropped
-    document."""
-    flagged = flag_contaminated(
-        docs, eval_df, text=text, id_col=id_col, eval_text=eval_text,
-        n=n, min_hits=min_hits, broadcast=broadcast)
-    bad = flagged.filter(F.col("contaminated")).select(id_col)
-    return docs.join(bad, id_col, "left_anti")
-
-
 def eval_coverage(docs: DataFrame, eval_df: DataFrame, *,
                   text: str = "text", id_col: str = "doc_id",
                   eval_text: str = "text", eval_id: str = "doc_id",
@@ -117,8 +101,9 @@ def eval_coverage(docs: DataFrame, eval_df: DataFrame, *,
     ``grams_hit`` counts the eval item's DISTINCT n-grams found anywhere
     in the corpus; ``corpus_docs`` counts distinct corpus documents
     sharing at least one gram.  If the eval items are themselves corpus
-    members, they self-hit (run this AFTER :func:`decontaminate`, or on
-    the disjoint corpus, for the leakage-only view).
+    members, they self-hit (run this after dropping the documents
+    :func:`flag_contaminated` marks, or on the disjoint corpus, for the
+    leakage-only view).
 
     Shape at 100 TB: the corpus explodes its distinct gram fingerprints
     ONCE (same cost class as a MinHash pass) and probes the broadcast

@@ -122,14 +122,6 @@ def dedup_exact(df: DataFrame, text: str = "text",
                  F.count(F.lit(1)).alias("dup_count")))
 
 
-def dedup_exact_keep(df: DataFrame, text: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup returning the full surviving rows (window variant)."""
-    w = Window.partitionBy(fingerprint_md5(F.col(text))).orderBy(id_col)
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
-
-
 # ---------------------------------------------------------------------------
 # shingling (shared by MinHash / Jaccard)
 # ---------------------------------------------------------------------------
@@ -352,8 +344,7 @@ def ngram_jaccard_pairs(df: DataFrame, text: str = "text",
     them, so reported Jaccard is a lower bound — a df≫1 shingle carries ~0
     discriminating signal anyway. Default None = exact semantics (the
     oracle-checked configuration). Not silent: the cap is an explicit
-    parameter, and callers can measure what it drops via
-    ``hot_shingle_count(df, ...)``.
+    parameter.
     """
     sh = explode_shingle_hashes(df, text, id_col, n=n).distinct()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
@@ -421,17 +412,6 @@ def embedding_neardup_pairs(df: DataFrame, *, id_col: str = "vec_id",
     scored = cand.select(
         "a", "b", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"))
     return scored.filter(F.col("cos") >= threshold).select("a", "b")
-
-
-def hot_shingle_count(df: DataFrame, text: str = "text",
-                      id_col: str = "doc_id", *, n: int = 3,
-                      max_doc_freq: int = 100) -> int:
-    """How many distinct shingles exceed ``max_doc_freq`` — the 'no silent
-    caps' companion to ``ngram_jaccard_pairs(max_doc_freq=...)``; log this
-    next to the capped run."""
-    sh = explode_shingle_hashes(df, text, id_col, n=n).distinct()
-    return (sh.groupBy("shingle_hash").agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq).count())
 
 
 # ---------------------------------------------------------------------------

@@ -16,16 +16,16 @@ Nutch-CrawlDb "generate only what changed" model — public design):
   (added + modified, current-side metadata).
 - :func:`deletion_tombstones` keeps the keys whose documents must leave
   the index (the delete-marker analog: fess purges stale documents after
-  a crawl; here the tombstone set IS that purge list, applied to the
-  document sink as an anti-join).
+  a crawl; here the tombstone set IS that purge list, applied when
+  ``CrawlDriver.read_live_index`` resolves the current document set).
 
 Scale shape: one equi-join on the key columns — both listings shuffle on
-``(bucket, key)``, or neither does when the snapshots are stored bucketed
-by those keys (the same storage-partitioning trick plans/bucketed.py uses
-for hosts). No UDFs, no driver actions; classification is pure JVM column
-logic, so the changed-fraction filter pushes into the join output and a
-mostly-unchanged 10^9-object listing reduces to the small changed set
-before anything wide happens downstream.
+``(bucket, key)``, or neither does when the snapshots are stored
+``bucketBy`` those keys (the same storage-partitioning trick
+plans/bucketed.py uses for hosts). No UDFs, no driver actions;
+classification is pure JVM column logic, so the changed-fraction filter
+pushes into the join output and a mostly-unchanged 10^9-object listing
+reduces to the small changed set before anything wide happens downstream.
 """
 
 from __future__ import annotations
@@ -86,25 +86,6 @@ def listing_diff(current: DataFrame, previous: DataFrame, *,
     return j.select(*keys, change.alias("change"),
                     *[f"cur_{c}" for c in version_cols],
                     *[f"prev_{c}" for c in version_cols])
-
-
-def ingest_listing(df: DataFrame, *, table: str, path: str,
-                   n_buckets: int,
-                   key_cols: Sequence[str] = DEFAULT_KEY_COLS) -> None:
-    """Store a listing snapshot CLUSTERED BY the object key so
-    snapshot-to-snapshot diffs run with ZERO exchanges: two bucketed scans
-    report ``HashPartitioning(key_cols, n)`` and the full-outer
-    sort-merge join consumes them in place (the same storage-partitioning
-    trick plans/bucketed.py uses for hosts — at a 10^9-object listing the
-    diff's two shuffles ARE its cost, and this moves them to write time).
-    Write each snapshot to its own table/path (prev and current must
-    coexist); both must use the same ``n_buckets`` or Spark re-shuffles
-    one side."""
-    (df.repartition(n_buckets, *key_cols)
-     .write.mode("overwrite").format("parquet")
-     .bucketBy(n_buckets, *key_cols)
-     .option("path", path)
-     .saveAsTable(table))
 
 
 def recrawl_candidates(diff: DataFrame, *,
@@ -238,32 +219,13 @@ def update_schedule(schedule: DataFrame | None, diff: DataFrame,
                              max_interval)
 
 
-def due_for_recrawl(schedule: DataFrame, cycle: int) -> DataFrame:
-    """Keys whose re-crawl is due at ``cycle``: ``next_cycle <= cycle``.
-    A plain filter over the schedule table — pushes into the scan when the
-    schedule is stored as parquet, so an overwhelmingly not-due 10^9-key
-    schedule reads only the due fraction's row groups (min/max pruning on
-    ``next_cycle``)."""
-    return schedule.filter(F.col("next_cycle") <= F.lit(cycle))
-
-
 def deletion_tombstones(diff: DataFrame, *,
                         key_cols: Sequence[str] = DEFAULT_KEY_COLS,
                         ) -> DataFrame:
     """Keys whose documents must be purged from the document sink (object
-    gone from the store). Apply as ``indexed.join(tombstones, keys,
-    "left_anti")`` — the delete side of the reference's delete_marker
-    field (AmazonS3DataStore.java:117,322)."""
+    gone from the store) — the delete side of the reference's
+    delete_marker field (AmazonS3DataStore.java:117,322).
+    ``CrawlDriver.begin_incremental_cycle`` appends them to the
+    ``tombstones`` table, and ``read_live_index`` hides every indexed row
+    tombstoned after it was stored."""
     return diff.filter(F.col("change") == "deleted").select(*key_cols)
-
-
-def apply_tombstones(indexed: DataFrame, tombstones: DataFrame, *,
-                     key_cols: Sequence[str] = DEFAULT_KEY_COLS,
-                     ) -> DataFrame:
-    """Purge tombstoned documents from an indexed-document set: anti-join
-    on the object key. No forced broadcast — the deleted set is usually
-    tiny (AQE picks BroadcastHashJoin on its runtime size) but a bucket
-    wipe can make it huge, and an unconditional hint would then OOM the
-    driver (the same un-gated-broadcast trap the robots join avoids)."""
-    return indexed.join(tombstones.select(*key_cols).distinct(),
-                        on=list(key_cols), how="left_anti")

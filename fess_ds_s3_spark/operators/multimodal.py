@@ -173,16 +173,3 @@ def frame_sample_plan(df: DataFrame, *, fps_out: float = 1.0,
         "sample_points_ms",
         F.transform(F.sequence(F.lit(0), n_frames - 1),
                     lambda i: F.floor(i * step + step / 2).cast("long")))
-
-
-def extract_media_spans(docs: DataFrame) -> DataFrame:
-    """Flatten interleaved docs' media spans into a media work-list:
-    (doc_id, offset, media_ref) in span order — the input to fetch+decode."""
-    ordered = F.array_sort(
-        F.col("spans"),
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1).otherwise(0))
-    media = F.filter(ordered, lambda s: s["kind"] == F.lit("media"))
-    return (docs.select("doc_id", F.explode(media).alias("s"))
-            .select("doc_id", F.col("s.offset").alias("offset"),
-                    F.col("s.media_ref").alias("media_ref")))

@@ -145,15 +145,6 @@ def robots_allowed(rules: list[dict], agent: str, path: str) -> bool:
     return allowed
 
 
-def crawl_delay_of(rules: list[dict], agent: str) -> float | None:
-    agent = agent.lower()
-    for pick in (agent, "*"):
-        for r in rules:
-            if r["agent"] == pick and r["rule_kind"] == "delay":
-                return r["crawl_delay"]
-    return None
-
-
 # ---------------------------------------------------------------------------
 # DataFrame operators
 # ---------------------------------------------------------------------------

@@ -133,36 +133,42 @@ def build_bloom(df: DataFrame, cfg: CrawlConfig,
     return keyed.groupBy("part_id").applyInPandas(_build, BLOOM_SCHEMA)
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two bloom blob tables (same m/k) partition-wise.
+def _fold_blobs(part_id: int, rows) -> tuple[np.ndarray, int, int]:
+    """OR-fold one partition's bloom blob rows ``(bits, m_bits, k_hashes)``
+    into one bitset. Appended deltas and unioned tables leave several rows
+    per partition; dropping any would silently lose filter state and
+    re-admit seen URLs.
 
-    Raises if the rows being merged for one partition disagree on
-    ``m_bits`` OR ``k_hashes``: an OR of bitsets built with different hash
-    counts is NOT a bloom filter of their union — probing it with either k
-    yields false negatives, re-admitting previously-seen URLs (the exact
-    invariant the merge exists to protect)."""
-    def _merge(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        frames = [x for x in (left, right) if len(x)]
-        first = frames[0]
-        m0 = int(first["m_bits"].iloc[0])
-        k0 = int(first["k_hashes"].iloc[0])
-        bits = np.zeros(len(first["bits"].iloc[0]), dtype=np.uint8)
-        for frame in frames:
-            for blob, m, k in zip(frame["bits"], frame["m_bits"],
-                                  frame["k_hashes"]):
-                if int(m) != m0 or int(k) != k0:
-                    raise ValueError(
-                        f"bloom part {int(first['part_id'].iloc[0])}: blob "
-                        f"rows disagree on (m_bits, k_hashes): "
-                        f"({m0}, {k0}) vs ({int(m)}, {int(k)}) — "
-                        "cannot OR-merge filters with different parameters")
-                bits |= np.frombuffer(blob, dtype=np.uint8)
-        return pd.DataFrame({
-            "part_id": [int(first["part_id"].iloc[0])],
-            "bits": [bits.tobytes()],
-            "m_bits": [m0],
-            "k_hashes": [k0],
-        })
+    Raises if the rows disagree on ``m_bits`` OR ``k_hashes``: an OR of
+    bitsets built with different hash counts is NOT a bloom filter of
+    their union — probing it with either k yields false negatives."""
+    rows = iter(rows)
+    blob, m0, k0 = next(rows)
+    m0, k0 = int(m0), int(k0)
+    bits = np.frombuffer(blob, dtype=np.uint8)
+    for blob, m, k in rows:
+        more = np.frombuffer(blob, dtype=np.uint8)
+        if int(m) != m0 or int(k) != k0 or len(more) != len(bits):
+            raise ValueError(
+                f"bloom part {part_id}: blob rows disagree on "
+                f"(m_bits, k_hashes): ({m0}, {k0}) vs ({int(m)}, {int(k)}) "
+                "— cannot OR-merge filters with different parameters")
+        bits = bits | more
+    return bits, m0, k0
+
+
+def _blob_rows(frame: pd.DataFrame):
+    return zip(frame["bits"], frame["m_bits"], frame["k_hashes"])
+
+
+def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
+    """OR-merge two bloom blob tables (same m/k) partition-wise; raises on
+    an ``(m_bits, k_hashes)`` mismatch (see :func:`_fold_blobs`)."""
+    def _merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        pid = int(key[0])
+        bits, m, k = _fold_blobs(pid, [*_blob_rows(left), *_blob_rows(right)])
+        return pd.DataFrame({"part_id": [pid], "bits": [bits.tobytes()],
+                             "m_bits": [m], "k_hashes": [k]})
 
     return (a.groupBy("part_id").cogroup(b.groupBy("part_id"))
             .applyInPandas(_merge, BLOOM_SCHEMA))
@@ -183,24 +189,11 @@ def bloom_maybe_seen_broadcast(frontier: DataFrame, blobs: list,
     memory (a 10^8-URL seen-set at 1% fpp is ~120 MB — broadcastable).
     """
     spark = frontier.sparkSession
-    # OR-merge duplicate part_id rows (appended deltas / unioned tables):
-    # dropping any blob row would silently lose filter state and admit
-    # duplicates — a malformed table must still probe correctly.
-    blob_map: dict[int, tuple] = {}
+    by_part: dict[int, list] = {}
     for r in blobs:
-        pid = int(r["part_id"])
-        bits = np.frombuffer(r["bits"], dtype=np.uint8)
-        if pid in blob_map:
-            prev = blob_map[pid]
-            if (len(prev[0]) != len(bits)
-                    or prev[1] != int(r["m_bits"])
-                    or prev[2] != int(r["k_hashes"])):
-                raise ValueError(
-                    f"bloom part {pid}: blob rows disagree on "
-                    "(m_bits, k_hashes) — cannot OR-merge filters with "
-                    "different parameters")
-            bits = prev[0] | bits
-        blob_map[pid] = (bits, int(r["m_bits"]), int(r["k_hashes"]))
+        by_part.setdefault(int(r["part_id"]), []).append(
+            (r["bits"], r["m_bits"], r["k_hashes"]))
+    blob_map = {pid: _fold_blobs(pid, rows) for pid, rows in by_part.items()}
     bc = spark.sparkContext.broadcast(blob_map)
 
     @pandas_udf(BooleanType())
@@ -257,25 +250,14 @@ def bloom_maybe_seen(frontier: DataFrame, blooms: DataFrame, cfg: CrawlConfig,
         + [StructField(flag, BooleanType(), False)])
     carry = [c for c in keyed.columns if c not in ("h1", "h2")]
 
-    def _probe(_key, rows: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
+    def _probe(key, rows: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
         if not len(rows):
             return pd.DataFrame(columns=carry + [flag])
         if not len(blobs):
             out = rows[carry].copy()
             out[flag] = False
             return out
-        # OR-merge every blob row for this partition (see broadcast path)
-        m = int(blobs["m_bits"].iloc[0])
-        k = int(blobs["k_hashes"].iloc[0])
-        bits = np.frombuffer(blobs["bits"].iloc[0], dtype=np.uint8)
-        for idx in range(1, len(blobs)):
-            more = np.frombuffer(blobs["bits"].iloc[idx], dtype=np.uint8)
-            if (len(more) != len(bits) or int(blobs["m_bits"].iloc[idx]) != m
-                    or int(blobs["k_hashes"].iloc[idx]) != k):
-                raise ValueError(
-                    "bloom blob rows disagree on (m_bits, k_hashes) — "
-                    "cannot OR-merge filters with different parameters")
-            bits = bits | more
+        bits, m, k = _fold_blobs(int(key[0]), _blob_rows(blobs))
         pos = _positions(rows["h1"].to_numpy(np.int64),
                          rows["h2"].to_numpy(np.int64), k, m)
         out = rows[carry].copy()
@@ -335,6 +317,16 @@ def anti_join_seen_exact(frontier: DataFrame, seen: DataFrame,
         seen.select(F.col(url)).distinct(), on=url, how="left_anti")
 
 
+def _confirm_maybe_seen(flagged: DataFrame, seen_exact: DataFrame,
+                        url: str) -> DataFrame:
+    """Branch a pre-filter's ``maybe_seen`` flag: definitely-new rows pass,
+    maybe-seen rows are confirmed against the exact ledger, union."""
+    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    needs_confirm = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+    confirmed_new = anti_join_seen_exact(needs_confirm, seen_exact, url)
+    return definitely_new.unionByName(confirmed_new)
+
+
 def filter_unseen(frontier: DataFrame, seen_exact: DataFrame,
                   blooms: DataFrame | None, cfg: CrawlConfig,
                   url: str = "canonical_url",
@@ -354,12 +346,9 @@ def filter_unseen(frontier: DataFrame, seen_exact: DataFrame,
     """
     if blooms is None:
         return anti_join_seen_exact(frontier, seen_exact, url)
-    flagged = maybe_seen_auto(frontier, blooms, cfg, url,
-                              size_bytes=bloom_size_bytes)
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    needs_confirm = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = anti_join_seen_exact(needs_confirm, seen_exact, url)
-    return definitely_new.unionByName(confirmed_new)
+    return _confirm_maybe_seen(
+        maybe_seen_auto(frontier, blooms, cfg, url,
+                        size_bytes=bloom_size_bytes), seen_exact, url)
 
 
 def filter_unseen_cuckoo(frontier: DataFrame, seen_exact: DataFrame,
@@ -370,11 +359,8 @@ def filter_unseen_cuckoo(frontier: DataFrame, seen_exact: DataFrame,
     maybe-seen rows, union definite-new rows. Identical output to the
     exact anti-join — cuckoo filters, like blooms, have no false negatives
     (fingerprint+bucket of a stored key always probes positive)."""
-    flagged = cuckoo_maybe_seen(frontier, cuckoo_blobs, cfg, url)
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    needs_confirm = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = anti_join_seen_exact(needs_confirm, seen_exact, url)
-    return definitely_new.unionByName(confirmed_new)
+    return _confirm_maybe_seen(
+        cuckoo_maybe_seen(frontier, cuckoo_blobs, cfg, url), seen_exact, url)
 
 
 # ---------------------------------------------------------------------------
@@ -422,7 +408,7 @@ class _CuckooTable:
                 np.array([bucket]), np.array([cur], np.uint16), self.n)[0])
             if self._try_put(bucket, cur):
                 return True
-        return False  # table over-full; caller sizes tables to avoid this
+        return False  # over-full: the last kicked fingerprint is lost
 
     def delete(self, i1: int, fp: int) -> bool:
         i2 = int(_cuckoo_index2(np.array([i1]), np.array([fp], np.uint16),
@@ -448,22 +434,38 @@ def cuckoo_capacity(expected: int) -> int:
     return 1 << max(4, (need - 1).bit_length())
 
 
+def _cuckoo_index1(h1: np.ndarray, n: int) -> np.ndarray:
+    return np.mod(h1.astype(np.uint64), np.uint64(n)).astype(np.int64)
+
+
+def _cuckoo_full(part_id: int, n_buckets: int, expected: int) -> ValueError:
+    return ValueError(
+        f"cuckoo part {part_id}: insert failed after {_CUCKOO_MAX_KICKS} "
+        f"kicks in a table of {n_buckets} buckets — bloom_expected="
+        f"{expected} is too small for this partition's URLs (an over-full "
+        "table evicts a stored fingerprint, a false negative)")
+
+
 def build_cuckoo(df: DataFrame, cfg: CrawlConfig,
                  url: str = "canonical_url") -> DataFrame:
-    """Build per-partition cuckoo blobs (deletable seen-set)."""
+    """Build per-partition cuckoo blobs (deletable seen-set). Raises when
+    a partition's URLs overflow a table sized from ``bloom_expected``."""
     n_buckets = cuckoo_capacity(cfg.bloom_expected)
+    expected = cfg.bloom_expected
     keyed = with_seen_keys(df, cfg, url).select("part_id", "h1")
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pid = int(pdf["part_id"].iloc[0])
         table = np.zeros(n_buckets * _CUCKOO_SLOTS, dtype=np.uint16)
         ck = _CuckooTable(table, n_buckets)
         h1 = pdf["h1"].to_numpy(np.int64)
         fp = _cuckoo_fingerprint(h1)
-        i1 = np.mod(h1.astype(np.uint64), np.uint64(n_buckets)).astype(np.int64)
+        i1 = _cuckoo_index1(h1, n_buckets)
         for a, b in zip(i1.tolist(), fp.tolist()):
-            ck.insert(a, b)
+            if not ck.insert(a, b):
+                raise _cuckoo_full(pid, n_buckets, expected)
         return pd.DataFrame({
-            "part_id": [int(pdf["part_id"].iloc[0])],
+            "part_id": [pid],
             "table": [table.tobytes()],
             "n_buckets": [n_buckets],
         })
@@ -473,28 +475,41 @@ def build_cuckoo(df: DataFrame, cfg: CrawlConfig,
 
 def cuckoo_update(blobs: DataFrame, changes: DataFrame, cfg: CrawlConfig,
                   url: str = "canonical_url", op: str = "op") -> DataFrame:
-    """Apply ±deltas (op ∈ {'add','del'}) to cuckoo blobs, cogrouped."""
+    """Apply ±deltas (op ∈ {'add','del'}) to cuckoo blobs, cogrouped.
+
+    A partition may hold several blob rows (appended deltas, unioned
+    tables); the probe ORs over all of them, so every row is kept: adds go
+    into the first row, a delete removes the fingerprint from the first
+    row whose buckets hold it, and the other rows pass through unchanged.
+    Raises when an add overflows the first row's table."""
     keyed = with_seen_keys(changes, cfg, url).select("part_id", "h1", F.col(op))
     n_default = cuckoo_capacity(cfg.bloom_expected)
+    expected = cfg.bloom_expected
 
-    def _apply(_key, ops: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
+    def _apply(key, ops: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
+        pid = int(key[0])
         if len(blob):
-            n = int(blob["n_buckets"].iloc[0])
-            table = np.frombuffer(blob["table"].iloc[0], dtype=np.uint16).copy()
+            tables = [_CuckooTable(np.frombuffer(t, dtype=np.uint16).copy(),
+                                   int(n))
+                      for t, n in zip(blob["table"], blob["n_buckets"])]
         else:
-            n = n_default
-            table = np.zeros(n * _CUCKOO_SLOTS, dtype=np.uint16)
-        ck = _CuckooTable(table, n)
-        pid = (int(ops["part_id"].iloc[0]) if len(ops)
-               else int(blob["part_id"].iloc[0]))
+            tables = [_CuckooTable(
+                np.zeros(n_default * _CUCKOO_SLOTS, dtype=np.uint16),
+                n_default)]
         if len(ops):
             h1 = ops["h1"].to_numpy(np.int64)
-            fp = _cuckoo_fingerprint(h1)
-            i1 = np.mod(h1.astype(np.uint64), np.uint64(n)).astype(np.int64)
-            for a, b, o in zip(i1.tolist(), fp.tolist(), ops[op].tolist()):
-                (ck.delete if o == "del" else ck.insert)(a, b)
-        return pd.DataFrame({"part_id": [pid], "table": [table.tobytes()],
-                             "n_buckets": [n]})
+            fps = _cuckoo_fingerprint(h1).tolist()
+            i1s = [_cuckoo_index1(h1, ck.n).tolist() for ck in tables]
+            for j, (fp, o) in enumerate(zip(fps, ops[op].tolist())):
+                if o == "del":
+                    for ck, i1 in zip(tables, i1s):
+                        if ck.delete(i1[j], fp):
+                            break
+                elif not tables[0].insert(i1s[0][j], fp):
+                    raise _cuckoo_full(pid, tables[0].n, expected)
+        return pd.DataFrame({"part_id": [pid] * len(tables),
+                             "table": [ck.t.tobytes() for ck in tables],
+                             "n_buckets": [ck.n for ck in tables]})
 
     return (keyed.groupBy("part_id").cogroup(blobs.groupBy("part_id"))
             .applyInPandas(_apply, CUCKOO_SCHEMA))
@@ -526,8 +541,7 @@ def cuckoo_maybe_seen(frontier: DataFrame, blobs: DataFrame, cfg: CrawlConfig,
             n = int(blob["n_buckets"].iloc[idx])
             table = np.frombuffer(blob["table"].iloc[idx], dtype=np.uint16)
             ck = _CuckooTable(table.copy(), n)
-            i1 = np.mod(h1.astype(np.uint64), np.uint64(n)).astype(np.int64)
-            hits |= ck.contains(i1, fp).astype(bool)
+            hits |= ck.contains(_cuckoo_index1(h1, n), fp).astype(bool)
         out[flag] = hits
         return out
 

@@ -1,30 +1,23 @@
 """Gap-based sessionization over an event stream.
 
 Classic analytics operator: group each user's events into sessions that
-break when the gap to the previous event exceeds a threshold. Used here
-both as a standalone events-table operator and as the access-log shape
-of crawl telemetry (sessions over per-host fetch events).
+break when the gap to the previous event exceeds a threshold — an
+events-table operator (the gate's ``sessionize`` entry runs it over the
+events table, DuckDB-oracled).
 
-Two implementations, same semantics:
-
-- :func:`sessionize` / :func:`session_stats` — lag + cumulative-sum
-  window functions. Per-event session ids, microsecond-exact integer
-  math (``unix_micros``), bit-for-bit oracle-checkable. A NEW session
-  starts when ``gap > gap_seconds`` (strictly greater).
-- :func:`session_stats_native` — Spark's built-in
-  ``F.session_window`` aggregation: no per-event ids, but it is the
-  form that runs under Structured Streaming with watermarks and merges
-  map-side. Boundary semantics differ at EXACT gap equality (the
-  built-in closes a session at ``gap >= gapDuration``); on real
-  microsecond timestamps the measure-zero boundary never fires, and the
-  test suite pins the two stats outputs equal on the fixture.
+:func:`sessionize` / :func:`session_stats` use lag + cumulative-sum
+window functions: per-event session ids, microsecond-exact integer math
+(``unix_micros``), bit-for-bit oracle-checkable. A NEW session starts
+when ``gap > gap_seconds`` (strictly greater). The test suite pins
+:func:`session_stats` against Spark's built-in ``F.session_window``
+aggregation on the fixture (the built-in closes a session at
+``gap >= gapDuration``; on real microsecond timestamps that measure-zero
+boundary never fires).
 
 Scale notes (10^12 events):
 - one shuffle on the user/entity key; within-partition sort by
   (ts, event_id) — Spark's window exec spills, so whale users work but
-  serialize; for truly pathological keys use ``session_stats_native``
-  (partial aggregation, no per-key sort) or the streaming stateful
-  variant (`streaming/rounds.py` pattern).
+  serialize.
 - event-time ties are broken by ``event_id``, so session ids are
   deterministic at any parallelism.
 
@@ -34,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["sessionize", "session_stats", "session_stats_native"]
+__all__ = ["sessionize", "session_stats"]
 
 
 def _micros(ts_col: str, base_ts: str | None):
@@ -85,22 +78,3 @@ def session_stats(events: DataFrame, *, user_col: str = "user_id",
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.min("us").alias("start_us"),
                  F.max("us").alias("end_us")))
-
-
-def session_stats_native(events: DataFrame, *, user_col: str = "user_id",
-                         ts_col: str = "ts",
-                         gap_seconds: int = 1800,
-                         base_ts: str | None = None) -> DataFrame:
-    """Same summary via ``F.session_window`` — the streaming-capable
-    form (works under ``readStream`` + watermark; partial-aggregates
-    map-side, no per-user sort). No session ordinal: sessions are keyed
-    by their start. Returns ``(user_col, n_events, start_us, end_us)``
-    with start/end as the min/max EVENT times (the raw window end
-    includes the +gap padding; it is subtracted back)."""
-    win = F.session_window(F.col(ts_col), f"{int(gap_seconds)} seconds")
-    return (events
-            .groupBy(F.col(user_col), win.alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.min(_micros(ts_col, base_ts)).alias("start_us"),
-                 F.max(_micros(ts_col, base_ts)).alias("end_us"))
-            .select(user_col, "n_events", "start_us", "end_us"))

@@ -147,12 +147,16 @@ def _list_matrix(arr: pa.Array, name: str,
 
 
 def _quantize_np(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Bit-exact numpy twin of :func:`quantize_embeddings`: the same
-    fixed-shape IEEE double sequence ``floor((x * 127.0) / max|x| + 0.5)``
-    per element (identical operand order → identical correctly-rounded
-    results), zero vectors → all-zero codes; ``max`` skips NaN (null)
-    elements like ``array_max`` skips nulls. Returns ``(codes, sq_norm)``
-    with codes held as exact small integers in float64 (|code| <= 127, so
+    """Symmetric int8 scalar quantization — a 4× memory cut on float32
+    embeddings: per vector ``scale = max|x|`` and the fixed-shape IEEE
+    double sequence ``floor((x * 127.0) / scale + 0.5)`` per element, so
+    codes lie in [-127, 127], reconstruction error is ≤ half a step, and
+    every engine that replays the same operand order (the JVM form in the
+    tests, the gate's DuckDB oracle) gets bit-identical codes. Zero
+    vectors → all-zero codes (explicit branch, no 0/0); ``max`` skips NaN
+    (null) elements like ``array_max`` skips nulls. Returns
+    ``(codes, sq_norm)`` with codes held as exact small integers in
+    float64 (|code| <= 127, so
     a float64 matmul of code matrices accumulates integers far below 2^53
     — every partial sum is exact regardless of summation order); a null
     code (null vector or element) is NaN and makes ``sq_norm`` NaN."""
@@ -423,41 +427,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: DataFrame, *,
 # ---------------------------------------------------------------------------
 # int8 symmetric quantization (scalar quantizer — the 100 TB memory path)
 # ---------------------------------------------------------------------------
-
-def quantize_embeddings(df: DataFrame, *, vec: str = "embedding",
-                        id_col: str = "vec_id",
-                        codes_col: str = "codes",
-                        scale_col: str = "q_scale") -> DataFrame:
-    """Symmetric int8 scalar quantization: per vector, ``scale = max|v|``
-    and ``code_i = floor(v_i * 127 / scale + 0.5)`` ∈ [-127, 127] — a 4×
-    memory cut on float32 embeddings (the difference between an ANN
-    corpus fitting executor memory at 100 TB or spilling).  Zero vectors
-    quantize to all-zero codes (explicit branch — no 0/0).
-
-    Reconstruction error is ≤ ``scale / 254`` per element (half a
-    quantization step).  Every arithmetic step is a fixed-shape IEEE
-    double op (cast → * 127.0 → / scale → + 0.5 → floor), so any engine
-    produces bit-identical codes — the DuckDB gate oracle replays it
-    verbatim.  Pure JVM higher-order functions; no UDF, no shuffle.
-    """
-    v = F.col(vec)
-    m = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-    code = F.transform(
-        v, lambda x: F.floor(x.cast("double") * F.lit(127.0) / m
-                             + F.lit(0.5)).cast("int"))
-    zeros = F.transform(v, lambda x: F.lit(0))
-    return df.select(
-        F.col(id_col), m.alias(scale_col),
-        F.when(m == 0.0, zeros).otherwise(code).alias(codes_col))
-
-
-def quantized_dot(a: Column, b: Column) -> Column:
-    """Integer inner product of two int8-code arrays (int64 accumulator —
-    exact: |dot| ≤ 127² · dim, nowhere near overflow)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
-
 
 def _quantized_block(qm, q_vecs, cm, c_vecs):
     """Quantized cosine pruning scores, bit-equal to the engine's

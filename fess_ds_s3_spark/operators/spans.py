@@ -16,10 +16,10 @@ and packing:
 - :func:`span_pii_counts` — per-document PII hit counts summed across
   text spans in ONE array fold (each span counted with the same
   sequential semantics as functions/text.pii_counts).
-- :func:`media_manifest` / :func:`plan_media_fetch` — turn the corpus's
-  media references into a fetch plan with exactly ONE row per distinct
-  object, however many documents embed it. At 100 TB the same hero
-  image is referenced from millions of pages; fetching per-reference
+- :func:`media_manifest` — turn the corpus's media references into a
+  fetch plan with exactly ONE row per distinct object, however many
+  documents embed it. At 100 TB the same hero image is referenced from
+  millions of pages; fetching per-reference
   instead of per-object is the difference between a day and a month of
   GET traffic.
 
@@ -141,14 +141,3 @@ def media_manifest(docs: DataFrame, spans: str = "spans",
             .groupBy("media_ref")
             .agg(F.count(F.lit(1)).alias("ref_count"),
                  F.min("_doc").alias("first_doc")))
-
-
-def plan_media_fetch(manifest: DataFrame, fetched: DataFrame,
-                     ref_col: str = "media_ref") -> DataFrame:
-    """Anti-join the manifest against already-fetched references — the
-    incremental half of media fetch planning: only objects never seen
-    before are GET candidates. AQE sizes the join (broadcast when the
-    fetched index projection is small, shuffle otherwise — same policy
-    as operators/incremental.apply_tombstones)."""
-    seen = fetched.select(F.col(ref_col)).distinct()
-    return manifest.join(seen, on=ref_col, how="left_anti")

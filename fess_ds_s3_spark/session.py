@@ -1,27 +1,15 @@
-"""SparkSession builder with engine-appropriate defaults.
+"""S8 client-open validation: the reference's parameter checks, fail-fast.
 
-Centralizes the knobs that matter for the crawl workload so local tests,
-bench, and cluster deployments share one recipe. The reference's analog is
-client construction + validation (AmazonS3Client.java:67-114); here the
-"client" is the SparkSession itself.
-
-Cluster usage::
-
-    spark-submit --py-files fess_ds_s3_spark.zip \
-        --conf spark.sql.shuffle.partitions=<2-3x total cores> \
-        job.py
-
-Local usage::
-
-    from fess_ds_s3_spark.session import build_session
-    spark = build_session(cores=8)
+The reference validates its S3 client parameters when it constructs the
+client (AmazonS3Client.java:67-114). Here the store client is built per
+Spark task from a picklable spec, so the checks run once on the driver
+when the spec is built (``S3StoreSpec.from_config``) — before any task is
+launched. The SparkSession itself is the deployment's to configure
+(``spark-submit --py-files fess_ds_s3_spark.zip``; ``examples/`` show the
+settings the jobs use).
 """
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import SparkSession
 
 from fess_ds_s3_spark.config import ConfigError, CrawlConfig
 
@@ -50,70 +38,3 @@ def validate_client_params(cfg: CrawlConfig, *,
             int(str(cfg.proxy_port))
         except ValueError as exc:
             raise ConfigError("parameter 'proxy_port' invalid.") from exc
-
-
-def open_client(cfg: CrawlConfig, *, require_credentials: bool = True,
-                cores: int | None = None, **session_kwargs) -> SparkSession:
-    """S8 client/session open: validate the reference param surface, then
-    build the SparkSession (the engine's "client"). ``number_of_threads``
-    (X1, the reference's fixedThreadPool size) becomes the parallelism
-    floor: shuffle partitions never drop below it, and plans/round.py uses
-    it as the processing-stage fan-out."""
-    validate_client_params(cfg, require_credentials=require_credentials)
-    shuffle = session_kwargs.pop("shuffle_partitions", None)
-    if shuffle is None and cores:
-        shuffle = max(2 * cores, 8)
-    if shuffle is not None:
-        shuffle = max(shuffle, cfg.number_of_threads)
-    elif cfg.number_of_threads > 1:
-        shuffle = cfg.number_of_threads
-    return build_session(cores=cores, shuffle_partitions=shuffle,
-                         **session_kwargs)
-
-
-def build_session(cores: int | None = None, *,
-                  app_name: str = "fess-ds-s3-spark",
-                  shuffle_partitions: int | None = None,
-                  aqe: bool = True,
-                  driver_memory: str = "8g",
-                  arrow_batch: int = 10_000,
-                  extra: dict[str, str] | None = None) -> SparkSession:
-    """Build a session with the engine's recommended settings.
-
-    - ``shuffle_partitions``: default 2× cores locally. On a cluster size
-      so one partition of the frontier fits comfortably in executor memory
-      (≈128–256 MB of rows; AQE coalesces small ones when enabled).
-    - ``aqe``: ON by default (skew-join + coalesce backstops). The fixed
-      scheduling round disables it in bench because salting already handles
-      skew deterministically and AQE's per-stage materialization serializes
-      the (small) round DAG in local mode — on a real cluster leave it on.
-    - ``arrow_batch``: caps pandas-UDF batch memory
-      (spark.sql.execution.arrow.maxRecordsPerBatch).
-    - shuffle dirs go to /dev/shm when available in local mode (this is a
-      no-op on clusters where spark.local.dir is managed).
-    """
-    master = f"local[{cores}]" if cores else None
-    builder = (SparkSession.builder.appName(app_name)
-               .config("spark.sql.session.timeZone", "UTC")
-               .config("spark.sql.adaptive.enabled", str(aqe).lower())
-               .config("spark.sql.adaptive.skewJoin.enabled", "true")
-               .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       str(arrow_batch))
-               .config("spark.sql.files.maxPartitionBytes", "134217728")
-               .config("spark.serializer",
-                       "org.apache.spark.serializer.KryoSerializer"))
-    if master:
-        builder = (builder.master(master)
-                   .config("spark.driver.memory", driver_memory)
-                   .config("spark.ui.enabled", "false"))
-        if shuffle_partitions is None:
-            shuffle_partitions = max(2 * cores, 8)
-        if os.path.isdir("/dev/shm"):
-            builder = builder.config("spark.local.dir",
-                                     "/dev/shm/spark-local")
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions",
-                                 str(shuffle_partitions))
-    for key, value in (extra or {}).items():
-        builder = builder.config(key, value)
-    return builder.getOrCreate()

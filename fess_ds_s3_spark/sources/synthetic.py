@@ -1,20 +1,14 @@
-"""Deterministic synthetic fixtures + scale generators (seeded, no wall-clock).
+"""Deterministic synthetic scale generators (seeded, no wall-clock).
 
-Two tiers:
-
-1. **Reference-exact fixture** — mirrors the MinIO testcontainer fixture
-   (LocalAmazonS3.java:52-64,85-106): buckets ``fess-0``/``fess-1``, objects
-   ``files/sample-0.txt`` = b"hogehoge" and ``files/sample-1.txt`` =
-   b"hugahuga" (8 bytes), uploaded as ``application/octet-stream``. Golden
-   tests against the oracle run on exactly this fixture.
-
-2. **Scale generators** — a hash-sparse frontier drawn from a 10^10-URL
-   keyspace at any feasible row count (BASELINE.md), built entirely from
-   ``spark.range`` + JVM-side hash columns (no Python in generation, no RNG —
-   xxhash64(seed, id) is the entropy source, so any (rows, seed) pair is
-   reproducible on any cluster size), plus an interleaved text+media
-   ``docs`` table in the exact ``input_hint`` shape
-   ``(doc_id, spans:array<struct<kind,text,media_ref,offset>>)``.
+A hash-sparse frontier drawn from a 10^10-URL keyspace at any feasible row
+count (BASELINE.md), built entirely from ``spark.range`` + JVM-side hash
+columns (no Python in generation, no RNG — xxhash64(seed, id) is the entropy
+source, so any (rows, seed) pair is reproducible on any cluster size), plus
+an interleaved text+media ``docs`` table in the exact ``input_hint`` shape
+``(doc_id, spans:array<struct<kind,text,media_ref,offset>>)``. The schemas
+below also shape the reference-exact fixture (the MinIO testcontainer
+analog, LocalAmazonS3.java:52-64), which lives with the crawl oracle in
+``tests/oracle.py``.
 
 Skew: host assignment is deliberately Zipf-like (cubing a uniform hash)
 so politeness salting has real hot hosts to handle.
@@ -72,41 +66,7 @@ DOCS_SCHEMA = StructType([
 
 
 # ---------------------------------------------------------------------------
-# Tier 1: reference-exact fixture (LocalAmazonS3 analog)
-# ---------------------------------------------------------------------------
-
-def reference_frontier(spark: SparkSession) -> DataFrame:
-    """2 buckets × 2 objects, ascending binary key order per bucket.
-
-    No url/host columns: like a real S3 listing, URLs are constructed by
-    the engine (P1) — prepare_frontier builds them (the frontier contract
-    is: a url column, when present, is fully populated)."""
-    rows = []
-    for b in ("fess-0", "fess-1"):
-        for i in (0, 1):
-            rows.append((
-                b, f"files/sample-{i}.txt", 8,
-                f"etag-{b}-{i}", FIXTURE_EPOCH, "owner-id", "owner-name",
-                "STANDARD", 0, FIXTURE_EPOCH, 0))
-    schema = StructType([f for f in FRONTIER_SCHEMA.fields
-                         if f.name not in ("url", "host")])
-    return spark.createDataFrame(rows, schema)
-
-
-def reference_payloads(spark: SparkSession) -> DataFrame:
-    """Bodies b"hogehoge"/b"hugahuga", uploaded type application/octet-stream
-    (LocalAmazonS3.java:94-99)."""
-    rows = []
-    contents = {0: b"hogehoge", 1: b"hugahuga"}
-    for b in ("fess-0", "fess-1"):
-        for i, body in contents.items():
-            rows.append((b, f"files/sample-{i}.txt", body,
-                         "application/octet-stream", len(body)))
-    return spark.createDataFrame(rows, PAYLOAD_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Tier 2: scale generators (pure JVM-side expressions)
+# Scale generators (pure JVM-side expressions)
 # ---------------------------------------------------------------------------
 
 def _u(seed: int, *cols) -> F.Column:

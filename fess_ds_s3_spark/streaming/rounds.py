@@ -4,12 +4,13 @@ The reference is a batch crawler (SURVEY.md §2.10) and the engine's primary
 mode is iterated batch rounds over snapshot tables. This module provides the
 optional continuous variant the survey calls for: a ``readStream`` over
 newly-discovered frontier files, with ``foreachBatch`` running the SAME
-engine-agnostic round logic (plans/round.py) per micro-batch — no separate
-streaming implementation to keep in sync.
+round (``CrawlDriver.run_round``) per micro-batch — no separate streaming
+implementation to keep in sync.
 
 Semantics mapping:
 
-- micro-batch = scheduling round; the batch id becomes the round id.
+- micro-batch = scheduling round: each non-empty batch is appended to the
+  frontier table and run as the driver's next committed round.
 - the seen-set lives in the same snapshot tables as batch mode, so a crawl
   can switch between batch and streaming modes between rounds.
 - ordering: within a micro-batch, admission order is the engine's canonical
@@ -18,15 +19,10 @@ Semantics mapping:
 - no watermarks/event-time windows are needed: the URL-seen set (exact +
   bloom) subsumes late-data dedup, and politeness budgets are per-batch.
 
-For custom *stateful* streaming (e.g. sessionized per-host rate tracking),
-see ``host_rate_state`` below — an ``applyInPandasWithState`` example kept
-deliberately small; the engine's primary state store is the snapshot tables.
-
-CHECKPOINT COMPATIBILITY: 0.3.0 changed ``host_rate_state``'s state schema
-from scalar ``(window_start long, n long)`` to array columns (the
-out-of-order multi-window fix). Structured Streaming state schemas are not
-evolvable in place — a stream resuming from a pre-0.3.0 checkpoint will
-fail or misread state; use a FRESH checkpoint location for 0.3.0 streams.
+The module holds no streaming state of its own: the engine's state store is
+the snapshot tables, so a restart needs only the streaming checkpoint (source
+offsets) next to them. ``examples/continuous_crawl_job.py`` runs it end to
+end.
 """
 
 from __future__ import annotations
@@ -80,159 +76,3 @@ def continuous_crawl(spark: SparkSession, frontier_stream: DataFrame,
             .trigger(availableNow=True)
             .foreachBatch(_process)
             .start())
-
-
-def stream_listing_manifests(spark: SparkSession,
-                             manifest_dir: str) -> DataFrame:
-    """readStream over a directory of listing-manifest files: each JSON
-    line ``{"listing_path": "..."}`` announces one COMPLETE listing
-    snapshot (written atomically elsewhere — e.g. by a scheduled
-    ``list_objects_df(...).write.parquet(path)`` job). Streaming the
-    manifest instead of the listing rows keeps snapshot atomicity: a
-    micro-batch can never see half a listing."""
-    return (spark.readStream.schema("listing_path string")
-            .json(manifest_dir))
-
-
-def continuous_incremental_crawl(
-        spark: SparkSession, manifest_stream: DataFrame,
-        driver: CrawlDriver, *, checkpoint_dir: str,
-        version_cols=("etag", "size"),
-        max_rounds_per_cycle: int = 100,
-        host_budgets: DataFrame | None = None,
-        adaptive_priority: bool = False,
-        on_cycle: Callable[[object], None] | None = None,
-        ) -> StreamingQuery:
-    """Continuous CDC-style crawl: each manifest row triggers one
-    incremental re-crawl cycle (``CrawlDriver.begin_incremental_cycle`` —
-    diff the announced listing against the stored one, crawl only the
-    changed fraction, tombstone deletions) drained to exhaustion.
-
-    Crash/replay: the streaming checkpoint replays an unacknowledged
-    micro-batch; ``begin_incremental_cycle`` is replay-safe (a re-run
-    over an already-stored listing yields an empty diff, while the
-    crashed attempt's still-visible candidates schedule in the recommitted
-    cycle window), and the generation-scoped seen-set keeps the sink
-    exactly-once at the URL level per cycle. The driver loop over manifest
-    rows is driver-side by design — a micro-batch carries a handful of
-    manifest POINTERS, never listing rows."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        for row in batch_df.select("listing_path").toLocalIterator():
-            listing = spark.read.parquet(row.listing_path)
-            summary = driver.begin_incremental_cycle(
-                listing, version_cols=version_cols,
-                adaptive_priority=adaptive_priority)
-            driver.run(max_rounds_per_cycle, host_budgets=host_budgets)
-            if on_cycle is not None:
-                on_cycle(summary)
-
-    return (manifest_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(_process)
-            .start())
-
-
-#: output schema of :func:`host_rate_state`
-HOST_RATE_SCHEMA = ("host string, window_start long, n_fetches long, "
-                    "throttled boolean")
-_HOST_RATE_STATE_SCHEMA = "win_starts array<long>, counts array<long>"
-
-#: windows retained in state per host — the operator's late-data horizon
-#: (events for windows older than the ``HOST_RATE_KEEP_WINDOWS`` most
-#: recent ones seen for that host restart their count, like a watermark
-#: would have dropped them); bounded so state stays O(1) per host
-HOST_RATE_KEEP_WINDOWS = 8
-
-
-def host_rate_state(fetch_stream: DataFrame, *,
-                    window_seconds: int = 60,
-                    max_per_window: int = 100,
-                    host: str = "host",
-                    event_time: str = "event_time") -> DataFrame:
-    """Custom stateful streaming operator (X2-adjacent): per-host fetch-rate
-    tracking via ``applyInPandasWithState``.
-
-    State per host = the counts of the ``HOST_RATE_KEEP_WINDOWS`` most
-    recent fixed windows (epochs of ``floor(event_time / w) * w``); each
-    micro-batch folds its events into those counters and emits one row per
-    (host, window) touched, flagged ``throttled`` once a window's running
-    count exceeds ``max_per_window`` — the streaming analog of the
-    crawl-delay budget (operators/robots.crawl_delay_budgets derives the
-    same bound for batch rounds).
-
-    Counts are invariant to micro-batch boundaries INCLUDING out-of-order
-    delivery across batches: a late event for an earlier window still in
-    state increments that window's count (r2 kept only the latest window
-    and silently reset on any regression). The explicit horizon: events for
-    windows older than the retained set start a fresh count — the same
-    trade a watermark makes, with state bounded at ~2×8 longs per host.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    w = int(window_seconds)
-    keep = HOST_RATE_KEEP_WINDOWS
-
-    def _update(key, pdfs, state: GroupState):
-        (host_key,) = key
-        if state.exists:
-            win_starts, counts_list = state.get
-            hist = dict(zip(win_starts, counts_list))
-        else:
-            hist = {}
-        batch: dict[int, int] = {}
-        for pdf in pdfs:
-            secs = (pd.to_numeric(pdf[event_time]) // w * w).astype("int64")
-            for ws_val, c in secs.value_counts().items():
-                batch[int(ws_val)] = batch.get(int(ws_val), 0) + int(c)
-        rows = []
-        for ws_val in sorted(batch):
-            hist[ws_val] = hist.get(ws_val, 0) + batch[ws_val]
-            rows.append((host_key, ws_val, hist[ws_val],
-                         hist[ws_val] > max_per_window))
-        if rows:
-            recent = sorted(hist)[-keep:]
-            state.update(([int(x) for x in recent],
-                          [int(hist[x]) for x in recent]))
-            yield pd.DataFrame(rows, columns=["host", "window_start",
-                                              "n_fetches", "throttled"])
-
-    return (fetch_stream.groupBy(host)
-            .applyInPandasWithState(_update, HOST_RATE_SCHEMA,
-                                    _HOST_RATE_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
-
-
-def continuous_sessions(events_stream: DataFrame, *,
-                        user_col: str = "user_id", ts_col: str = "ts",
-                        gap_seconds: int = 1800,
-                        watermark: str = "1 hour") -> DataFrame:
-    """Streaming gap-based sessionization: ``session_window`` + event-time
-    watermark (the operators/sessions.py batch op's streaming twin).
-
-    In APPEND output mode a session row is emitted exactly once — when
-    the watermark has passed its close (no event within ``gap_seconds``
-    can extend it anymore). Late events inside the watermark re-open and
-    extend their session before it is emitted; events later than the
-    watermark are dropped by the engine — the documented and bounded
-    late-data contract that a lag/cumsum formulation cannot offer in
-    streaming (it would need unbounded state). State per (user, open
-    session) only; ``session_window`` merges map-side.
-
-    Returns ``(user_col, n_events, start_us, end_us)`` — same shape as
-    ``session_stats_native`` so the test suite can pin stream ≡ batch on
-    the closed prefix.
-    """
-    from pyspark.sql import functions as F
-
-    from fess_ds_s3_spark.operators.sessions import _micros
-    win = F.session_window(F.col(ts_col), f"{int(gap_seconds)} seconds")
-    return (events_stream
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.col(user_col), win.alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.min(_micros(ts_col, None)).alias("start_us"),
-                 F.max(_micros(ts_col, None)).alias("end_us"))
-            .select(user_col, "n_events", "start_us", "end_us"))

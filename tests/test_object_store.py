@@ -280,8 +280,8 @@ class TestStoreSpecs:
     def test_specs_are_picklable(self, tmp_path):
         import pickle
         from fess_ds_s3_spark.sources.object_store import (FsStoreSpec,
-                                                           LatencyFsStoreSpec,
                                                            S3StoreSpec)
+        from tests.store_fixtures import LatencyFsStoreSpec
         for spec in (FsStoreSpec(str(tmp_path)),
                      LatencyFsStoreSpec(str(tmp_path), 0.01),
                      S3StoreSpec(region=REGION, endpoint="http://m:9000")):
@@ -290,7 +290,7 @@ class TestStoreSpecs:
     def test_latency_spec_round_equals_fs_spec(self, spark, store):
         """The latency test double is output-transparent: a round through
         LatencyFsStoreSpec produces exactly the FsStoreSpec rows."""
-        from fess_ds_s3_spark.sources.object_store import LatencyFsStoreSpec
+        from tests.store_fixtures import LatencyFsStoreSpec
         cfg = CrawlConfig(region=REGION)
         listing = list_objects_df(spark, store.root, cfg)
         frontier = _frontier_from_listing(listing)
@@ -322,7 +322,7 @@ class TestFetchConcurrency:
         speedup over the serial loop (the reference's fixedThreadPool
         intent, AmazonS3DataStore.java:421-427) with identical outputs."""
         import time as _t
-        from fess_ds_s3_spark.sources.object_store import LatencyFsStoreSpec
+        from tests.store_fixtures import LatencyFsStoreSpec
         admitted = self._admitted(spark, store, 96).persist()
         admitted.count()
         spec = LatencyFsStoreSpec(store.root, 0.1)
@@ -575,7 +575,7 @@ class TestStoreErrorRouting:
         cfg = CrawlConfig(region=REGION)
         listing = list_objects_df(spark, store.root, cfg)
         frontier = _frontier_from_listing(listing)
-        from fess_ds_s3_spark.sources.object_store import FaultyFsStoreSpec
+        from tests.store_fixtures import FaultyFsStoreSpec
         spec = FaultyFsStoreSpec(store.root, "doc-2")
         result = round_plan.run_round(frontier, cfg, object_store_root=spec)
         rows = {(r.bucket_name, r.key): r
@@ -760,14 +760,14 @@ class TestFetchRetry:
         return spark.createDataFrame(rows, "bucket string, key string")
 
     def test_retries_recover_flaky_store(self, spark, store):
-        from fess_ds_s3_spark.sources.object_store import FlakyFsStoreSpec
+        from tests.store_fixtures import FlakyFsStoreSpec
         adm = self._admitted(spark, store).coalesce(1)
         out = fetch_objects(adm, FlakyFsStoreSpec(store.root, fail_times=2),
                             retries=2, retry_backoff_s=0.001).collect()
         assert all(r["_fetched"] and r["_fetch_error"] is None for r in out)
 
     def test_exhausted_budget_routes_error_row(self, spark, store):
-        from fess_ds_s3_spark.sources.object_store import FlakyFsStoreSpec
+        from tests.store_fixtures import FlakyFsStoreSpec
         adm = self._admitted(spark, store).coalesce(1)
         out = fetch_objects(adm, FlakyFsStoreSpec(store.root, fail_times=3),
                             retries=1, retry_backoff_s=0.001).collect()
@@ -776,7 +776,7 @@ class TestFetchRetry:
 
     def test_retry_with_pool_and_conditional(self, spark, store):
         import hashlib
-        from fess_ds_s3_spark.sources.object_store import FlakyFsStoreSpec
+        from tests.store_fixtures import FlakyFsStoreSpec
         rows = []
         for b in ("fess-0", "fess-1"):
             for i in range(5):

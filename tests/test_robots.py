@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.operators import robots
 from fess_ds_s3_spark.operators.filters import with_status_columns
+from tests.oracle import crawl_delay_of
 
 ROBOTS_A = """
 # comments are ignored
@@ -36,7 +37,7 @@ class TestParser:
         assert ("*", "disallow", "/private/") in kinds
         assert ("*", "allow", "/private/public/") in kinds
         assert ("fess-ds-s3-spark", "disallow", "/internal/") in kinds
-        assert robots.crawl_delay_of(rules, "other-bot") == 2.0
+        assert crawl_delay_of(rules, "other-bot") == 2.0
 
     def test_empty_disallow_allows_all(self):
         rules = robots.parse_robots_txt(ROBOTS_B)

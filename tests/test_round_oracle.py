@@ -10,9 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.config import CrawlConfig
-from fess_ds_s3_spark.oracle import OracleCrawler
 from fess_ds_s3_spark.plans import round as round_plan
 from fess_ds_s3_spark.sources import synthetic
+from tests.oracle import (OracleCrawler, reference_frontier,
+                          reference_payloads)
 
 REGION = "us-east-1"
 
@@ -51,8 +52,7 @@ def _admissions(result):
 class TestReferenceFixture:
     @pytest.fixture()
     def fixture(self, spark):
-        return (synthetic.reference_frontier(spark),
-                synthetic.reference_payloads(spark))
+        return reference_frontier(spark), reference_payloads(spark)
 
     def test_default_config_all_stored(self, spark, fixture):
         frontier, payloads = fixture

@@ -126,6 +126,43 @@ class TestCuckoo:
         probe_rest = seen_ops.cuckoo_maybe_seen(rest, updated, cfg)
         assert probe_rest.filter(~F.col("maybe_seen")).count() == 0
 
+    def test_update_keeps_every_blob_row(self, spark, cfg):
+        """A partition with several blob rows (unioned builds) keeps all
+        of them through an update: the probe ORs over the rows, so a
+        dropped row would turn its URLs into silent false negatives."""
+        a = _urls(spark, 200, prefix="a")
+        b = _urls(spark, 200, prefix="b")
+        c = _urls(spark, 50, prefix="c")
+        blobs = seen_ops.build_cuckoo(a, cfg).unionByName(
+            seen_ops.build_cuckoo(b, cfg))
+        updated = seen_ops.cuckoo_update(
+            blobs, c.withColumn("op", F.lit("add")), cfg)
+        everything = a.unionByName(b).unionByName(c)
+        probed = seen_ops.cuckoo_maybe_seen(everything, updated, cfg)
+        assert probed.filter(~F.col("maybe_seen")).count() == 0
+
+        gone = b.orderBy("canonical_url").limit(1)
+        after = seen_ops.cuckoo_update(
+            updated, gone.withColumn("op", F.lit("del")), cfg)
+        rest = everything.subtract(gone)
+        assert rest.count() == 449
+        probed = seen_ops.cuckoo_maybe_seen(rest, after, cfg)
+        assert probed.filter(~F.col("maybe_seen")).count() == 0
+        probed_gone = seen_ops.cuckoo_maybe_seen(gone, after, cfg)
+        assert probed_gone.filter(F.col("maybe_seen")).count() == 0
+
+    def test_overfull_table_raises(self, spark):
+        """400 URLs into one 16-bucket (64-slot) partition cannot fit: the
+        failed insert must raise, not evict a stored fingerprint."""
+        tiny = CrawlConfig(region="r", bloom_expected=16, seen_partitions=1)
+        urls = _urls(spark, 400)
+        with pytest.raises(Exception, match="bloom_expected=16"):
+            seen_ops.build_cuckoo(urls, tiny).collect()
+        empty = spark.createDataFrame([], seen_ops.CUCKOO_SCHEMA)
+        with pytest.raises(Exception, match="bloom_expected=16"):
+            seen_ops.cuckoo_update(
+                empty, urls.withColumn("op", F.lit("add")), tiny).collect()
+
 
 class TestParameterMismatch:
     """OR-merging blobs built with different (m_bits, k_hashes) would

@@ -106,30 +106,68 @@ class TestIvf:
         assert all(r["count"] == 5 for r in per_q)
 
 
+def quantize_embeddings(df, *, vec="embedding", id_col="vec_id",
+                        codes_col="codes", scale_col="q_scale"):
+    """JVM form of the int8 symmetric quantizer, the oracle for
+    :func:`similarity._quantize_np`: per vector ``scale = max|v|`` and
+    ``code_i = floor(v_i * 127 / scale + 0.5)``, zero vectors → all-zero
+    codes. The same fixed-shape IEEE double steps, so both forms give
+    bit-identical codes (the gate's DuckDB oracle replays them too)."""
+    v = F.col(vec)
+    m = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
+    code = F.transform(
+        v, lambda x: F.floor(x.cast("double") * F.lit(127.0) / m
+                             + F.lit(0.5)).cast("int"))
+    zeros = F.transform(v, lambda x: F.lit(0))
+    return df.select(
+        F.col(id_col), m.alias(scale_col),
+        F.when(m == 0.0, zeros).otherwise(code).alias(codes_col))
+
+
+def quantized_dot(a, b):
+    """Exact int64 inner product of two int8-code arrays (JVM fold)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
+        F.lit(0).cast("long"), lambda acc, v: acc + v)
+
+
+def _np_codes(df, vec="embedding", id_col="vec_id"):
+    """{id: (vector, kernel codes, kernel squared norm)} of a frame."""
+    rows = df.select(id_col, vec).collect()
+    mat = np.array([r[vec] for r in rows], dtype=np.float64)
+    codes, sq_norm = similarity._quantize_np(mat)
+    return {r[id_col]: (mat[i], codes[i], sq_norm[i])
+            for i, r in enumerate(rows)}
+
+
+def _assert_kernel_matches_jvm(df):
+    jvm = {r.vec_id: r.codes for r in quantize_embeddings(df).collect()}
+    for vid, (_v, codes, sq_norm) in _np_codes(df).items():
+        assert codes.tolist() == [float(c) for c in jvm[vid]]
+        assert sq_norm == sum(c * c for c in jvm[vid])
+
+
 class TestQuantized:
     def test_codes_bounded_and_extreme_maps_to_127(self, spark, corpus):
-        qz = similarity.quantize_embeddings(corpus).collect()
-        for r in qz:
-            assert max(abs(c) for c in r.codes) == 127
-            assert all(-127 <= c <= 127 for c in r.codes)
+        for _v, codes, _n in _np_codes(corpus).values():
+            assert max(abs(codes)) == 127
+            assert all(-127 <= c <= 127 for c in codes)
+        _assert_kernel_matches_jvm(corpus)
 
     def test_reconstruction_error_bound(self, spark, corpus):
-        qz = {r.vec_id: r for r in
-              similarity.quantize_embeddings(corpus).collect()}
-        for r in corpus.collect():
-            q = qz[r.vec_id]
-            step = q.q_scale / 127.0
-            for v, c in zip(r.embedding, q.codes):
-                assert abs(v - c * step) <= step / 2 + 1e-9
+        for v, codes, _n in _np_codes(corpus).values():
+            step = np.abs(v).max() / 127.0
+            for x, c in zip(v, codes):
+                assert abs(x - c * step) <= step / 2 + 1e-9
 
     def test_zero_vector(self, spark):
         df = spark.createDataFrame(
             [(0, [0.0] * DIM), (1, [1.0] + [0.0] * (DIM - 1))],
             "vec_id long, embedding array<float>")
-        qz = {r.vec_id: r for r in
-              similarity.quantize_embeddings(df).collect()}
-        assert qz[0].q_scale == 0.0 and set(qz[0].codes) == {0}
-        assert qz[1].codes[0] == 127
+        qz = _np_codes(df)
+        assert set(qz[0][1]) == {0.0} and qz[0][2] == 0.0
+        assert qz[1][1][0] == 127
+        _assert_kernel_matches_jvm(df)
         # zero vector scores 0.0 (explicit branch, no NaN)
         q = df.select(F.col("vec_id").alias("query_id"),
                       F.col("embedding").alias("query_vec"))
@@ -158,13 +196,6 @@ class TestQuantized:
                        corpus.repartition(13), k=5).collect())
         assert a == b
 
-    def test_quantize_is_pure_projection(self, spark, corpus):
-        plan = similarity.quantize_embeddings(corpus) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
-
 
 def _rank(scored, k, score, *cols):
     w = Window.partitionBy("query_id").orderBy(F.col(score).desc(),
@@ -191,13 +222,13 @@ def allpairs_quantized_topk(queries, corpus, *, k, exclude_self=True):
     """Reference plan for :func:`similarity.quantized_topk`: both sides
     quantized in the JVM, integer norms per row, a crossJoin of all
     pairs, the exact int64 code dot per pair."""
-    qq = similarity.quantize_embeddings(
+    qq = quantize_embeddings(
         queries, vec="query_vec", id_col="query_id", codes_col="_qc",
         scale_col="_qs").withColumn(
-            "_na", similarity.quantized_dot(F.col("_qc"), F.col("_qc")))
-    cq = similarity.quantize_embeddings(
+            "_na", quantized_dot(F.col("_qc"), F.col("_qc")))
+    cq = quantize_embeddings(
         corpus, codes_col="_cc", scale_col="_cs").withColumn(
-            "_nb", similarity.quantized_dot(F.col("_cc"), F.col("_cc")))
+            "_nb", quantized_dot(F.col("_cc"), F.col("_cc")))
     joined = cq.crossJoin(F.broadcast(qq))
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("vec_id"))
@@ -208,7 +239,7 @@ def allpairs_quantized_topk(queries, corpus, *, k, exclude_self=True):
                    * F.sqrt(F.col("_nb").cast("double"))), 6)))
     scored = joined.select(
         "query_id", "vec_id",
-        similarity.quantized_dot(F.col("_qc"), F.col("_cc")).alias("qdot"),
+        quantized_dot(F.col("_qc"), F.col("_cc")).alias("qdot"),
         "_na", "_nb").select("query_id", "vec_id", "qdot",
                              qcos.alias("qcos"))
     return _rank(scored, k, "qcos", "qdot")

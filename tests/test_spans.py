@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from fess_ds_s3_spark.operators.extract import (links_from_spans,
                                                 spans_sorted,
                                                 text_from_spans)
-from fess_ds_s3_spark.operators.multimodal import extract_media_spans
 from fess_ds_s3_spark.sources.synthetic import synth_docs
 
 
@@ -67,13 +66,3 @@ class TestSpanInvariant:
         for r in got:
             expected = [m for k, _, m, _ in base[r.doc_id] if k == "media"]
             assert list(r.links) == expected
-
-    def test_media_worklist_flatten(self, spark, docs):
-        flat = extract_media_spans(docs).collect()
-        base = _span_tuples(docs.collect())
-        by_doc = {}
-        for r in sorted(flat, key=lambda r: (r.doc_id, r.offset)):
-            by_doc.setdefault(r.doc_id, []).append(r.media_ref)
-        for doc_id, refs in by_doc.items():
-            expected = [m for k, _, m, _ in base[doc_id] if k == "media"]
-            assert refs == expected

@@ -16,7 +16,6 @@ from fess_ds_s3_spark.operators.packing import (interleaved_token_cost,
                                                 pack_interleaved,
                                                 pack_sequences)
 from fess_ds_s3_spark.operators.spans import (media_manifest,
-                                              plan_media_fetch,
                                               scrub_interleaved,
                                               scrub_spans, span_pii_counts)
 
@@ -150,14 +149,6 @@ class TestMediaManifest:
         # NULL and empty refs never appear; img0 referenced by d0 and d1
         assert got == {"s3://b/img0.png": (2, "d0"),
                        "s3://b/img1.png": (1, "d1")}
-
-    def test_plan_media_fetch_anti_join(self, spark, interleaved):
-        manifest = media_manifest(interleaved)
-        fetched = spark.createDataFrame(
-            [("s3://b/img0.png",)], "media_ref: string")
-        todo = plan_media_fetch(manifest, fetched)
-        assert [r["media_ref"] for r in todo.collect()] \
-            == ["s3://b/img1.png"]
 
     def test_single_exchange(self, interleaved):
         plan = media_manifest(interleaved)._jdf.queryExecution() \

@@ -11,7 +11,6 @@ from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.plans.crawl import CrawlDriver
 from fess_ds_s3_spark.sources import synthetic
 from fess_ds_s3_spark.streaming.rounds import (continuous_crawl,
-                                               host_rate_state,
                                                stream_frontier)
 
 
@@ -53,42 +52,6 @@ class TestStreamingRounds:
         assert stream_urls == batch_urls
         assert len(rounds_seen) >= 1
 
-    def test_host_rate_state_counts_and_restores(self, spark, tmp_path):
-        """applyInPandasWithState per-host rate tracking: fixed-window
-        counts, throttle flag past the budget, and state restore across a
-        checkpointed restart (same window keeps accumulating; a new window
-        resets)."""
-        schema = "host string, event_time long"
-        src = str(tmp_path / "fetches")
-        ckpt = str(tmp_path / "ck")
-        spark.createDataFrame(
-            [("a", 0), ("a", 10), ("a", 50), ("b", 5)], schema
-        ).write.parquet(src, mode="append")
-
-        def run(name):
-            stream = spark.readStream.schema(schema).parquet(src)
-            out = host_rate_state(stream, window_seconds=60,
-                                  max_per_window=2)
-            res = str(tmp_path / f"out-{name}")
-            q = (out.writeStream.outputMode("update")
-                 .option("checkpointLocation", ckpt)
-                 .foreachBatch(lambda df, _bid:
-                               df.write.mode("append").parquet(res))
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-            return {(r.host, r.window_start): (r.n_fetches, r.throttled)
-                    for r in spark.read.parquet(res).collect()}
-
-        rows = run("rates1")
-        assert rows[("a", 0)] == (3, True)   # 3 > budget 2 → throttled
-        assert rows[("b", 0)] == (1, False)
-
-        spark.createDataFrame([("b", 20), ("a", 70)], schema
-                              ).write.parquet(src, mode="append")
-        rows2 = run("rates2")
-        assert rows2[("b", 0)] == (2, False)   # restored state: 1 + 1
-        assert rows2[("a", 60)] == (1, False)  # new window resets
-
     def test_stream_restart_no_duplicates(self, spark, cfg, tmp_path):
         """availableNow restart over the same checkpoint must not re-admit
         (streaming offsets + seen-set double protection)."""
@@ -108,50 +71,6 @@ class TestStreamingRounds:
                               driver, checkpoint_dir=ckpt)
         q2.awaitTermination(120)
         assert driver.read_committed("indexed").count() == n_after_first
-
-
-class TestOutOfOrderWindows:
-    def test_late_earlier_window_accumulates(self, spark, tmp_path):
-        """A late event for an EARLIER window (arriving after a newer
-        window opened) must increment that window's retained count and
-        must not clobber the current window's state (r2 kept only the
-        latest window and reset on any regression)."""
-        schema = "host string, event_time long"
-        src = str(tmp_path / "ooo")
-        ckpt = str(tmp_path / "ck")
-        spark.createDataFrame([("a", 70), ("a", 80)], schema
-                              ).write.parquet(src, mode="append")
-
-        def run(name):
-            from fess_ds_s3_spark.streaming.rounds import host_rate_state
-            stream = spark.readStream.schema(schema).parquet(src)
-            out = host_rate_state(stream, window_seconds=60,
-                                  max_per_window=3)
-            res = str(tmp_path / f"out-{name}")
-            q = (out.writeStream.outputMode("update")
-                 .option("checkpointLocation", ckpt)
-                 .foreachBatch(lambda df, _bid:
-                               df.write.mode("append").parquet(res))
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-            return {(r.host, r.window_start): r.n_fetches
-                    for r in spark.read.parquet(res).collect()}
-
-        rows = run("b1")
-        assert rows[("a", 60)] == 2
-
-        # batch 2: one LATE window-0 event + one more window-60 event
-        spark.createDataFrame([("a", 10), ("a", 90)], schema
-                              ).write.parquet(src, mode="append")
-        rows2 = run("b2")
-        assert rows2[("a", 0)] == 1    # late window counted on its own
-        assert rows2[("a", 60)] == 3   # current window NOT reset (2 + 1)
-
-        # batch 3: window 60 keeps accumulating from restored state
-        spark.createDataFrame([("a", 95)], schema
-                              ).write.parquet(src, mode="append")
-        rows3 = run("b3")
-        assert rows3[("a", 60)] == 4
 
 
 class TestStreamStoreMode:
@@ -186,54 +105,3 @@ class TestStreamStoreMode:
                 for r in driver.read_committed("indexed").collect()}
         assert len(rows) == 6
         assert any(v == "text-0" for v in rows.values())
-
-
-class TestContinuousSessions:
-    def test_append_emits_closed_sessions_and_drops_too_late(self, spark,
-                                                             tmp_path):
-        """Session A (events t=0,100) is emitted once the watermark
-        passes its close; the still-open session stays unemitted; an
-        event later than the watermark is dropped (bounded-late-data
-        contract)."""
-        import datetime as dt
-        from fess_ds_s3_spark.streaming.rounds import continuous_sessions
-
-        base = dt.datetime(2024, 1, 1)
-        schema = "user_id long, ts timestamp"
-        src = str(tmp_path / "events")
-        ckpt = str(tmp_path / "ck")
-        res = str(tmp_path / "out")
-
-        def write(seconds):
-            spark.createDataFrame(
-                [(1, base + dt.timedelta(seconds=s)) for s in seconds],
-                schema).write.mode("append").parquet(src)
-
-        def run():
-            stream = spark.readStream.schema(schema).parquet(src)
-            out = continuous_sessions(stream, gap_seconds=1800,
-                                      watermark="1 second")
-            q = (out.writeStream.outputMode("append")
-                 .option("checkpointLocation", ckpt)
-                 .foreachBatch(lambda df, _b:
-                               df.write.mode("append").parquet(res))
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-            try:
-                return [(r.user_id, r.n_events) for r in
-                        spark.read.parquet(res).collect()]
-            except Exception:
-                return []
-
-        write([0, 100])
-        run()                      # watermark still inside session A
-        write([10_000])            # advances watermark past A's close
-        got = run()
-        assert (1, 2) in got       # session A emitted, exactly the 2 events
-        assert len(got) == 1       # session B (t=10000) still open
-
-        # a too-late event (t=50 << watermark) is dropped, session A is
-        # NOT re-emitted or extended; a new far event closes B
-        write([50, 40_000])
-        got = run()
-        assert sorted(got) == [(1, 1), (1, 2)]   # A unchanged, B closed n=1

@@ -58,12 +58,6 @@ class TestRatios:
         assert got[0] == pytest.approx(8 / 14, abs=1e-3)
         assert got[5] == 0.0
 
-    def test_quality_score_bounds(self, spark, docs):
-        got = [r.q for r in docs.select(
-            T.quality_score("text").alias("q")).collect()]
-        assert all(0.0 <= q <= 1.0 for q in got)
-
-
 class TestLangId:
     def test_marker_language(self, spark, docs):
         got = {r.doc_id: r.lang for r in docs.select(

@@ -11,7 +11,8 @@ from fess_ds_s3_spark.functions.urls import (build_management_url,
                                              canonicalize_url_py,
                                              filename_from_key,
                                              java_uri_encode_path,
-                                             management_url_py, object_url_py)
+                                             object_url_py)
+from tests.oracle import management_url_py
 
 
 class TestJavaUriEncoding:
