@@ -395,10 +395,10 @@ def _routed_round1(spark, sf_dir):
 
 
 def q_admission_fair(spark, sf_dir):
-    """Fair round-budget admission (plans/round.schedule cap_mode='fair'
-    semantics over the flagship admission base): per-host quotas by
-    largest-remainder apportionment of a 23-fetch round budget over the
-    politeness-admitted backlog (operators/politeness.host_budget), each
+    """Fair round-budget admission over the flagship admission base:
+    per-host quotas by largest-remainder apportionment of a 23-fetch
+    round budget over the politeness-admitted backlog
+    (operators/politeness.host_budget), each
     host keeping its host_rank ≤ quota prefix — the anti-starvation
     alternative to the reference-parity page top-K."""
     # r6: the politeness-admitted backlog per host is, by construction,

@@ -9,10 +9,11 @@ The streaming twin of ``crawl_job.py``. Seed frontier files land one at a
 time in ``<warehouse>/_incoming`` (the stand-in for a listing stage that
 writes parquet), and after each landing the job drains the directory with
 an ``availableNow`` stream (streaming/rounds.py): each micro-batch is
-appended to the frontier table and run as the driver's next committed
-round. The streaming checkpoint in ``<warehouse>/_checkpoint`` holds the
-source offsets, so every drain reads only files it has not read before and
-the job can be re-run on a schedule against the same directories.
+seeded into the frontier table and drained, committed rounds running until
+one admits nothing. The streaming checkpoint in ``<warehouse>/_checkpoint``
+holds the source offsets, so every drain reads only files it has not read
+before and the job can be re-run on a schedule against the same
+directories.
 
 On a cluster, drop the --master local default via spark-submit's own
 --master/--num-executors flags; the job code is identical.

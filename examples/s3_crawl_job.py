@@ -13,8 +13,9 @@ the frontier, each round admits per-host budget slices, content is fetched
 through the boto3 client inside ``mapInPandas`` with a bounded per-task GET
 pool (``--threads``, the reference's ``number_of_threads``), robots.txt
 objects are honored when ``--respect-robots`` is set, and every O(25)
-rounds the frontier + seen-set are compacted so a long crawl's per-round
-reads stay O(1) directories. Prefer instance-profile/env credentials and
+rounds the frontier + seen-set are compacted and their old snapshots
+expired, so a long crawl's per-round reads stay O(1) directories and its
+disk use stays bounded. Prefer instance-profile/env credentials and
 omit the key flags; explicit keys ride the task pickle like any Spark
 closure variable.
 """
@@ -83,6 +84,9 @@ def main() -> None:
         if s.round_id > 0 and s.round_id % COMPACT_EVERY == 0:
             driver.compact_frontier()
             driver.compact_seen()
+            # compaction only unreferences the old files; expiring the
+            # snapshots deletes them
+            driver.vacuum()
 
 
 if __name__ == "__main__":

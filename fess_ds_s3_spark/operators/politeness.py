@@ -147,29 +147,15 @@ def admit_per_host_salted(
 
 
 def cap_round(admitted: DataFrame, global_cap: int | None,
-              cap_mode: str = "page",
               rank_by: Sequence[str] = DEFAULT_RANK_COLS) -> DataFrame:
-    """Apply the per-round admission cap to an admitted batch (a no-op when
-    ``global_cap`` is None).
-
-    - ``"page"``: global top-``global_cap`` by ``rank_by`` — a distributed
-      top-K (TakeOrderedAndProject), never a full global sort.
-    - ``"fair"``: each host keeps its ``host_rank ≤ quota`` prefix, the
-      quotas apportioned by :func:`host_budget` over the admitted backlog.
-    """
-    if cap_mode not in ("page", "fair"):
-        raise ValueError("cap_mode must be 'page' or 'fair'")
+    """Apply the per-round admission cap to an admitted batch: the global
+    top-``global_cap`` by ``rank_by`` — a distributed top-K
+    (TakeOrderedAndProject), never a full global sort. A no-op when
+    ``global_cap`` is None."""
     if global_cap is None:
         return admitted
-    if cap_mode == "page":
-        return (admitted.orderBy(*[F.col(c).asc() for c in rank_by])
-                .limit(global_cap))
-    backlog = (admitted.groupBy("host")
-               .agg(F.count(F.lit(1)).alias("pending")))
-    quotas = host_budget(backlog, global_cap).select("host", "quota")
-    return (admitted.join(F.broadcast(quotas), "host")
-            .filter(F.col("host_rank") <= F.col("quota"))
-            .drop("quota"))
+    return (admitted.orderBy(*[F.col(c).asc() for c in rank_by])
+            .limit(global_cap))
 
 
 def reference_order_admission(df: DataFrame, max_keys: int) -> DataFrame:
@@ -202,10 +188,10 @@ def host_budget(backlog: DataFrame, budget: int, *,
       pending when B < T, so the +1 never overshoots).
     - ``T = 0`` or ``budget = 0`` → all quotas 0.
 
-    This is the admission stage's missing global constraint: the
-    per-host cap (admit_per_host) bounds each host, this bounds the
-    ROUND — together they give "fetch at most B objects this round,
-    spread fairly by backlog, never more per host than it has".
+    With the per-host cap (admit_per_host) bounding each host, this
+    bounds the ROUND — together they give "fetch at most B objects this
+    round, spread fairly by backlog, never more per host than it has".
+    The crawl round itself caps with :func:`cap_round`'s page top-K.
 
     Scale note: the exact leftover distribution ranks remainders with a
     GLOBAL window over the host table (one row per host — small next

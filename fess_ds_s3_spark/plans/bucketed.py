@@ -159,4 +159,4 @@ def schedule_bucketed(frontier: DataFrame, cfg: CrawlConfig, *,
     admitted = politeness.admit_per_host(deduped, cfg,
                                          host_budgets=host_budgets,
                                          rank_by=rank_by)
-    return politeness.cap_round(admitted, global_cap, "page", rank_by)
+    return politeness.cap_round(admitted, global_cap, rank_by)

@@ -48,7 +48,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
@@ -131,46 +131,31 @@ class CrawlDriver:
     production fetch stage (``sources.object_store.fetch_objects``) against
     this store instead of a pre-fetched ``payloads`` table. Accepts an
     FsObjectStore root path or any ``StoreSpec`` (e.g. ``S3StoreSpec`` for
-    a real S3/MinIO deployment).
+    a real S3/MinIO deployment). Store-mode rounds GET conditionally
+    (``IfNoneMatch``) whenever the frontier carries ``prev_etag``, which
+    ``begin_incremental_cycle`` writes when ``etag`` is a version column:
+    an object that still matches its prior ETag lands as ``unchanged``.
 
-    Robots ``Crawl-delay`` converts into per-round budgets at 60 s per
-    round (``operators.robots.crawl_delay_budgets``).
+    ``use_authority``: harvest host link edges each round and, once
+    ``refresh_authority()`` ran, schedule by host authority.
+
+    Every round merges its seen delta into the seen bloom and, once a bloom
+    exists, probes it, confirming positives against the exact committed
+    seen set (round 0 runs the exact anti-join alone). Robots ``Crawl-delay``
+    converts into per-round budgets at 60 s per round
+    (``operators.robots.crawl_delay_budgets``).
     """
 
     def __init__(self, spark: SparkSession, warehouse: str, cfg: CrawlConfig,
-                 *, use_bloom: bool = True,
-                 per_round_cap: int | None = None,
+                 *, per_round_cap: int | None = None,
                  object_store_root=None,
-                 conditional_fetch: bool = False,
-                 use_authority: bool = False,
-                 use_prefetch_dedup: bool = False,
-                 cap_mode: str = "page"):
+                 use_authority: bool = False):
         if per_round_cap is not None and per_round_cap <= 0:
             raise ValueError("per_round_cap must be positive or None")
-        if cap_mode not in ("page", "fair"):
-            raise ValueError("cap_mode must be 'page' or 'fair'")
-        if conditional_fetch and object_store_root is None:
-            raise ValueError("conditional_fetch requires object_store_root")
         self.spark = spark
         self.cfg = cfg
-        self.use_bloom = use_bloom
         self.per_round_cap = per_round_cap
-        # how the cap picks rows: "page" = global top-K (reference listing
-        # parity), "fair" = largest-remainder per-host quotas (host_budget)
-        self.cap_mode = cap_mode
         self.object_store_root = object_store_root
-        # incremental-cycle candidates carry the prior ETag; rounds then
-        # GET conditionally and unchanged objects transfer no body
-        # (frontier rows without the column — seeds, links — read as null
-        # via mergeSchema and fetch unconditionally)
-        self.conditional_fetch = conditional_fetch
-        # pre-fetch content-identity dedup (operators/dedup.prefetch_dedup):
-        # admitted rows whose (e_tag, size) matches an already-indexed row
-        # (or an in-batch twin) copy content instead of issuing the GET —
-        # the cheapest dedup tier, it never fetches. Opt-in: the copy
-        # re-materializes known content from the stored extracted text,
-        # which is exact for UTF-8 objects (see plans/round.process).
-        self.use_prefetch_dedup = use_prefetch_dedup
         self.catalog = Catalog(spark, warehouse)
         self.frontier = self.catalog.table("frontier")
         self.seen = self.catalog.table("seen")
@@ -243,17 +228,9 @@ class CrawlDriver:
         from fess_ds_s3_spark.operators import robots as robots_ops
         if not self.robots.exists():
             if self.object_store_root is not None:
-                from fess_ds_s3_spark.sources.object_store import (
-                    as_store_spec, fetch_robots_bodies,
-                    fetch_robots_bodies_distributed)
-                # small bucket populations: driver-side GET loop (the
-                # reference's bucket iteration); large ones: fan the robots
-                # GETs out through the production fetch stage
-                n_buckets = len(
-                    as_store_spec(self.object_store_root).connect().buckets())
-                fetch = (fetch_robots_bodies if n_buckets <= 64
-                         else fetch_robots_bodies_distributed)
-                self.install_robots(fetch(
+                from fess_ds_s3_spark.sources.object_store import \
+                    fetch_robots_bodies
+                self.install_robots(fetch_robots_bodies(
                     self.spark, self.object_store_root, self.cfg))
             else:
                 raise ValueError(
@@ -402,24 +379,8 @@ class CrawlDriver:
             frontier_df = authority_priority(frontier_df,
                                              self.authority.read())
         seen_df = self.committed_seen(min_round=start)
-        if "is_retry" in frontier_df.columns:
-            # retry_failures() re-opened these URLs for exactly this
-            # round: lift them out of the exact seen set so the round's
-            # unseen filter admits them once more (the bloom may say
-            # maybe-seen; the exact confirm then finds them unseen).
-            # Scoped to round == round_id, so a retry that succeeds — or
-            # exhausts its attempts — falls back under seen protection
-            # from the next round on. Replay-deterministic: the retry
-            # rows are committed frontier state.
-            reopened = (frontier_df
-                        .filter(F.coalesce(F.col("is_retry"),
-                                           F.lit(False))
-                                & (F.coalesce(F.col("round"), F.lit(0))
-                                   == F.lit(round_id)))
-                        .select("canonical_url").distinct())
-            seen_df = seen_df.join(reopened, "canonical_url", "left_anti")
         blooms, bloom_size = None, None
-        if self.use_bloom and self.seen_bloom.exists():
+        if self.seen_bloom.exists():
             blooms = self.seen_bloom.read()
             # blob payload size rides in the snapshot metadata so the
             # broadcast-vs-cogroup probe choice costs zero Spark jobs
@@ -438,24 +399,11 @@ class CrawlDriver:
                 host_budgets,
                 robots_ops.crawl_delay_budgets(robots_rules, cfg))
 
-        # conditional GETs only once cycle candidates carry the prior ETag
-        # (legacy/seed-only frontiers lack the column → unconditional)
-        inm_col = ("prev_etag" if self.conditional_fetch
+        # conditional GETs once cycle candidates carry the prior ETag
+        # (seed and link rows lack the column, or read it as null via
+        # mergeSchema, and fetch unconditionally)
+        inm_col = ("prev_etag" if self.object_store_root is not None
                    and "prev_etag" in frontier_df.columns else None)
-        prefetch_known = None
-        if self.use_prefetch_dedup and (payloads is not None
-                                        or self.object_store_root is not None):
-            if self.indexed.exists():
-                # committed rows only — an orphan append must not become
-                # a copy source (same invisibility rule as every read)
-                prefetch_known = (self.read_committed("indexed")
-                                  .select("e_tag", "size", "url",
-                                          "resp_content_type", "contents"))
-            else:
-                # round 0: in-batch twins still dedup against each other
-                prefetch_known = self.spark.createDataFrame(
-                    [], "e_tag string, size long, url string, "
-                        "resp_content_type string, contents string")
         result = round_plan.run_round(
             frontier_df, cfg, payloads=payloads,
             object_store_root=self.object_store_root,
@@ -467,9 +415,7 @@ class CrawlDriver:
             # O2: optional per-round admission cap (engine knob; None =
             # admit everything budgets allow, reference-outcome-equivalent)
             global_cap=self.per_round_cap,
-            cap_mode=self.cap_mode,
-            bloom_size_bytes=bloom_size,
-            prefetch_known=prefetch_known)
+            bloom_size_bytes=bloom_size)
 
         observed, obs = lineage_ops.observe_round(result.processed)
         # Cache the small admitted batch: it feeds 5 writes below.
@@ -496,11 +442,10 @@ class CrawlDriver:
             (self.seen, result.seen_delta.withColumn("round",
                                                      F.lit(round_id))),
         ]
-        if self.use_bloom:
-            new_bloom = seen_ops.build_bloom(result.seen_delta, cfg)
-            writes.append((self.seen_bloom,
-                           seen_ops.merge_blooms(blooms, new_bloom)
-                           if blooms is not None else new_bloom))
+        new_bloom = seen_ops.build_bloom(result.seen_delta, cfg)
+        writes.append((self.seen_bloom,
+                       seen_ops.merge_blooms(blooms, new_bloom)
+                       if blooms is not None else new_bloom))
         obs_links = obs_edges = None
         if docs is not None:
             from pyspark.sql import Observation
@@ -553,13 +498,12 @@ class CrawlDriver:
         stats_snap = self.stats.append(staged["stats"], meta)
         lineage_snap = self.lineage.append(staged["lineage"], meta)
         seen_snap = self.seen.append(staged["seen"], meta)
-        if self.use_bloom:
-            self.seen_bloom.overwrite(
-                staged["seen_bloom"],
-                {"round": round_id,
-                 # metadata-only sizing for next round's probe choice —
-                 # the merge validates every blob shares these parameters
-                 "size_bytes": seen_ops.bloom_size_bytes(cfg)})
+        self.seen_bloom.overwrite(
+            staged["seen_bloom"],
+            {"round": round_id,
+             # metadata-only sizing for next round's probe choice — the
+             # merge validates every blob shares these parameters
+             "size_bytes": seen_ops.bloom_size_bytes(cfg)})
         new_links = 0
         if obs_links is not None:
             new_links = int(obs_links.get["n"])
@@ -726,91 +670,6 @@ class CrawlDriver:
             self.authority.overwrite(staged, {"round": self.last_round()})
         return n
 
-    # ----- cross-round failure retries ---------------------------------------
-
-    #: error classes that can never succeed on retry — deterministic
-    #: outcomes of the object itself (size guard, extraction), per the
-    #: reference's failure taxonomy (AmazonS3DataStore.java:279-287)
-    RETRY_PERMANENT_ERRORS: tuple[str, ...] = (
-        "MaxLengthExceededException", "ExtractException")
-
-    def retry_failures(self, *, max_attempts: int = 3,
-                       retry_errors: tuple[str, ...] | None = None) -> int:
-        """Re-open transient failures as retry candidates for the NEXT
-        round. The in-task retry budget (``fetch_objects(retries=)``)
-        handles blips within a GET; this is the round-granular tier
-        above it — a URL that keeps failing across rounds gets up to
-        ``max_attempts`` total attempts, then stays failed.
-
-        Selection: committed failure rows, minus permanent error classes
-        (:data:`RETRY_PERMANENT_ERRORS`; pass ``retry_errors`` to
-        allowlist instead), minus URLs that later succeeded, with fewer
-        than ``max_attempts`` failure rows (each failed attempt adds a
-        row, so the ledger itself is the attempt counter — no new state
-        table). Each survivor's ORIGINAL frontier row (lowest round) is
-        re-appended stamped ``round = last_round()+1, is_retry = true``;
-        ``run_round`` lifts exactly those (url, round) pairs out of the
-        seen set for that one round. Crash-safe like every append: an
-        orphan retry delta is invisible until the next round ledgers it,
-        and a duplicate re-append collapses in the round's dedup.
-
-        Returns the number of URLs re-opened (an empty retry delta is
-        staged but never committed)."""
-        if max_attempts < 2:
-            raise ValueError("max_attempts must be >= 2 (the first "
-                             "attempt already happened)")
-        if not self.failures.exists():
-            return 0
-        fails = self.read_committed("failures")
-        # a URL's retryability is decided by its MOST RECENT failure —
-        # an older transient miss must not re-open a URL that has since
-        # failed permanently (e.g. NoSuchKey in round 0, MaxLength once
-        # the object was listed oversize in round 1)
-        wl = Window.partitionBy("url").orderBy(
-            F.col("round").desc(), F.col("error_name"))
-        latest = (fails.withColumn("_rn", F.row_number().over(wl))
-                  .filter(F.col("_rn") == 1))
-        if retry_errors is None:
-            latest = latest.filter(
-                ~F.col("error_name").isin(*self.RETRY_PERMANENT_ERRORS))
-        else:
-            latest = latest.filter(
-                F.col("error_name").isin(*list(retry_errors)))
-        attempts = (fails.groupBy("url")
-                    .agg(F.count(F.lit(1)).alias("_attempts"))
-                    .filter(F.col("_attempts") < F.lit(max_attempts)))
-        cand = latest.select("url").join(attempts.select("url"),
-                                         "url", "left_semi")
-        if self.indexed.exists():
-            cand = cand.join(
-                self.read_committed("indexed").select("url"),
-                "url", "left_anti")
-        base = self.frontier.read()
-        rnd = (F.coalesce(F.col("round"), F.lit(0))
-               if "round" in base.columns else F.lit(0))
-        # tiebreak within (url, round): same-round duplicate rows (a link
-        # discovered by several parents) must yield ONE deterministic
-        # winner across replays, or the re-appended row's ancillary
-        # columns (priority, parent fields) vary run to run — a value
-        # hash of the whole row is schema-agnostic and replay-stable
-        row_fp = F.xxhash64(F.struct(*[F.col(c) for c in base.columns]))
-        w = Window.partitionBy("url").orderBy(rnd.asc(), row_fp.asc())
-        rows = (base.join(cand, "url", "left_semi")
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
-        next_round = self.last_round() + 1
-        rows = (rows.withColumn("round", F.lit(next_round))
-                .withColumn("is_retry", F.lit(True)))
-        from pyspark.sql import Observation
-        obs = Observation()
-        rows = rows.observe(obs, F.count(F.lit(1)).alias("n"))
-        staged = self.frontier.stage(rows)
-        n = int(obs.get["n"])
-        if n:
-            self.frontier.append(staged,
-                                 {"kind": "retry", "round": next_round})
-        return n
-
     # ----- incremental re-crawl cycles ---------------------------------------
 
     def cycle_start(self) -> int:
@@ -858,19 +717,20 @@ class CrawlDriver:
             prev_cycle = self.cycles.read().agg(F.max("cycle")).first()[0]
             cycle_id = int(prev_cycle or 0) + 1
 
-        carry_prev = (self.conditional_fetch and "etag" in version_cols)
+        # the prior ETag rides each candidate row so store-mode rounds GET
+        # conditionally; null for added rows
+        keep_prev = ("etag",) if "etag" in version_cols else ()
         if self.listing.exists():
             diff = inc.listing_diff(listing_df, self.listing.read(),
                                     version_cols=version_cols)
             cand = inc.recrawl_candidates(
-                diff, version_cols=version_cols,
-                keep_prev=("etag",) if carry_prev else ())
+                diff, version_cols=version_cols, keep_prev=keep_prev)
             tombs = inc.deletion_tombstones(diff)
             diff_all = diff.select("bucket", "key", "change")
         else:
             cand = listing_df.withColumn("change", F.lit("added"))
-            if carry_prev:
-                cand = cand.withColumn("prev_etag",
+            for c in keep_prev:
+                cand = cand.withColumn(f"prev_{c}",
                                        F.lit(None).cast("string"))
             tombs = listing_df.select("bucket", "key").limit(0)
             diff_all = listing_df.select(
@@ -911,10 +771,7 @@ class CrawlDriver:
             priority.alias("priority"),
             # deterministic discovery order: cycle sequence, not clock
             F.to_timestamp(F.lit("2020-01-01")).alias("discovery_time")]
-        if carry_prev:
-            # prior ETag rides the frontier row → conditional GETs
-            # (fetch_objects IfNoneMatch); null for added rows
-            cand_cols.append(F.col("prev_etag"))
+        cand_cols += [F.col(f"prev_{c}") for c in keep_prev]
         cand_rows = round_plan.prepare_frontier(
             cand.select(*cand_cols), self.cfg
         ).withColumn("round", F.lit(start_round))

@@ -126,7 +126,6 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
              use_salting: bool = True,
              narrow: bool = True,
              global_cap: int | None = None,
-             cap_mode: str = "page",
              bloom_size_bytes: int | None = None) -> DataFrame:
     """Scheduling half of the round: returns the admitted batch with
     ``host_rank`` (the within-host admission sequence).
@@ -141,22 +140,9 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
     request; here one round = one page of work, the next round resumes
     after it, like ``startAfter``). Deterministic total order
     (priority, discovery_time, url) → Spark plans a distributed top-K
-    (TakeOrderedAndProject), never a full global sort.
-
-    ``cap_mode`` picks HOW the cap selects its rows
-    (``politeness.cap_round``):
-
-    - ``"page"`` (default, reference-parity): global top-``global_cap``
-      by (priority, discovery_time, url) — one whale host full of
-      high-priority URLs can take the whole page (exactly like a
-      listing page would).
-    - ``"fair"``: largest-remainder apportionment
-      (operators/politeness.host_budget) — each host gets a quota
-      proportional to its admitted backlog (Σ quotas = cap exactly when
-      binding) and keeps its ``host_rank ≤ quota`` prefix, so the round
-      budget spreads across hosts instead of starving the tail. Adds
-      one small per-host aggregate over the admitted batch plus a
-      broadcast join of the quota table.
+    (TakeOrderedAndProject), never a full global sort. One whale host
+    full of high-priority URLs can take the whole page, exactly like a
+    listing page would.
     """
     df = prepare_frontier(frontier, cfg)
     if narrow:
@@ -191,7 +177,7 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
     else:
         admitted = politeness.admit_per_host(df, cfg,
                                              host_budgets=host_budgets)
-    return politeness.cap_round(admitted, global_cap, cap_mode)
+    return politeness.cap_round(admitted, global_cap)
 
 
 def process(admitted: DataFrame, cfg: CrawlConfig,
@@ -199,30 +185,9 @@ def process(admitted: DataFrame, cfg: CrawlConfig,
             robots_rules: DataFrame | None = None,
             robots_rules_bytes: int | None = None,
             object_store_root=None,
-            if_none_match_col: str | None = None,
-            prefetch_known: DataFrame | None = None) -> DataFrame:
+            if_none_match_col: str | None = None) -> DataFrame:
     """Processing half: filter chain + fetch + extract + project. Returns
     the wide documents rows with status routing columns.
-
-    ``prefetch_known``: enables the pre-fetch content-identity dedup tier
-    (operators/dedup.prefetch_dedup) in front of the fetch stage — a
-    table of already-indexed rows ``(e_tag, size, url,
-    resp_content_type, contents)``. Pending rows are identity-routed and
-    only ``fetch_action == 'fetch'`` rows hit the store; ``copy_batch``
-    rows take the fetched columns from their in-batch twin (exact — the
-    twin's raw bytes), ``copy_known`` rows re-materialize content from
-    the prior crawl's extracted text (exact for UTF-8 objects — the
-    encode/decode round-trips; binary objects were stored with
-    ``contents=''`` under ignore_error and round-trip to the same
-    outcome). The routing's ``fetch_action`` / ``src_url`` lineage
-    columns exist through the chain but are dropped by the final
-    objectMap projection (P5's fixed field surface) — the observable
-    contract is the GET count (CountingFsStoreSpec) and the unchanged
-    stored output. Interplay with conditional GETs
-    (``if_none_match_col``): identity routing runs FIRST, so a
-    copy_known row skips its conditional GET and re-stores instead of
-    304-ing — same content either way; a copy_batch row inherits its
-    twin's 304 (``_not_modified``) and routes "unchanged" with it.
 
     Routing order for fetched rows mirrors the reference exactly:
     urlFilter (E1) → robots (E1, when ``robots_rules`` is given — north-rule
@@ -238,6 +203,10 @@ def process(admitted: DataFrame, cfg: CrawlConfig,
     (bucket, key)) or ``object_store_root`` (the production-shaped stage —
     ``sources.object_store.fetch_objects`` issues batched GETs from inside
     ``mapInPandas``). Exactly one may be given.
+
+    ``if_none_match_col`` (store mode only): a column of prior ETags. Each
+    GET goes out with ``IfNoneMatch``; a 304 carries no body and routes
+    the row to ``unchanged`` before any pending-only stage sees it.
     """
     if payloads is not None and object_store_root is not None:
         raise ValueError("pass either payloads or object_store_root, not both")
@@ -251,35 +220,6 @@ def process(admitted: DataFrame, cfg: CrawlConfig,
         df = apply_robots_filter(df, robots_rules, cfg,
                                  rules_bytes=robots_rules_bytes)
     if payloads is not None or object_store_root is not None:
-        # identity routing needs the listing's (etag, size) on the
-        # candidates; legacy frontiers without them degrade to fetch-all
-        if prefetch_known is not None and not {"etag", "size"} <= \
-                set(df.columns):
-            prefetch_known = None
-        copies = rest = routed_cols = known_rep = None
-        if prefetch_known is not None:
-            from fess_ds_s3_spark.operators.dedup import prefetch_dedup
-            pending = F.col("status") == STATUS_PENDING
-            # one representative per content identity, min-URL winner —
-            # the SAME winner prefetch_dedup's known-side reduction picks,
-            # so src_url and the copied columns agree. (The indexed
-            # output column is e_tag; the frontier/listing column it
-            # projects from is etag — bridge here.)
-            known_rep = (prefetch_known
-                         .filter(F.col("e_tag").isNotNull())
-                         .groupBy(F.col("e_tag").alias("etag"), "size")
-                         .agg(F.min(F.struct("url", "resp_content_type",
-                                             "contents")).alias("_k")))
-            rest = df.filter(~pending)
-            routed = prefetch_dedup(
-                df.filter(pending),
-                known_rep.select("etag", "size",
-                                 F.col("_k.url").alias("url")),
-                etag_col="etag")
-            routed_cols = routed.columns
-            copies = routed.filter(F.col("fetch_action") != "fetch")
-            # only fetch_action == 'fetch' rows hit the store
-            df = routed.filter(F.col("fetch_action") == "fetch")
         if payloads is not None:
             df = fetch_payloads(df, payloads)
         else:
@@ -293,66 +233,18 @@ def process(admitted: DataFrame, cfg: CrawlConfig,
             df = fetch_objects(df, object_store_root,
                                fetch_concurrency=cfg.number_of_threads,
                                if_none_match_col=if_none_match_col)
-        if prefetch_known is not None:
-            # the fetched frame feeds TWO plan branches (its own rows and
-            # the copy_batch join's source side); without a cache the GET
-            # subtree executes once per branch and every representative
-            # is fetched twice. The frame is small by construction: one
-            # row per distinct content identity of a budget-bounded batch.
-            df = df.persist()
-            # columns the fetch stage ADDED (content, resp_content_type,
-            # _fetched, _fetch_error, _not_modified, payload extras) —
-            # copy rows take them from their source instead of a GET
-            added = [c for c in df.columns if c not in routed_cols]
-            src = df.select(F.col("url").alias("src_url"),
-                            *[F.col(c).alias(f"_src_{c}") for c in added])
-            null_added = [F.lit(None).cast(dict(df.dtypes)[c]).alias(c)
-                          for c in added]
-            # copy_batch: the in-batch twin's fetched columns verbatim
-            # (its miss/error routes the copy identically — same object
-            # identity, same store outcome)
-            batch = (copies.filter(F.col("fetch_action") == "copy_batch")
-                     .join(src, "src_url", "left")
-                     .select(*routed_cols,
-                             *[F.col(f"_src_{c}").alias(c) for c in added]))
-            # copy_known: prior crawl's row; content re-materializes from
-            # the extracted text so downstream sniff/extract see bytes
-            known_side = known_rep.select(
-                "etag", "size",
-                F.col("_k.resp_content_type").alias("_known_ct"),
-                F.col("_k.contents").alias("_known_contents"))
-            known_over = {
-                "content": F.encode(F.col("_known_contents"), "UTF-8"),
-                "resp_content_type": F.col("_known_ct"),
-                "_fetched": F.lit(True),
-            }
-            known = (copies.filter(F.col("fetch_action") == "copy_known")
-                     .join(known_side, ["etag", "size"], "left")
-                     .select(*routed_cols,
-                             *[known_over[c].cast(dict(df.dtypes)[c])
-                               .alias(c) if c in known_over else
-                               F.lit(None).cast(dict(df.dtypes)[c]).alias(c)
-                               for c in added]))
-            df = (df.unionByName(batch).unionByName(known)
-                  .unionByName(rest.select(*[
-                      F.col(c) for c in rest.columns]
-                      + null_added
-                      + [F.lit(None).cast("string").alias("fetch_action"),
-                         F.lit(None).cast("string").alias("src_url")]),
-                      allowMissingColumns=True))
-        if object_store_root is not None and if_none_match_col is not None:
-            # conditional-fetch 304: the object did not change since
-            # the prior ETag — no body came back; the row is a
-            # first-class "unchanged" outcome (previously indexed doc
-            # stays current), invisible to every downstream
-            # pending-only routing stage. Runs AFTER the prefetch union
-            # so a copy_batch row inherits its twin's 304 too.
-            df = df.withColumn(
-                "status",
-                F.when(F.coalesce(F.col("_not_modified"), F.lit(False))
-                       & (F.col("status") == STATUS_PENDING),
-                       F.lit(STATUS_UNCHANGED))
-                .otherwise(F.col("status")))
+            if if_none_match_col is not None:
+                # conditional-fetch 304: the object did not change since
+                # the prior ETag — no body came back; the row is a
+                # first-class "unchanged" outcome (previously indexed doc
+                # stays current), invisible to every downstream
+                # pending-only routing stage.
+                df = df.withColumn(
+                    "status",
+                    F.when(F.coalesce(F.col("_not_modified"), F.lit(False))
+                           & (F.col("status") == STATUS_PENDING),
+                           F.lit(STATUS_UNCHANGED))
+                    .otherwise(F.col("status")))
         # X1 fan-out: the reference's fixedThreadPool(number_of_threads)
         # parallelizes per-object fetch+extract; the analog is the partition
         # width of the Python extraction stage. The knob is a FLOOR, not a
@@ -391,16 +283,14 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
               object_store_root=None,
               if_none_match_col: str | None = None,
               global_cap: int | None = None,
-              cap_mode: str = "page",
-              bloom_size_bytes: int | None = None,
-              prefetch_known: DataFrame | None = None) -> RoundResult:
+              bloom_size_bytes: int | None = None) -> RoundResult:
     """Full round. The admitted batch is the pivot: it is small (budget-
     bounded), so caching it avoids recomputing the scheduling shuffle for
     each of the three sink writes + the seen delta."""
     admitted = schedule(
         frontier, cfg, seen_exact=seen_exact, blooms=blooms,
         host_budgets=host_budgets, narrow=True, global_cap=global_cap,
-        cap_mode=cap_mode, bloom_size_bytes=bloom_size_bytes)
+        bloom_size_bytes=bloom_size_bytes)
     # late materialization: join the wide frontier columns back onto the
     # (budget-bounded, small) admitted batch only. One row per url on the
     # right, chosen by min (priority, discovery_time, …) — the same winner
@@ -428,8 +318,7 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
     processed = process(admitted, cfg, payloads, robots_rules=robots_rules,
                         robots_rules_bytes=robots_rules_bytes,
                         object_store_root=object_store_root,
-                        if_none_match_col=if_none_match_col,
-                        prefetch_known=prefetch_known)
+                        if_none_match_col=if_none_match_col)
     return RoundResult(
         admitted=admitted,
         processed=processed,

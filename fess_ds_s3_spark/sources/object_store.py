@@ -15,7 +15,14 @@ The production shape of the reference's two S3 calls:
   payload-table join (``operators.extract.fetch_payloads``): ``content``,
   ``resp_content_type``, ``_fetched``; a missing key leaves ``_fetched``
   null and routes to E2 via ``route_fetch_miss``
-  (NoSuchKeyException, ``AmazonS3DataStore.java:279-284``).
+  (NoSuchKeyException, ``AmazonS3DataStore.java:279-284``). The stage has
+  no retry loop of its own: the client retries throttles and 5xx
+  underneath, and an error it still raises routes the row to E2 under the
+  exception name. Crawl rounds GET conditionally (``IfNoneMatch``)
+  whenever their frontier carries the prior ETag as ``prev_etag``.
+- **robots.txt**: :func:`fetch_robots_bodies` GETs each bucket's robots
+  object in one driver-side loop. Hosts are buckets here, and the table is
+  fetched once per crawl.
 
 The store is **pluggable**: every Spark-side operator takes a
 :class:`StoreSpec` — a small picklable description that each task
@@ -49,7 +56,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -57,7 +63,6 @@ from typing import Any, Iterator, Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, BooleanType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
@@ -256,9 +261,8 @@ class _CountingStore:
 @dataclass(frozen=True)
 class CountingFsStoreSpec:
     """FsObjectStore that logs every GET to ``log_path`` — the evidence
-    double for fetch-avoidance features (prefetch identity dedup,
-    conditional GETs): count the log's lines to know how many GETs the
-    crawl actually issued."""
+    double for fetch-avoidance features such as conditional GETs: count
+    the log's lines to know how many GETs the crawl actually issued."""
     root: str
     log_path: str
 
@@ -582,75 +586,9 @@ def fetch_robots_bodies(spark: SparkSession, root: "str | StoreSpec",
     return spark.createDataFrame(rows, "host string, body string")
 
 
-def fetch_robots_bodies_distributed(spark: SparkSession,
-                                    root: "str | StoreSpec",
-                                    cfg: CrawlConfig, *,
-                                    fetch_concurrency: int = 1) -> DataFrame:
-    """Distributed variant of :func:`fetch_robots_bodies`: the per-bucket
-    robots GETs run through the production fetch stage (``fetch_objects``
-    inside ``mapInPandas``) instead of a driver-side loop. Same output
-    contract ``(host, body)``; buckets without a robots object contribute
-    no rows (RFC 9309: absent robots ⇒ all allowed; non-NoSuchKey store
-    errors likewise yield no rules rather than failing the crawl).
-
-    Use when the 'host' population is large — an object-store crawl has
-    hosts = buckets (tiny; driver loop is fine), but a web-shaped 100×
-    crawl fetching millions of robots files needs the GETs fanned out."""
-    from urllib.parse import urlsplit
-
-    from fess_ds_s3_spark.functions.urls import object_url_py
-    store = as_store_spec(root).connect()
-    names = store.buckets()
-    if cfg.buckets:
-        names = [b for b in names if b in cfg.buckets]
-    if not names:
-        return spark.createDataFrame([], "host string, body string")
-    rows = [(b,
-             urlsplit(object_url_py(b, "", cfg.region,
-                                    cfg.endpoint)).hostname,
-             ROBOTS_KEY)
-            for b in names]
-    targets = spark.createDataFrame(rows, "bucket string, host string, "
-                                          "key string") \
-        .repartition(min(len(rows), 256))
-    fetched = fetch_objects(targets, root,
-                            fetch_concurrency=fetch_concurrency)
-
-    # replace-decoding (driver-side twin uses errors="replace"; Spark 4's
-    # built-in decode REPORTS malformed input under ANSI instead)
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(StringType())
-    def _decode(content: pd.Series) -> pd.Series:
-        return content.map(lambda b: None if b is None
-                           else bytes(b).decode("utf-8", "replace"))
-
-    return (fetched.filter(F.col("_fetched").isNotNull())
-            .select("host", _decode("content").alias("body")))
-
-
-def default_retryable(exc: Exception) -> bool:
-    """Transient-error predicate for the fetch stage's retry loop: network
-    hiccups and throttle/5xx-shaped store errors retry; semantic outcomes
-    (missing key, conditional-GET 304) and everything else surface
-    immediately. Matches by type for Python's own transient families and by
-    the S3 error-code vocabulary for client errors (boto3 raises them as
-    ClientError whose str() carries the code)."""
-    if isinstance(exc, (NoSuchKeyError, NotModifiedError)):
-        return False
-    if isinstance(exc, (ConnectionError, TimeoutError, OSError)):
-        return True
-    transient = ("SlowDown", "Throttling", "RequestTimeout",
-                 "InternalError", "ServiceUnavailable", "503")
-    return any(code in str(exc) for code in transient)
-
-
 def fetch_objects(admitted: DataFrame, root: "str | StoreSpec", *,
                   fetch_concurrency: int = 1,
-                  if_none_match_col: str | None = None,
-                  retries: int = 0,
-                  retry_backoff_s: float = 0.05,
-                  retryable=default_retryable) -> DataFrame:
+                  if_none_match_col: str | None = None) -> DataFrame:
     """S4 production fetch: batched GETs from inside ``mapInPandas``.
 
     Output contract matches :func:`~fess_ds_s3_spark.operators.extract.
@@ -682,7 +620,7 @@ def fetch_objects(admitted: DataFrame, root: "str | StoreSpec", *,
     admissions; global concurrency ≤ tasks × fetch_concurrency.
 
     ``if_none_match_col``: name of an input column carrying a prior ETag
-    (e.g. ``prev_e_tag`` from an incremental listing diff) — each GET goes
+    (e.g. ``prev_etag`` from an incremental listing diff) — each GET goes
     out conditional (``IfNoneMatch``), and an unchanged object transfers NO
     body: the row comes back with ``_fetched`` true, ``content`` null and a
     ``_not_modified`` true flag (the column is only present when the
@@ -692,20 +630,10 @@ def fetch_objects(admitted: DataFrame, root: "str | StoreSpec", *,
     changed candidates, and the conditional GET makes the skip exact even
     when an object reverts between the listing and the fetch. Null/empty
     prior ETags fetch unconditionally.
-
-    ``retries``: bounded per-object retry budget for TRANSIENT store errors
-    (``retryable`` predicate, default :func:`default_retryable` — throttle
-    / timeout / connection shapes; a missing key or 304 never retries).
-    Exponential backoff ``retry_backoff_s * 2^attempt`` sleeps inside the
-    GET pool's worker thread, so one throttled object never stalls the
-    whole batch. After the budget is spent the row routes to E2 under the
-    exception name exactly like an unretried error — the crawl continues.
     """
     spec = as_store_spec(root)
     if fetch_concurrency < 1:
         raise ValueError("fetch_concurrency must be >= 1")
-    if retries < 0:
-        raise ValueError("retries must be >= 0")
     if if_none_match_col is not None \
             and if_none_match_col not in admitted.columns:
         raise ValueError(f"if_none_match_col {if_none_match_col!r} "
@@ -734,21 +662,15 @@ def fetch_objects(admitted: DataFrame, root: "str | StoreSpec", *,
             kw = {}
             if conditional and etag is not None and etag != "":
                 kw["if_none_match"] = etag
-            attempt = 0
-            while True:
-                try:
-                    data, ctype = store.get_object(bucket, key, **kw)
-                    return data, ctype, True, None, False
-                except NoSuchKeyError:
-                    return None, None, None, None, None
-                except NotModifiedError:
-                    return None, None, True, None, True
-                except Exception as exc:  # per-object store error
-                    if attempt < retries and retryable(exc):
-                        time.sleep(retry_backoff_s * (2 ** attempt))
-                        attempt += 1
-                        continue
-                    return None, None, None, type(exc).__name__, None
+            try:
+                data, ctype = store.get_object(bucket, key, **kw)
+                return data, ctype, True, None, False
+            except NoSuchKeyError:
+                return None, None, None, None, None
+            except NotModifiedError:
+                return None, None, True, None, True
+            except Exception as exc:  # per-object store error
+                return None, None, None, type(exc).__name__, None
 
         pool = (ThreadPoolExecutor(max_workers=fetch_concurrency)
                 if fetch_concurrency > 1 else None)

@@ -286,12 +286,6 @@ class SnapshotTable:
         return self.spark.read.option("mergeSchema", "true").parquet(
             *[os.path.join(self.root, d) for d in dirs])
 
-    def read_or_empty(self, schema, snapshot_id: int | None = None) -> DataFrame:
-        try:
-            return self.read(snapshot_id)
-        except KeyError:
-            return self.spark.createDataFrame([], schema)
-
     def metadata(self, snapshot_id: int | None = None) -> dict[str, Any]:
         snap = self._snapshot(self._load(), snapshot_id)
         return snap.metadata if snap else {}

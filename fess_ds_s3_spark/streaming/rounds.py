@@ -9,8 +9,10 @@ implementation to keep in sync.
 
 Semantics mapping:
 
-- micro-batch = scheduling round: each non-empty batch is appended to the
-  frontier table and run as the driver's next committed round.
+- micro-batch = drained backlog: each non-empty batch is seeded into the
+  frontier table (canonicalized like any seed) and the driver then runs
+  committed rounds until one admits nothing, so rows that per-host budgets
+  held back are crawled before the next batch rather than waiting for it.
 - the seen-set lives in the same snapshot tables as batch mode, so a crawl
   can switch between batch and streaming modes between rounds.
 - ordering: within a micro-batch, admission order is the engine's canonical
@@ -27,6 +29,7 @@ end.
 
 from __future__ import annotations
 
+import sys
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,25 +54,26 @@ def continuous_crawl(spark: SparkSession, frontier_stream: DataFrame,
                      host_budgets: DataFrame | None = None,
                      on_batch: Callable[[int, int], None] | None = None,
                      ) -> StreamingQuery:
-    """Run the engine round per micro-batch via foreachBatch.
+    """Run the engine rounds per micro-batch via foreachBatch.
 
-    Each micro-batch is seeded into the driver's frontier table and run as
-    the next committed round — restart recovery comes from BOTH the
-    streaming checkpoint (source offsets) and the snapshot tables (engine
-    state), which commit in that order; a replayed batch is deduplicated by
-    the seen-set, keeping the sink exactly-once at the URL level.
+    Each micro-batch is seeded into the driver's frontier table and drained
+    with ``CrawlDriver.run``: committed rounds until one admits nothing.
+    ``on_batch(round_id, admitted)`` is called once per round. Restart
+    recovery comes from BOTH the streaming checkpoint (source offsets) and
+    the snapshot tables (engine state), which commit in that order; a
+    replayed batch is deduplicated by the seen-set, keeping the sink
+    exactly-once at the URL level.
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        driver.frontier.append(batch_df, {"kind": "stream-batch",
-                                          "batch_id": batch_id})
-        round_id = driver.last_round() + 1
-        summary = driver.run_round(round_id, payloads=payloads,
-                                   host_budgets=host_budgets)
-        if on_batch is not None:
-            on_batch(round_id, summary.admitted)
+        driver.seed(batch_df)
+        # no round bound: run() stops at the first round that admits 0
+        for summary in driver.run(sys.maxsize, payloads=payloads,
+                                  host_budgets=host_budgets):
+            if on_batch is not None:
+                on_batch(summary.round_id, summary.admitted)
 
     return (frontier_stream.writeStream
             .option("checkpointLocation", checkpoint_dir)

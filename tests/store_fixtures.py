@@ -2,8 +2,8 @@
 
 Each spec is a picklable description that a Spark task ``connect()``s into
 an :class:`~fess_ds_s3_spark.sources.object_store.FsObjectStore` wrapped
-with one injected behaviour: per-GET latency, a permanent store error for
-marked keys, or transient failures before success.
+with one injected behaviour: per-GET latency or a permanent store error
+for marked keys.
 
 Executors unpickle these classes. The module registers itself with
 cloudpickle so they travel by value: Python workers need not import the
@@ -79,42 +79,3 @@ class FaultyFsStoreSpec:
 
     def connect(self) -> _FaultyStore:
         return _FaultyStore(FsObjectStore(self.root), self.fail_key_marker)
-
-
-class _FlakyStore:
-    """Fail the first ``fail_times`` GET attempts of every key with a
-    transient-looking error, then succeed — the retry-policy test double.
-    Attempt counters are per-connect (per Spark task), guarded by a lock
-    because the fetch stage's GET pool is multi-threaded."""
-
-    def __init__(self, inner, fail_times: int):
-        import threading
-        self._inner = inner
-        self._fail_times = fail_times
-        self._attempts: dict[tuple[str, str], int] = {}
-        self._lock = threading.Lock()
-
-    def get_object(self, bucket: str, key: str, **kw) -> tuple[bytes, str]:
-        with self._lock:
-            seen = self._attempts.get((bucket, key), 0)
-            self._attempts[(bucket, key)] = seen + 1
-        if seen < self._fail_times:
-            raise ConnectionError(f"transient failure {seen + 1} for {key}")
-        return self._inner.get_object(bucket, key, **kw)
-
-    def __getattr__(self, name):
-        return getattr(self._inner, name)
-
-
-@dataclass(frozen=True)
-class FlakyFsStoreSpec:
-    """FsObjectStore whose every GET fails ``fail_times`` times before
-    succeeding — exercises the fetch stage's bounded retry loop without a
-    real flaky store."""
-    root: str
-    fail_times: int = 1
-
-    def connect(self) -> _FlakyStore:
-        return _FlakyStore(FsObjectStore(self.root), self.fail_times)
-
-

@@ -531,100 +531,6 @@ class TestVacuum:
         assert _admission_set(driver) == seen_before
 
 
-class TestRetryFailures:
-    def _payloads_for(self, spark, frontier):
-        from fess_ds_s3_spark.sources.synthetic import PAYLOAD_SCHEMA
-        rows = [(r.bucket, r.key, b"hello", "text/plain", 5)
-                for r in frontier.select("bucket", "key")
-                .distinct().collect()]
-        return spark.createDataFrame(rows, PAYLOAD_SCHEMA)
-
-    def test_transient_failures_reopened_then_succeed(self, spark, cfg,
-                                                      tmp_path):
-        from fess_ds_s3_spark.sources.synthetic import PAYLOAD_SCHEMA
-        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
-        frontier = synthetic.synth_frontier(spark, 30, n_hosts=2, seed=11)
-        driver.seed(frontier)
-        # round 0: payloads ONLY for oversize listings → those rows fail
-        # MaxLengthExceededException (permanent; fetch-miss routes first,
-        # so a missing payload must be size-ok to read as transient);
-        # size-ok rows have no payload and fail NoSuchKeyException
-        oversize = frontier.filter(F.col("size") > 10_000_000)
-        driver.run_round(0, payloads=self._payloads_for(spark, oversize))
-        fails = driver.read_committed("failures")
-        transient = {r.url for r in fails.filter(
-            F.col("error_name") == "NoSuchKeyException").collect()}
-        permanent = {r.url for r in fails.filter(
-            F.col("error_name") == "MaxLengthExceededException").collect()}
-        assert transient and permanent
-
-        n = driver.retry_failures(max_attempts=3)
-        assert n == len(transient)  # permanent errors never re-opened
-
-        # round 1 with real payloads: every retried URL succeeds
-        driver.run_round(1, payloads=self._payloads_for(spark, frontier))
-        indexed = {r.url for r in
-                   driver.read_committed("indexed").collect()}
-        assert transient <= indexed
-        assert not (permanent & indexed)
-        # succeeded URLs are not re-opened again
-        assert driver.retry_failures(max_attempts=3) == 0
-
-    def test_attempt_budget_exhausts(self, spark, cfg, tmp_path):
-        from fess_ds_s3_spark.sources.synthetic import PAYLOAD_SCHEMA
-        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
-        driver.seed(synthetic.synth_frontier(spark, 12, n_hosts=2, seed=3))
-        empty = spark.createDataFrame([], PAYLOAD_SCHEMA)
-        driver.run_round(0, payloads=empty)
-        # attempt 2 (max_attempts=2): re-opened once, fails again
-        assert driver.retry_failures(max_attempts=2) > 0
-        driver.run_round(1, payloads=empty)
-        # budget exhausted: nothing left to re-open
-        assert driver.retry_failures(max_attempts=2) == 0
-        with pytest.raises(ValueError, match="max_attempts"):
-            driver.retry_failures(max_attempts=1)
-
-    def test_resume_replay_with_retries_is_deterministic(self, spark, cfg,
-                                                         tmp_path):
-        from fess_ds_s3_spark.sources.synthetic import PAYLOAD_SCHEMA
-        wh = str(tmp_path / "wh")
-        d1 = CrawlDriver(spark, wh, cfg)
-        d1.seed(synthetic.synth_frontier(spark, 20, n_hosts=2, seed=7))
-        empty = spark.createDataFrame([], PAYLOAD_SCHEMA)
-        d1.run_round(0, payloads=empty)
-        d1.retry_failures(max_attempts=3)
-        d1.run_round(1, payloads=empty)
-        before = {(r.url, r.round) for r in
-                  d1.read_committed("failures").collect()}
-        # re-open the warehouse: committed state identical
-        d2 = CrawlDriver(spark, wh, cfg)
-        after = {(r.url, r.round) for r in
-                 d2.read_committed("failures").collect()}
-        assert before == after
-        # round-1 failures exist: the retried URLs actually re-ran
-        assert any(rnd == 1 for _, rnd in after)
-
-    def test_latest_permanent_failure_blocks_reopen(self, spark, cfg,
-                                                    tmp_path):
-        """A URL that missed transiently in round 0 but failed MaxLength
-        once listed oversize in round 1 must NOT be re-opened: its most
-        recent failure is permanent."""
-        from fess_ds_s3_spark.sources.synthetic import PAYLOAD_SCHEMA
-        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
-        frontier = synthetic.synth_frontier(spark, 24, n_hosts=2, seed=13)
-        driver.seed(frontier)
-        empty = spark.createDataFrame([], PAYLOAD_SCHEMA)
-        driver.run_round(0, payloads=empty)        # all NoSuchKey
-        assert driver.retry_failures(max_attempts=5) > 0
-        # round 1 with payloads: oversize listings now fail MaxLength
-        driver.run_round(1, payloads=self._payloads_for(spark, frontier))
-        r1_fails = driver.read_committed("failures") \
-            .filter(F.col("round") == 1)
-        assert {r.error_name for r in r1_fails.collect()} \
-            == {"MaxLengthExceededException"}
-        assert driver.retry_failures(max_attempts=5) == 0
-
-
 class TestAuthorityIntegration:
     def test_authority_priority_fills_capped_round(self, spark, cfg,
                                                    tmp_path):

@@ -261,8 +261,8 @@ class TestIncrementalCycles:
         assert len(live) == 6
 
     def test_conditional_fetch_skips_reverted_object(self, spark, tmp_path):
-        """conditional_fetch=True: cycle candidates carry the prior ETag,
-        the round GETs IfNoneMatch, and an object that REVERTED between
+        """Store mode: cycle candidates carry the prior ETag, the round
+        GETs IfNoneMatch, and an object that REVERTED between
         the listing and the fetch (the listing-to-fetch race) transfers no
         body — the row lands as status 'unchanged', the previously indexed
         document stays current, and stats record the 'unchanged' action."""
@@ -272,8 +272,7 @@ class TestIncrementalCycles:
         cfg = CrawlConfig(region="r", default_host_budget=100,
                           bloom_expected=1000, seen_partitions=2)
         driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg,
-                             object_store_root=root,
-                             conditional_fetch=True)
+                             object_store_root=root)
 
         # cycle 1: full crawl; prev_etag is all-null → unconditional GETs
         driver.begin_incremental_cycle(self._listing(spark, root, cfg))
@@ -307,11 +306,41 @@ class TestIncrementalCycles:
         assert ("b@docs/a.txt", "FINISHED") in actions
 
     def test_conditional_fetch_requires_store(self, spark, tmp_path):
+        """Conditional GETs run only in the store fetch stage: payload-mode
+        cycle candidates still carry prev_etag, but the rounds fetch
+        unconditionally, so the reverted object is stored again instead
+        of landing as 'unchanged'."""
         from fess_ds_s3_spark.config import CrawlConfig
         from fess_ds_s3_spark.plans.crawl import CrawlDriver
-        with pytest.raises(ValueError):
-            CrawlDriver(spark, str(tmp_path / "wh"),
-                        CrawlConfig(region="r"), conditional_fetch=True)
+        from fess_ds_s3_spark.sources.object_store import FsObjectStore
+        root = self._store(tmp_path)
+        cfg = CrawlConfig(region="r", default_host_budget=100,
+                          bloom_expected=1000, seen_partitions=2)
+        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
+
+        def payloads():
+            store = FsObjectStore(root)
+            rows = [("b", f"docs/{k}.txt",
+                     *store.get_object("b", f"docs/{k}.txt"))
+                    for k in "abcde"]
+            return spark.createDataFrame(
+                rows, "bucket string, key string, content binary, "
+                      "resp_content_type string")
+
+        driver.begin_incremental_cycle(self._listing(spark, root, cfg))
+        driver.run(5, payloads=payloads())
+        with open(f"{root}/b/docs/a.txt", "w") as f:
+            f.write("ALPHA-CHANGED")
+        with open(f"{root}/b/docs/c.txt", "w") as f:
+            f.write("charlie-transient")
+        c2 = driver.begin_incremental_cycle(self._listing(spark, root, cfg))
+        assert c2.candidates == 2
+        assert "prev_etag" in driver.frontier.read().columns
+        with open(f"{root}/b/docs/c.txt", "w") as f:
+            f.write("charlie")
+        s2 = driver.run(5, payloads=payloads())
+        assert sum(s.unchanged for s in s2) == 0
+        assert sum(s.stored for s in s2) == 2
 
     def test_unchanged_cycle_is_a_noop(self, spark, tmp_path):
         from fess_ds_s3_spark.config import CrawlConfig

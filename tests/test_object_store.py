@@ -666,23 +666,6 @@ class TestAutoSharding:
                             prefixes=["a"], auto_shard_target=2)
 
 
-class TestDistributedRobotsFetch:
-    def test_equals_driver_side_fetch(self, spark, store):
-        """fetch_robots_bodies_distributed ≡ the driver-side loop: same
-        (host, body) rows; buckets without robots.txt contribute none."""
-        from fess_ds_s3_spark.sources.object_store import (
-            fetch_robots_bodies, fetch_robots_bodies_distributed)
-        store.put_object("fess-0", "robots.txt",
-                         b"User-agent: *\nDisallow: /files/doc-1\n")
-        cfg = CrawlConfig(region=REGION)
-        a = sorted(map(tuple, fetch_robots_bodies(
-            spark, store.root, cfg).collect()))
-        b = sorted(map(tuple, fetch_robots_bodies_distributed(
-            spark, store.root, cfg, fetch_concurrency=4).collect()))
-        assert a == b
-        assert len(a) == 1 and a[0][0] == f"fess-0.s3.{REGION}.amazonaws.com"
-
-
 class TestConditionalFetch:
     """if_none_match_col: conditional GETs skip unchanged bodies (304)."""
 
@@ -752,31 +735,11 @@ class TestConditionalFetch:
 
 
 class TestFetchRetry:
-    """Bounded retry of transient store errors inside the fetch stage."""
-
-    def _admitted(self, spark, store):
-        rows = [(b, f"files/doc-{i}.txt")
-                for b in ("fess-0", "fess-1") for i in range(5)]
-        return spark.createDataFrame(rows, "bucket string, key string")
-
-    def test_retries_recover_flaky_store(self, spark, store):
-        from tests.store_fixtures import FlakyFsStoreSpec
-        adm = self._admitted(spark, store).coalesce(1)
-        out = fetch_objects(adm, FlakyFsStoreSpec(store.root, fail_times=2),
-                            retries=2, retry_backoff_s=0.001).collect()
-        assert all(r["_fetched"] and r["_fetch_error"] is None for r in out)
-
-    def test_exhausted_budget_routes_error_row(self, spark, store):
-        from tests.store_fixtures import FlakyFsStoreSpec
-        adm = self._admitted(spark, store).coalesce(1)
-        out = fetch_objects(adm, FlakyFsStoreSpec(store.root, fail_times=3),
-                            retries=1, retry_backoff_s=0.001).collect()
-        assert all(r["_fetch_error"] == "ConnectionError"
-                   and r["_fetched"] is None for r in out)
+    """The fetch stage has no retry loop of its own: the store client
+    retries transient errors underneath, and one GET per row goes out."""
 
     def test_retry_with_pool_and_conditional(self, spark, store):
         import hashlib
-        from tests.store_fixtures import FlakyFsStoreSpec
         rows = []
         for b in ("fess-0", "fess-1"):
             for i in range(5):
@@ -785,28 +748,9 @@ class TestFetchRetry:
                              etag if i % 2 == 0 else "stale"))
         adm = spark.createDataFrame(
             rows, "bucket string, key string, prior string").coalesce(1)
-        out = fetch_objects(adm, FlakyFsStoreSpec(store.root, fail_times=1),
-                            fetch_concurrency=4, retries=2,
-                            retry_backoff_s=0.001,
+        out = fetch_objects(adm, store.root, fetch_concurrency=4,
                             if_none_match_col="prior").collect()
         for r in out:
             i = int(r["key"][-5])
             assert r["_not_modified"] == (i % 2 == 0)
             assert r["_fetch_error"] is None
-
-    def test_default_retryable_predicate(self):
-        from fess_ds_s3_spark.sources.object_store import (NoSuchKeyError,
-                                                           NotModifiedError,
-                                                           default_retryable)
-        assert default_retryable(ConnectionError("boom"))
-        assert default_retryable(TimeoutError())
-        assert default_retryable(RuntimeError("SlowDown: reduce rate"))
-        assert default_retryable(RuntimeError("503 ServiceUnavailable"))
-        assert not default_retryable(NoSuchKeyError("b/k"))
-        assert not default_retryable(NotModifiedError("b/k"))
-        assert not default_retryable(RuntimeError("AccessDenied"))
-
-    def test_negative_retries_rejected(self, spark, store):
-        with pytest.raises(ValueError):
-            fetch_objects(self._admitted(spark, store), store.root,
-                          retries=-1)

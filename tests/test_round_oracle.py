@@ -207,64 +207,3 @@ class TestSyntheticEquivalence:
         assert got_failed == set(expected.failed)
         assert sorted(r.url for r in result.stored.collect()) == \
             sorted(expected.stored_urls)
-
-
-class TestFairCap:
-    """cap_mode='fair': largest-remainder round budget vs the page top-K."""
-
-    def _frontier(self, spark):
-        # whale host w: 40 urls at TOP priority; 4 tail hosts: 10 each at
-        # worse priority — a page cap of 20 starves the tail entirely
-        rows = []
-        for i in range(40):
-            rows.append((f"https://w.example/{i:03d}", "w.example",
-                         "b", f"k{i:03d}", 0, 100, 0))
-        for h in range(4):
-            for i in range(10):
-                rows.append((f"https://t{h}.example/{i:03d}",
-                             f"t{h}.example", "b", f"t{h}k{i:03d}",
-                             5, 100, 0))
-        return spark.createDataFrame(
-            rows, "url string, host string, bucket string, key string, "
-                  "priority int, size long, discovery_time long")
-
-    def _cfg(self):
-        return CrawlConfig(region=REGION, default_host_budget=100,
-                           salt_threshold=10 ** 9)
-
-    def test_page_mode_starves_fair_mode_spreads(self, spark):
-        f = self._frontier(spark)
-        page = round_plan.schedule(f, self._cfg(), global_cap=20,
-                                   cap_mode="page")
-        by_host = {r["host"]: r["count"] for r in
-                   page.groupBy("host").count().collect()}
-        assert by_host == {"w.example": 20}  # the whale takes the page
-        fair = round_plan.schedule(f, self._cfg(), global_cap=20,
-                                   cap_mode="fair")
-        fair_rows = fair.collect()
-        by_host = {}
-        for r in fair_rows:
-            by_host[r.host] = by_host.get(r.host, 0) + 1
-        # largest remainder over backlog 40/10/10/10/10, budget 20:
-        # whale 10, each tail host 2.5 → floors 10,2,2,2,2 + 2 bumps
-        assert sum(by_host.values()) == 20
-        assert by_host["w.example"] == 10
-        assert all(by_host[f"t{h}.example"] >= 2 for h in range(4))
-        # each host keeps its host_rank prefix (admission order intact)
-        for host, n in by_host.items():
-            ranks = sorted(r.host_rank for r in fair_rows
-                           if r.host == host)
-            assert ranks == list(range(1, n + 1))
-
-    def test_fair_mode_non_binding_equals_uncapped(self, spark):
-        f = self._frontier(spark)
-        uncapped = round_plan.schedule(f, self._cfg())
-        fair = round_plan.schedule(f, self._cfg(), global_cap=10_000,
-                                   cap_mode="fair")
-        assert sorted(r.url for r in fair.collect()) == \
-            sorted(r.url for r in uncapped.collect())
-
-    def test_bad_cap_mode(self, spark):
-        with pytest.raises(ValueError):
-            round_plan.schedule(self._frontier(spark), self._cfg(),
-                                global_cap=5, cap_mode="nope")

@@ -50,10 +50,6 @@ class TestSnapshots:
         with pytest.raises(KeyError):
             table.read(99)
 
-    def test_empty_table_read_or_empty(self, spark, table):
-        df = table.read_or_empty("v int")
-        assert df.count() == 0
-
     def test_commit_is_atomic_manifest(self, spark, table, tmp_path):
         """No partial manifest states: manifest is either old or new."""
         table.append(_df(spark, [1]))

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.config import CrawlConfig
+from fess_ds_s3_spark.plans import round as round_plan
 from fess_ds_s3_spark.plans.crawl import CrawlDriver
 from fess_ds_s3_spark.sources import synthetic
 from fess_ds_s3_spark.streaming.rounds import (continuous_crawl,
@@ -51,6 +52,58 @@ class TestStreamingRounds:
                        for r in stream_driver.committed_seen().collect()}
         assert stream_urls == batch_urls
         assert len(rounds_seen) >= 1
+
+    def test_stream_drains_host_budget_backlog(self, spark, tmp_path):
+        """A micro-batch runs rounds until one admits nothing: with a
+        per-host budget far below the 20 rows per host, the stream still
+        commits the seen-set a batch ``run()`` drains to — every distinct
+        canonical URL of the frontier — with one ``on_batch`` call per
+        committed round."""
+        cfg = CrawlConfig(region="us-east-1", default_host_budget=5,
+                          bloom_expected=10_000, seen_partitions=8)
+        frontier = synthetic.synth_frontier(spark, 120, n_hosts=6, seed=21)
+        src = str(tmp_path / "incoming")
+        frontier.write.parquet(src, mode="append")
+
+        driver = CrawlDriver(spark, str(tmp_path / "stream"), cfg)
+        rounds_seen = []
+        continuous_crawl(
+            spark, stream_frontier(spark, src, frontier.schema), driver,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            on_batch=lambda rid, n: rounds_seen.append((rid, n)),
+        ).awaitTermination(300)
+
+        expected = {r.canonical_url for r in round_plan.prepare_frontier(
+            frontier, cfg).select("canonical_url").collect()}
+        got = {r.canonical_url for r in driver.committed_seen().collect()}
+        assert got == expected
+        assert [rid for rid, _ in rounds_seen] == list(
+            range(driver.last_round() + 1))
+        assert len(rounds_seen) > 2 and rounds_seen[-1][1] == 0
+
+    def test_stream_batches_are_canonicalized(self, spark, cfg, tmp_path):
+        """Listing-shaped micro-batches (no url, host or canonical_url)
+        are seeded like any frontier: after a seed that stored
+        canonical_url, each streamed row keeps its own canonical URL
+        instead of reading back NULL and collapsing into one."""
+        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
+        seeded = synthetic.synth_frontier(spark, 50, n_hosts=5, seed=1)
+        driver.seed(seeded)
+        batch = synthetic.synth_frontier(spark, 50, n_hosts=5, seed=2) \
+            .drop("url", "canonical_url", "host")
+        src = str(tmp_path / "incoming")
+        batch.write.parquet(src, mode="append")
+        continuous_crawl(spark, stream_frontier(spark, src, batch.schema),
+                         driver, checkpoint_dir=str(tmp_path / "ckpt")
+                         ).awaitTermination(180)
+
+        expected = {r.canonical_url for df in (seeded, batch)
+                    for r in round_plan.prepare_frontier(df, cfg)
+                    .select("canonical_url").collect()}
+        got = {r.canonical_url for r in driver.committed_seen().collect()}
+        assert len(expected) > 50 and got == expected
+        assert driver.frontier.read().filter(
+            F.col("canonical_url").isNull()).count() == 0
 
     def test_stream_restart_no_duplicates(self, spark, cfg, tmp_path):
         """availableNow restart over the same checkpoint must not re-admit
