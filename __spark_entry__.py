@@ -249,8 +249,8 @@ def q_seen_antijoin(spark, sf_dir):
 
 def q_seen_bloom_antijoin(spark, sf_dir):
     """F5 at-scale path — ORACLE-CHECKED: the bloom-pre-filter → exact-
-    confirm pipeline (``filter_unseen``: partitioned blobs built with a
-    grouped pandas UDF, broadcast scalar-UDF probe, left-anti confirm of
+    confirm pipeline (``filter_unseen``: partitioned blobs written by the
+    cogrouped Arrow fold, broadcast scalar-UDF probe, left-anti confirm of
     bloom-positives only). Output is DEFINED to equal the plain exact
     anti-join (blooms have no false negatives), so the ``seen_antijoin``
     SQL oracle checks the whole bloom path end-to-end."""
@@ -268,8 +268,9 @@ def q_seen_cuckoo_antijoin(spark, sf_dir):
     confirm (``filter_unseen_cuckoo``). Cuckoo filters have no false
     negatives, so the output is DEFINED to equal the exact anti-join —
     the same oracle as ``seen_antijoin`` checks the whole cuckoo path
-    (16-bit fingerprints, deterministic kick insertion, cogrouped probe).
-    Deletion semantics are pinned in tests/test_seen.py."""
+    (16-bit fingerprints, deterministic kick insertion through
+    ``cuckoo_update``, cogrouped probe). Deletion semantics are pinned in
+    tests/test_seen.py."""
     cfg = CrawlConfig(region=REGION, bloom_expected=50_000,
                       seen_partitions=8)
     f = _frontier(spark, sf_dir).withColumnRenamed("url", "canonical_url")

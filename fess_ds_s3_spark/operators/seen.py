@@ -15,8 +15,9 @@ URL-seen set that scales to a 10^10-URL frontier, so this module provides:
    ``pmod(murmur3(url), P)`` and is hashed into the blob by double hashing
    ``pos_i = (h1 + i*h2) mod m`` with h1 = Murmur3-32 (``F.hash``) and
    h2 = xxhash64 (``F.xxhash64``), both computed JVM-side; the Python side
-   only does vectorized numpy bit arithmetic inside Arrow-batched
-   cogrouped/grouped pandas UDFs. No per-row Python.
+   only does vectorized numpy bit arithmetic inside cogrouped
+   ``applyInArrow`` kernels. No per-row Python. One fold kernel writes
+   blobs (a round's update is one pass; a build folds into no blobs).
 
 3. **Cuckoo filter fallback** — same partitioning, but blobs are cuckoo
    tables (bucketed 16-bit fingerprints, 4 slots/bucket) supporting
@@ -34,9 +35,11 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (BinaryType, BooleanType, IntegerType, LongType,
                                StructField, StructType)
 
@@ -54,6 +57,9 @@ CUCKOO_SCHEMA = StructType([
     StructField("table", BinaryType(), False),   # uint16 fingerprints
     StructField("n_buckets", LongType(), False),
 ])
+
+_BLOOM_ARROW = to_arrow_schema(BLOOM_SCHEMA)
+_CUCKOO_ARROW = to_arrow_schema(CUCKOO_SCHEMA)
 
 _CUCKOO_SLOTS = 4
 _CUCKOO_MAX_KICKS = 500
@@ -108,31 +114,6 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
 # Bloom build / merge / probe
 # ---------------------------------------------------------------------------
 
-def build_bloom(df: DataFrame, cfg: CrawlConfig,
-                url: str = "canonical_url") -> DataFrame:
-    """Build per-partition bloom blobs from a URL DataFrame.
-
-    One grouped-map pandas UDF per partition id; emits exactly one blob row
-    per non-empty partition. This is the engine's only UDAF-like op
-    (SURVEY.md §2.11).
-    """
-    m, k = bloom_params(cfg.bloom_expected, cfg.bloom_fpp)
-    keyed = with_seen_keys(df, cfg, url).select("part_id", "h1", "h2")
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        pos = _positions(pdf["h1"].to_numpy(np.int64),
-                         pdf["h2"].to_numpy(np.int64), k, m)
-        _set_bits(bits, pos)
-        return pd.DataFrame({
-            "part_id": [int(pdf["part_id"].iloc[0])],
-            "bits": [bits.tobytes()],
-            "m_bits": [m], "k_hashes": [k],
-        })
-
-    return keyed.groupBy("part_id").applyInPandas(_build, BLOOM_SCHEMA)
-
-
 def _fold_blobs(part_id: int, rows) -> tuple[np.ndarray, int, int]:
     """OR-fold one partition's bloom blob rows ``(bits, m_bits, k_hashes)``
     into one bitset. Appended deltas and unioned tables leave several rows
@@ -157,21 +138,48 @@ def _fold_blobs(part_id: int, rows) -> tuple[np.ndarray, int, int]:
     return bits, m0, k0
 
 
-def _blob_rows(frame: pd.DataFrame):
-    return zip(frame["bits"], frame["m_bits"], frame["k_hashes"])
+def _empty(df: DataFrame, schema: StructType) -> DataFrame:
+    # Filter(false) plans as an empty local relation: no scan task runs
+    return df.sparkSession.createDataFrame([], schema).where(F.lit(False))
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two bloom blob tables (same m/k) partition-wise; raises on
-    an ``(m_bits, k_hashes)`` mismatch (see :func:`_fold_blobs`)."""
-    def _merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        bits, m, k = _fold_blobs(pid, [*_blob_rows(left), *_blob_rows(right)])
-        return pd.DataFrame({"part_id": [pid], "bits": [bits.tobytes()],
-                             "m_bits": [m], "k_hashes": [k]})
+def _rows(table: pa.Table, *names: str):
+    return zip(*(table[name].to_pylist() for name in names))
 
-    return (a.groupBy("part_id").cogroup(b.groupBy("part_id"))
-            .applyInPandas(_merge, BLOOM_SCHEMA))
+
+def _bloom_fold(blooms: DataFrame, df: DataFrame, cfg: CrawlConfig,
+                url: str) -> DataFrame:
+    """The one kernel that writes bloom blobs: per part, OR the previous
+    blob rows into a zeroed ``bloom_params(cfg)`` bitset, set URL bits."""
+    m, k = bloom_params(cfg.bloom_expected, cfg.bloom_fpp)
+    keyed = with_seen_keys(df, cfg, url).select("part_id", "h1", "h2")
+
+    def _fold(key, keys: pa.Table, prev: pa.Table) -> pa.Table:
+        pid = key[0].as_py()
+        # a zeroed bytearray with cfg's (m, k) leads: checked, writable
+        prev_rows = _rows(prev, "bits", "m_bits", "k_hashes")
+        bits, _, _ = _fold_blobs(pid, [(bytearray(m // 8), m, k), *prev_rows])
+        _set_bits(bits, _positions(keys["h1"].to_numpy(),
+                                   keys["h2"].to_numpy(), k, m))
+        return pa.Table.from_pydict(
+            {"part_id": [pid], "bits": [bits.tobytes()],
+             "m_bits": [m], "k_hashes": [k]}, schema=_BLOOM_ARROW)
+
+    return (keyed.groupBy("part_id").cogroup(blooms.groupBy("part_id"))
+            .applyInArrow(_fold, BLOOM_SCHEMA))
+
+
+def build_bloom(df: DataFrame, cfg: CrawlConfig,
+                url: str = "canonical_url") -> DataFrame:
+    """Per-partition bloom blobs of a URL DataFrame: the fold over no blobs."""
+    return _bloom_fold(_empty(df, BLOOM_SCHEMA), df, cfg, url)
+
+
+def merge_blooms(blooms: DataFrame, urls: DataFrame, cfg: CrawlConfig,
+                 url: str = "canonical_url") -> DataFrame:
+    """Add ``urls`` to the blob table ``blooms`` in one cogrouped pass;
+    raises on an ``(m_bits, k_hashes)`` mismatch with ``cfg``."""
+    return _bloom_fold(blooms, urls, cfg, url)
 
 
 #: broadcast the whole filter when its payload is below this (driver+executor
@@ -223,9 +231,7 @@ def bloom_maybe_seen_broadcast(frontier: DataFrame, blobs: list,
     # (measured: a second full-scale 32-task stage, +185 CPU-s at 32M
     # rows). Blocking reordering keeps one shared Exchange; per-row
     # results are unchanged (pure function), which the equivalence tests
-    # pin. Same class of bug as the r1 canonicalize double-eval
-    # (filter-through-window); the plan shape is asserted in
-    # tests/test_invariance.py.
+    # pin; the plan shape is asserted in tests/test_invariance.py.
     _probe = _probe.asNondeterministic()
 
     keyed = with_seen_keys(frontier, cfg, url)
@@ -234,38 +240,43 @@ def bloom_maybe_seen_broadcast(frontier: DataFrame, blobs: list,
             .drop("h1", "h2"))
 
 
+def _cogrouped_probe(frontier: DataFrame, blobs: DataFrame, cfg: CrawlConfig,
+                     url: str, flag: str, member) -> DataFrame:
+    """Carry every frontier column and append ``flag``, cogrouped with the
+    blob rows on ``part_id``; ``member(part_id, rows, blobs)`` tests one
+    partition's keyed rows against its (non-empty) blob rows."""
+    keyed = with_seen_keys(frontier, cfg, url)
+    carry = [c for c in keyed.columns if c not in ("h1", "h2")]
+    out_schema = StructType([keyed.schema[c] for c in carry]
+                            + [StructField(flag, BooleanType(), False)])
+    # timestamps arrive in the session time zone, the result must be UTC
+    out_arrow = to_arrow_schema(out_schema)
+
+    def _probe(key, rows: pa.Table, blob: pa.Table) -> pa.Table:
+        hits = (member(key[0].as_py(), rows, blob)
+                if rows.num_rows and blob.num_rows
+                else np.zeros(rows.num_rows, dtype=bool))
+        return (rows.select(carry).append_column(flag, pa.array(hits))
+                .cast(out_arrow))
+
+    return (keyed.groupBy("part_id").cogroup(blobs.groupBy("part_id"))
+            .applyInArrow(_probe, out_schema))
+
+
+def _bloom_member(pid: int, rows: pa.Table, blobs: pa.Table) -> np.ndarray:
+    bits, m, k = _fold_blobs(pid, _rows(blobs, "bits", "m_bits", "k_hashes"))
+    return _test_bits(bits, _positions(rows["h1"].to_numpy(),
+                                       rows["h2"].to_numpy(), k, m))
+
+
 def bloom_maybe_seen(frontier: DataFrame, blooms: DataFrame, cfg: CrawlConfig,
                      url: str = "canonical_url",
                      flag: str = "maybe_seen") -> DataFrame:
-    """Probe: frontier + blob tables cogrouped on part_id → frontier rows
-    with a ``maybe_seen`` boolean. False ⇒ definitely unseen (bloom
-    guarantee); True ⇒ confirm against the exact ledger.
-
-    This is the at-scale path (no driver collection); prefer
-    :func:`maybe_seen_auto` which broadcasts when the filter is small.
-    """
-    keyed = with_seen_keys(frontier, cfg, url)
-    out_schema = StructType(
-        [f for f in keyed.schema.fields if f.name not in ("h1", "h2")]
-        + [StructField(flag, BooleanType(), False)])
-    carry = [c for c in keyed.columns if c not in ("h1", "h2")]
-
-    def _probe(key, rows: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
-        if not len(rows):
-            return pd.DataFrame(columns=carry + [flag])
-        if not len(blobs):
-            out = rows[carry].copy()
-            out[flag] = False
-            return out
-        bits, m, k = _fold_blobs(int(key[0]), _blob_rows(blobs))
-        pos = _positions(rows["h1"].to_numpy(np.int64),
-                         rows["h2"].to_numpy(np.int64), k, m)
-        out = rows[carry].copy()
-        out[flag] = _test_bits(bits, pos)
-        return out
-
-    return (keyed.groupBy("part_id").cogroup(blooms.groupBy("part_id"))
-            .applyInPandas(_probe, out_schema))
+    """Cogrouped probe → frontier rows with a ``maybe_seen`` boolean. False
+    ⇒ definitely unseen (bloom guarantee); True ⇒ confirm against the exact
+    ledger. The at-scale path (no driver collection); prefer
+    :func:`maybe_seen_auto`, which broadcasts when the filter is small."""
+    return _cogrouped_probe(frontier, blooms, cfg, url, flag, _bloom_member)
 
 
 def bloom_size_bytes(cfg: CrawlConfig) -> int:
@@ -282,19 +293,15 @@ def maybe_seen_auto(frontier: DataFrame, blooms: DataFrame, cfg: CrawlConfig,
     blob payload is ≤ BLOOM_BROADCAST_MAX_BYTES (shuffle-free, branch-safe),
     else the cogrouped streaming probe.
 
-    ``size_bytes``: known total blob payload. When the caller can supply it
-    (the crawl driver carries it in the ``seen_bloom`` snapshot metadata;
-    any caller can derive it from config via :func:`bloom_size_bytes`), the
-    strategy choice costs ZERO Spark jobs. When absent, it falls back to
-    ``cfg`` sizing (still job-free) — the per-round ``first()+count()``
-    probe this function used to run added fixed driver latency × n_rounds.
+    ``size_bytes``: known total blob payload (the crawl driver carries it
+    in the ``seen_bloom`` snapshot metadata); absent, it is sized from
+    ``cfg`` (:func:`bloom_size_bytes`). Either way the choice runs no job.
 
     The estimate is re-checked against the ACTUAL collected payload: a
-    blooms table built under a different config than ``cfg`` (e.g. a resume
-    after changing ``bloom_expected``/``seen_partitions``) can dwarf the
-    estimate, and the collect has already paid the driver-memory cost — but
-    re-broadcasting it to every executor would multiply the damage, so an
-    estimate that undershoots falls back to the cogrouped streaming probe."""
+    blooms table built under another config (a resume after changing
+    ``bloom_expected``/``seen_partitions``) can dwarf it, and broadcasting
+    that to every executor would multiply the driver-memory damage, so an
+    undershot estimate falls back to the cogrouped streaming probe."""
     if size_bytes is None:
         size_bytes = bloom_size_bytes(cfg)
     if size_bytes <= BLOOM_BROADCAST_MAX_BYTES:
@@ -355,10 +362,8 @@ def filter_unseen_cuckoo(frontier: DataFrame, seen_exact: DataFrame,
                          cuckoo_blobs: DataFrame, cfg: CrawlConfig,
                          url: str = "canonical_url") -> DataFrame:
     """Cuckoo-filter variant of :func:`filter_unseen` (the deletable
-    seen-set, F5 fallback): cuckoo pre-filter → exact confirm of the
-    maybe-seen rows, union definite-new rows. Identical output to the
-    exact anti-join — cuckoo filters, like blooms, have no false negatives
-    (fingerprint+bucket of a stored key always probes positive)."""
+    seen-set, F5 fallback). Identical output to the exact anti-join —
+    cuckoo filters, like blooms, have no false negatives."""
     return _confirm_maybe_seen(
         cuckoo_maybe_seen(frontier, cuckoo_blobs, cfg, url), seen_exact, url)
 
@@ -380,24 +385,25 @@ def _cuckoo_index2(i1: np.ndarray, fp: np.ndarray, n: int) -> np.ndarray:
 
 
 class _CuckooTable:
-    """In-UDF cuckoo table over a uint16 array of n_buckets × 4 slots."""
+    """Writable in-UDF copy of a uint16 cuckoo blob, n_buckets × 4 slots."""
 
-    def __init__(self, table: np.ndarray, n_buckets: int):
-        self.t = table.reshape(n_buckets, _CUCKOO_SLOTS)
+    def __init__(self, table: bytes, n_buckets: int):
+        self.t = np.frombuffer(table, dtype=np.uint16).reshape(
+            n_buckets, _CUCKOO_SLOTS).copy()
         self.n = n_buckets
 
-    def _try_put(self, bucket: int, fp: int) -> bool:
+    def _replace(self, bucket: int, old: int, new: int) -> bool:
+        """Set the first slot of ``bucket`` holding ``old`` to ``new``."""
         row = self.t[bucket]
-        empty = np.where(row == 0)[0]
-        if len(empty):
-            row[empty[0]] = fp
-            return True
-        return False
+        hit = np.where(row == old)[0]
+        if len(hit):
+            row[hit[0]] = new
+        return bool(len(hit))
 
     def insert(self, i1: int, fp: int) -> bool:
         i2 = int(_cuckoo_index2(np.array([i1]), np.array([fp], np.uint16),
                                 self.n)[0])
-        if self._try_put(i1, fp) or self._try_put(i2, fp):
+        if self._replace(i1, 0, fp) or self._replace(i2, 0, fp):
             return True
         # kick: deterministic slot choice (no RNG → reproducible blobs)
         bucket, cur = i1, fp
@@ -406,26 +412,14 @@ class _CuckooTable:
             cur, self.t[bucket, slot] = int(self.t[bucket, slot]), cur
             bucket = int(_cuckoo_index2(
                 np.array([bucket]), np.array([cur], np.uint16), self.n)[0])
-            if self._try_put(bucket, cur):
+            if self._replace(bucket, 0, cur):
                 return True
         return False  # over-full: the last kicked fingerprint is lost
 
     def delete(self, i1: int, fp: int) -> bool:
         i2 = int(_cuckoo_index2(np.array([i1]), np.array([fp], np.uint16),
                                 self.n)[0])
-        for b in (i1, i2):
-            row = self.t[b]
-            hit = np.where(row == fp)[0]
-            if len(hit):
-                row[hit[0]] = 0
-                return True
-        return False
-
-    def contains(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        i2 = _cuckoo_index2(i1, fp, self.n)
-        in1 = (self.t[i1] == fp[:, None]).any(axis=1)
-        in2 = (self.t[i2] == fp[:, None]).any(axis=1)
-        return in1 | in2
+        return self._replace(i1, fp, 0) or self._replace(i2, fp, 0)
 
 
 def cuckoo_capacity(expected: int) -> int:
@@ -438,112 +432,77 @@ def _cuckoo_index1(h1: np.ndarray, n: int) -> np.ndarray:
     return np.mod(h1.astype(np.uint64), np.uint64(n)).astype(np.int64)
 
 
-def _cuckoo_full(part_id: int, n_buckets: int, expected: int) -> ValueError:
-    return ValueError(
-        f"cuckoo part {part_id}: insert failed after {_CUCKOO_MAX_KICKS} "
-        f"kicks in a table of {n_buckets} buckets — bloom_expected="
-        f"{expected} is too small for this partition's URLs (an over-full "
-        "table evicts a stored fingerprint, a false negative)")
-
-
 def build_cuckoo(df: DataFrame, cfg: CrawlConfig,
                  url: str = "canonical_url") -> DataFrame:
-    """Build per-partition cuckoo blobs (deletable seen-set). Raises when
+    """Build per-partition cuckoo blobs (deletable seen-set):
+    :func:`cuckoo_update` adding every URL to empty tables. Raises when
     a partition's URLs overflow a table sized from ``bloom_expected``."""
-    n_buckets = cuckoo_capacity(cfg.bloom_expected)
-    expected = cfg.bloom_expected
-    keyed = with_seen_keys(df, cfg, url).select("part_id", "h1")
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["part_id"].iloc[0])
-        table = np.zeros(n_buckets * _CUCKOO_SLOTS, dtype=np.uint16)
-        ck = _CuckooTable(table, n_buckets)
-        h1 = pdf["h1"].to_numpy(np.int64)
-        fp = _cuckoo_fingerprint(h1)
-        i1 = _cuckoo_index1(h1, n_buckets)
-        for a, b in zip(i1.tolist(), fp.tolist()):
-            if not ck.insert(a, b):
-                raise _cuckoo_full(pid, n_buckets, expected)
-        return pd.DataFrame({
-            "part_id": [pid],
-            "table": [table.tobytes()],
-            "n_buckets": [n_buckets],
-        })
-
-    return keyed.groupBy("part_id").applyInPandas(_build, CUCKOO_SCHEMA)
+    adds = df.select(F.col(url), F.lit("add").alias("op"))
+    return cuckoo_update(_empty(df, CUCKOO_SCHEMA), adds, cfg, url)
 
 
 def cuckoo_update(blobs: DataFrame, changes: DataFrame, cfg: CrawlConfig,
                   url: str = "canonical_url", op: str = "op") -> DataFrame:
-    """Apply ±deltas (op ∈ {'add','del'}) to cuckoo blobs, cogrouped.
-
-    A partition may hold several blob rows (appended deltas, unioned
-    tables); the probe ORs over all of them, so every row is kept: adds go
-    into the first row, a delete removes the fingerprint from the first
-    row whose buckets hold it, and the other rows pass through unchanged.
-    Raises when an add overflows the first row's table."""
+    """Apply ±deltas (op ∈ {'add','del'}) to cuckoo blobs, cogrouped; a
+    partition with no blob row starts from an empty table. Of several blob
+    rows per partition (the probe ORs over all), adds go into the first, a
+    delete empties the first slot holding the fingerprint, and every row
+    is kept. Raises when an add overflows the first row's table, and on
+    any other op (a mistyped delete must not insert)."""
     keyed = with_seen_keys(changes, cfg, url).select("part_id", "h1", F.col(op))
     n_default = cuckoo_capacity(cfg.bloom_expected)
-    expected = cfg.bloom_expected
 
-    def _apply(key, ops: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        if len(blob):
-            tables = [_CuckooTable(np.frombuffer(t, dtype=np.uint16).copy(),
-                                   int(n))
-                      for t, n in zip(blob["table"], blob["n_buckets"])]
-        else:
-            tables = [_CuckooTable(
-                np.zeros(n_default * _CUCKOO_SLOTS, dtype=np.uint16),
-                n_default)]
-        if len(ops):
-            h1 = ops["h1"].to_numpy(np.int64)
-            fps = _cuckoo_fingerprint(h1).tolist()
-            i1s = [_cuckoo_index1(h1, ck.n).tolist() for ck in tables]
-            for j, (fp, o) in enumerate(zip(fps, ops[op].tolist())):
-                if o == "del":
-                    for ck, i1 in zip(tables, i1s):
-                        if ck.delete(i1[j], fp):
-                            break
-                elif not tables[0].insert(i1s[0][j], fp):
-                    raise _cuckoo_full(pid, tables[0].n, expected)
-        return pd.DataFrame({"part_id": [pid] * len(tables),
-                             "table": [ck.t.tobytes() for ck in tables],
-                             "n_buckets": [ck.n for ck in tables]})
+    def _apply(key, ops: pa.Table, blob: pa.Table) -> pa.Table:
+        pid = key[0].as_py()
+        tables = [_CuckooTable(t, n)
+                  for t, n in _rows(blob, "table", "n_buckets")] or [
+            _CuckooTable(bytes(2 * _CUCKOO_SLOTS * n_default), n_default)]
+        h1 = ops["h1"].to_numpy()
+        fps = _cuckoo_fingerprint(h1).tolist()
+        i1s = [_cuckoo_index1(h1, ck.n).tolist() for ck in tables]
+        for j, (fp, o) in enumerate(zip(fps, ops[op].to_pylist())):
+            if o == "add":
+                if not tables[0].insert(i1s[0][j], fp):
+                    raise ValueError(
+                        f"cuckoo part {pid}: insert failed after "
+                        f"{_CUCKOO_MAX_KICKS} kicks in a table of "
+                        f"{tables[0].n} buckets — bloom_expected="
+                        f"{cfg.bloom_expected} is too small for this "
+                        "partition's URLs (an over-full table evicts a "
+                        "stored fingerprint, a false negative)")
+            elif o == "del":
+                for ck, i1 in zip(tables, i1s):
+                    if ck.delete(i1[j], fp):
+                        break
+            else:
+                raise ValueError(
+                    f"cuckoo part {pid}: op {o!r} is neither 'add' nor "
+                    "'del'")
+        return pa.Table.from_pydict(
+            {"part_id": [pid] * len(tables),
+             "table": [ck.t.tobytes() for ck in tables],
+             "n_buckets": [ck.n for ck in tables]}, schema=_CUCKOO_ARROW)
 
     return (keyed.groupBy("part_id").cogroup(blobs.groupBy("part_id"))
-            .applyInPandas(_apply, CUCKOO_SCHEMA))
+            .applyInArrow(_apply, CUCKOO_SCHEMA))
+
+
+def _cuckoo_member(pid: int, rows: pa.Table, blobs: pa.Table) -> np.ndarray:
+    h1 = rows["h1"].to_numpy()
+    fp = _cuckoo_fingerprint(h1)
+    # cuckoo tables can't be bit-merged — probe EVERY blob row and OR
+    # the verdicts, so appended deltas never silently lose state
+    hits = np.zeros(len(h1), dtype=bool)
+    for table, n in _rows(blobs, "table", "n_buckets"):
+        slots = np.frombuffer(table, dtype=np.uint16).reshape(n, _CUCKOO_SLOTS)
+        i1 = _cuckoo_index1(h1, n)
+        for bucket in (i1, _cuckoo_index2(i1, fp, n)):
+            hits |= (slots[bucket] == fp[:, None]).any(axis=1)
+    return hits
 
 
 def cuckoo_maybe_seen(frontier: DataFrame, blobs: DataFrame, cfg: CrawlConfig,
                       url: str = "canonical_url",
                       flag: str = "maybe_seen") -> DataFrame:
     """Probe cuckoo blobs; same contract as :func:`bloom_maybe_seen`."""
-    keyed = with_seen_keys(frontier, cfg, url)
-    carry = [c for c in keyed.columns if c not in ("h1", "h2")]
-    out_schema = StructType(
-        [f for f in keyed.schema.fields if f.name not in ("h1", "h2")]
-        + [StructField(flag, BooleanType(), False)])
-
-    def _probe(_key, rows: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if not len(rows):
-            return pd.DataFrame(columns=carry + [flag])
-        out = rows[carry].copy()
-        if not len(blob):
-            out[flag] = False
-            return out
-        h1 = rows["h1"].to_numpy(np.int64)
-        fp = _cuckoo_fingerprint(h1)
-        # cuckoo tables can't be bit-merged — probe EVERY blob row and OR
-        # the verdicts, so appended deltas never silently lose state
-        hits = np.zeros(len(rows), dtype=bool)
-        for idx in range(len(blob)):
-            n = int(blob["n_buckets"].iloc[idx])
-            table = np.frombuffer(blob["table"].iloc[idx], dtype=np.uint16)
-            ck = _CuckooTable(table.copy(), n)
-            hits |= ck.contains(_cuckoo_index1(h1, n), fp).astype(bool)
-        out[flag] = hits
-        return out
-
-    return (keyed.groupBy("part_id").cogroup(blobs.groupBy("part_id"))
-            .applyInPandas(_probe, out_schema))
+    return _cogrouped_probe(frontier, blobs, cfg, url, flag, _cuckoo_member)

@@ -442,10 +442,10 @@ class CrawlDriver:
             (self.seen, result.seen_delta.withColumn("round",
                                                      F.lit(round_id))),
         ]
-        new_bloom = seen_ops.build_bloom(result.seen_delta, cfg)
         writes.append((self.seen_bloom,
-                       seen_ops.merge_blooms(blooms, new_bloom)
-                       if blooms is not None else new_bloom))
+                       seen_ops.build_bloom(result.seen_delta, cfg)
+                       if blooms is None else
+                       seen_ops.merge_blooms(blooms, result.seen_delta, cfg)))
         obs_links = obs_edges = None
         if docs is not None:
             from pyspark.sql import Observation

@@ -124,15 +124,15 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
              blooms: DataFrame | None = None,
              host_budgets: DataFrame | None = None,
              use_salting: bool = True,
-             narrow: bool = True,
              global_cap: int | None = None,
              bloom_size_bytes: int | None = None) -> DataFrame:
     """Scheduling half of the round: returns the admitted batch with
     ``host_rank`` (the within-host admission sequence).
 
-    ``narrow=True`` projects to SCHEDULE_COLS before the shuffles; callers
-    that need the full frontier row (run_round) join it back on ``url``
-    AFTER admission shrinks the data (late materialization).
+    The frontier is projected to SCHEDULE_COLS (+ ``round``) before the
+    shuffles; callers that need the full frontier row (run_round) join it
+    back on ``url`` AFTER admission shrinks the data (late
+    materialization).
 
     ``global_cap``: per-round admission LIMIT across all hosts — the O2
     analog of the reference's listing page size (``max_keys``,
@@ -145,10 +145,8 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig, *,
     listing page would.
     """
     df = prepare_frontier(frontier, cfg)
-    if narrow:
-        keep = [c for c in df.columns
-                if c in SCHEDULE_COLS or c == "round"]
-        df = df.select(*keep)
+    df = df.select(*[c for c in df.columns
+                     if c in SCHEDULE_COLS or c == "round"])
     # Order matters for plan shape: the dedup aggregate is the pipeline's
     # first shuffle, placed BEFORE the seen filter (semantics-preserving:
     # the min-rank survivor per canonical URL is the same whether duplicates
@@ -289,7 +287,7 @@ def run_round(frontier: DataFrame, cfg: CrawlConfig, *,
     each of the three sink writes + the seen delta."""
     admitted = schedule(
         frontier, cfg, seen_exact=seen_exact, blooms=blooms,
-        host_budgets=host_budgets, narrow=True, global_cap=global_cap,
+        host_budgets=host_budgets, global_cap=global_cap,
         bloom_size_bytes=bloom_size_bytes)
     # late materialization: join the wide frontier columns back onto the
     # (budget-bounded, small) admitted batch only. One row per url on the

@@ -76,7 +76,7 @@ class TestScheduleBucketed:
         ref = round_plan.schedule(
             table["df"], cfg,
             seen_exact=table["seen"].select("canonical_url"),
-            use_salting=use_salting, narrow=False)
+            use_salting=use_salting)
         assert _admissions(adm) == _admissions(ref)
 
     def test_seen_groups_are_filtered(self, spark, cfg, table):
@@ -134,7 +134,7 @@ class TestLayoutDurability:
         want = set()
         for rnd in range(3):
             adm = round_plan.schedule(df, small, seen_exact=seen,
-                                      use_salting=False, narrow=False)
+                                      use_salting=False)
             rows = adm.select("url", "canonical_url", "host_rank").collect()
             want |= {(rnd, r.url, r.host_rank) for r in rows}
             delta = adm.select("canonical_url")

@@ -3,11 +3,17 @@ false-positive bound, cuckoo insert/delete, determinism across parallelism."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+from functools import reduce
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.operators import seen as seen_ops
+from fess_ds_s3_spark.sources.snapshots import SnapshotTable
 
 
 @pytest.fixture()
@@ -21,6 +27,18 @@ def _urls(spark, n, prefix="u", parts=4):
         F.format_string(f"https://h%03d.com/{prefix}/%d",
                         F.pmod(F.col("id"), F.lit(50)), F.col("id"))
         .alias("canonical_url"))
+
+
+def _blobs(blooms) -> dict:
+    return {r.part_id: bytes(r.bits) for r in blooms.collect()}
+
+
+@pytest.fixture(scope="module")
+def rounds(spark):
+    """Three seen deltas; each repeats 50 URLs of the one before it."""
+    return [_urls(spark, 300, prefix=f"r{i}").unionByName(
+                _urls(spark, 50, prefix=f"r{i - 1}"))
+            for i in range(3)]
 
 
 class TestExactLedger:
@@ -61,7 +79,7 @@ class TestBloom:
         bloom_a = seen_ops.build_bloom(a, cfg)
         bloom_b = seen_ops.build_bloom(b, cfg)
         stacked = bloom_a.unionByName(bloom_b)  # 2 rows per part_id
-        merged = seen_ops.merge_blooms(bloom_a, bloom_b)
+        merged = seen_ops.merge_blooms(bloom_a, b, cfg)
         both = a.unionByName(b)
         for blooms in (stacked, merged):
             # cogrouped probe path
@@ -88,8 +106,7 @@ class TestBloom:
     def test_merge_blooms(self, spark, cfg):
         a = _urls(spark, 500, prefix="a")
         b = _urls(spark, 500, prefix="b")
-        merged = seen_ops.merge_blooms(seen_ops.build_bloom(a, cfg),
-                                       seen_ops.build_bloom(b, cfg))
+        merged = seen_ops.merge_blooms(seen_ops.build_bloom(a, cfg), b, cfg)
         probed = seen_ops.bloom_maybe_seen(
             a.unionByName(b), merged, cfg)
         assert probed.filter(~F.col("maybe_seen")).count() == 0
@@ -104,6 +121,79 @@ class TestBloom:
         blobs8 = {r.part_id: r.bits for r in
                   seen_ops.build_bloom(u8, cfg).collect()}
         assert blobs1 == blobs8
+
+    def test_blob_bytes_are_pinned(self, spark, cfg):
+        """The fold kernel writes the bytes the grouped build wrote: a
+        drift in hashing, bit layout or sizing changes this digest."""
+        digest = hashlib.sha256()
+        for pid, bits in sorted(_blobs(
+                seen_ops.build_bloom(_urls(spark, 1000), cfg)).items()):
+            digest.update(pid.to_bytes(4, "big"))
+            digest.update(bits)
+        assert digest.hexdigest() == (
+            "bf4875411d8139c2d1370b1c72aec3e959365b3379f4e0b4529fce35038cd166")
+
+    @pytest.mark.parametrize("parts", [1, 8])
+    def test_chained_merge_equals_one_build(self, spark, rounds, parts):
+        """Folding each round's delta into the previous blobs gives, per
+        part, the bytes of one build over every URL seen so far."""
+        cfg = CrawlConfig(region="r", bloom_expected=10_000, bloom_fpp=0.01,
+                          seen_partitions=parts)
+        blooms = seen_ops.build_bloom(rounds[0], cfg)
+        for i in (1, 2):
+            blooms = seen_ops.merge_blooms(blooms, rounds[i], cfg)
+            union = reduce(DataFrame.unionByName, rounds[:i + 1])
+            got = _blobs(blooms)
+            assert len(got) == parts
+            assert got == _blobs(seen_ops.build_bloom(union, cfg))
+
+    def test_merge_is_one_arrow_node(self, spark, cfg, tmp_path):
+        """Bloom maintenance over blobs read back from the snapshot table
+        runs one Python node: the cogrouped Arrow fold. A build folds into
+        an empty local relation, which scans no Python-made RDD."""
+        table = SnapshotTable(spark, str(tmp_path), "seen_bloom")
+        built = seen_ops.build_bloom(_urls(spark, 200), cfg)
+        table.overwrite(built)
+        merged = seen_ops.merge_blooms(table.read(),
+                                       _urls(spark, 200, prefix="b"), cfg)
+        for blooms in (built, merged):
+            blooms.collect()
+            plan = blooms._jdf.queryExecution().executedPlan().toString()
+            # the AQE string also prints the Initial Plan; count the final
+            final = plan.split("== Final Plan ==")[1] \
+                .split("== Initial Plan ==")[0]
+            python_nodes = re.findall(
+                r"\b(\w*(?:InPandas|InArrow|EvalPython)\w*)\b", final)
+            assert python_nodes == ["FlatMapCoGroupsInArrow"], final
+            assert "ExistingRDD" not in final, final
+
+    def test_probes_carry_columns_unchanged(self, spark, cfg):
+        """Both cogrouped probes hand every input column back with its
+        type and value, in a session whose time zone is not UTC."""
+        frontier = _urls(spark, 60).select(
+            "canonical_url",
+            F.when(F.length("canonical_url") % 3 == 0, None)
+            .otherwise(F.length("canonical_url")).cast("int").alias("n"),
+            F.timestamp_seconds(F.length("canonical_url") * 86_400 + 7)
+            .alias("ts"),
+            (F.length("canonical_url").cast("long") * 10**12).alias("big"))
+        seen = frontier.limit(20)
+        want = sorted(frontier.collect())
+        assert any(r.n is None for r in want)
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            for probed in (
+                    seen_ops.bloom_maybe_seen(
+                        frontier, seen_ops.build_bloom(seen, cfg), cfg),
+                    seen_ops.cuckoo_maybe_seen(
+                        frontier, seen_ops.build_cuckoo(seen, cfg), cfg)):
+                carried = probed.select(*frontier.columns)
+                assert carried.schema == frontier.schema
+                assert sorted(carried.collect()) == want
+                assert probed.filter("maybe_seen").count() >= 20
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 class TestCuckoo:
@@ -163,6 +253,14 @@ class TestCuckoo:
             seen_ops.cuckoo_update(
                 empty, urls.withColumn("op", F.lit("add")), tiny).collect()
 
+    def test_unknown_op_raises(self, spark, cfg):
+        """A mistyped deletion must fail, not insert the URL."""
+        urls = _urls(spark, 50)
+        blobs = seen_ops.build_cuckoo(urls, cfg)
+        typo = _urls(spark, 5, prefix="x").withColumn("op", F.lit("delete"))
+        with pytest.raises(Exception, match="op 'delete' is neither"):
+            seen_ops.cuckoo_update(blobs, typo, cfg).collect()
+
 
 class TestParameterMismatch:
     """OR-merging blobs built with different (m_bits, k_hashes) would
@@ -178,9 +276,9 @@ class TestParameterMismatch:
         return a, b
 
     def test_cogroup_merge_raises(self, spark, cfg):
-        a, b = self._mismatched(spark, cfg)
+        _, b = self._mismatched(spark, cfg)
         with pytest.raises(Exception, match="m_bits, k_hashes"):
-            seen_ops.merge_blooms(a, b).collect()
+            seen_ops.merge_blooms(b, _urls(spark, 200), cfg).collect()
 
     def test_broadcast_probe_raises(self, spark, cfg):
         a, b = self._mismatched(spark, cfg)

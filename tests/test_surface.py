@@ -29,9 +29,6 @@ CALLER_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
 
 #: public defs kept without a production caller, name → reason
 ALLOWED_UNCALLED = {
-    "cuckoo_update": "the cuckoo filter's deletion path: seen-set "
-                     "maintenance under deletions, no driver round "
-                     "deletes yet",
     "StoreSpec": "typing protocol every store spec implements; "
                  "annotations name it only in strings",
     "snapshots": "SnapshotTable manifest history that tests inspect, "
@@ -119,7 +116,7 @@ def test_every_public_def_has_a_production_caller():
 
 
 def test_allowlist_is_small_and_current():
-    assert len(ALLOWED_UNCALLED) <= 4
+    assert len(ALLOWED_UNCALLED) <= 2
     stale = sorted(set(ALLOWED_UNCALLED) - set(uncalled_public_defs()))
     assert not stale, ("allowlisted names that are gone or now have a "
                        "caller (drop them from the list): "
