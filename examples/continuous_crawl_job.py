@@ -26,7 +26,6 @@ import json
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.config import CrawlConfig
 from fess_ds_s3_spark.plans.crawl import CrawlDriver
@@ -44,8 +43,10 @@ def main() -> None:
     parser.add_argument("--warehouse", default="/tmp/stream-wh")
     args = parser.parse_args()
 
-    spark = SparkSession.builder.appName(
-        "fess-ds-s3-spark-continuous-crawl").getOrCreate()
+    spark = (SparkSession.builder
+             .appName("fess-ds-s3-spark-continuous-crawl")
+             .config("spark.sql.shuffle.partitions", "32")
+             .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     cfg = CrawlConfig(region="us-east-1",
                       default_host_budget=args.budget,
@@ -64,10 +65,8 @@ def main() -> None:
                                  synth_frontier(spark, 0).schema)
         continuous_crawl(spark, stream, driver,
                          checkpoint_dir=checkpoint).awaitTermination()
-        new_rounds = (driver.rounds.read()
-                      .filter(F.col("round") > before)
-                      .orderBy("round").collect())
-        for r in new_rounds:
+        new_rounds = [r for r in driver.rounds.rows() if r["round"] > before]
+        for r in sorted(new_rounds, key=lambda r: r["round"]):
             print(json.dumps({"file": i, "round": r["round"],
                               "admitted": r["admitted"],
                               "stored": r["stored"],

@@ -138,9 +138,9 @@ def _fold_blobs(part_id: int, rows) -> tuple[np.ndarray, int, int]:
     return bits, m0, k0
 
 
-def _empty(df: DataFrame, schema: StructType) -> DataFrame:
-    # Filter(false) plans as an empty local relation: no scan task runs
-    return df.sparkSession.createDataFrame([], schema).where(F.lit(False))
+def empty(spark, schema: StructType) -> DataFrame:
+    """An empty ``schema`` frame, planned as a local relation (no RDD scan)."""
+    return spark.createDataFrame([], schema).where(F.lit(False))
 
 
 def _rows(table: pa.Table, *names: str):
@@ -172,7 +172,7 @@ def _bloom_fold(blooms: DataFrame, df: DataFrame, cfg: CrawlConfig,
 def build_bloom(df: DataFrame, cfg: CrawlConfig,
                 url: str = "canonical_url") -> DataFrame:
     """Per-partition bloom blobs of a URL DataFrame: the fold over no blobs."""
-    return _bloom_fold(_empty(df, BLOOM_SCHEMA), df, cfg, url)
+    return _bloom_fold(empty(df.sparkSession, BLOOM_SCHEMA), df, cfg, url)
 
 
 def merge_blooms(blooms: DataFrame, urls: DataFrame, cfg: CrawlConfig,
@@ -438,7 +438,7 @@ def build_cuckoo(df: DataFrame, cfg: CrawlConfig,
     :func:`cuckoo_update` adding every URL to empty tables. Raises when
     a partition's URLs overflow a table sized from ``bloom_expected``."""
     adds = df.select(F.col(url), F.lit("add").alias("op"))
-    return cuckoo_update(_empty(df, CUCKOO_SCHEMA), adds, cfg, url)
+    return cuckoo_update(empty(df.sparkSession, CUCKOO_SCHEMA), adds, cfg, url)
 
 
 def cuckoo_update(blobs: DataFrame, changes: DataFrame, cfg: CrawlConfig,

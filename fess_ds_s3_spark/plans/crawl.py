@@ -10,10 +10,12 @@ lastKey``, AmazonS3Client.java:144-146). The engine generalizes both:
   ``seen`` / ``seen_bloom`` (F5), ``frontier`` (link-extracted discoveries),
   and a ``rounds`` ledger mapping round → snapshot ids.
 - **resume**: the driver re-reads the last committed round from the
-  ``rounds`` ledger and continues; a crash between commits replays the
-  round idempotently because admission is a pure function of
-  (frontier snapshot, seen snapshot, config) — all nondeterminism is
-  confined to task timing, never to committed state (SURVEY.md §4.3).
+  ``rounds`` ledger, whose rows (like the ``cycles`` table's) ride its
+  snapshot manifest, so round bookkeeping reads JSON and runs no Spark job;
+  a crash between commits replays the round idempotently because admission
+  is a pure function of (frontier snapshot, seen snapshot, config) — all
+  nondeterminism is confined to task timing, never to committed state
+  (SURVEY.md §4.3).
 - **link extraction** closes the crawl loop: stored documents' media_ref
   spans become next-round frontier candidates (discovery_time = round
   sequence, priority = parent priority + 1).
@@ -186,10 +188,7 @@ class CrawlDriver:
 
     def last_round(self) -> int:
         """Highest committed round id, or -1 (resume entry point)."""
-        if not self.rounds.exists():
-            return -1
-        row = self.rounds.read().agg(F.max("round")).first()
-        return row[0] if row[0] is not None else -1
+        return max((r["round"] for r in self.rounds.rows()), default=-1)
 
     def seed(self, frontier_df: DataFrame) -> int:
         """Install the seed frontier (round 0 candidates).
@@ -252,15 +251,10 @@ class CrawlDriver:
         written by engines before the per-sink ledger columns existed
         (≤ 0.1.x); their sink rows are only reachable through the
         cumulative table."""
-        if not self.rounds.exists():
-            return [], []
-        ledger = self.rounds.read()
-        if snap_col in ledger.columns:
-            rows = ledger.select("round", snap_col).collect()
-        else:
-            rows = [(r[0], None) for r in ledger.select("round").collect()]
-        rows = [r for r in rows if r[0] > after_round]
-        ids = sorted(r[1] for r in rows if r[1] is not None)
+        rows = [(r["round"], r.get(snap_col)) for r in self.rounds.rows()
+                if r["round"] > after_round]
+        # distinct: a linkless round ledgers the frontier's snapshot again
+        ids = sorted({r[1] for r in rows if r[1] is not None})
         legacy_rounds = sorted(r[0] for r in rows if r[1] is None)
         return ids, legacy_rounds
 
@@ -308,7 +302,7 @@ class CrawlDriver:
             out = ckpt if out is None else ckpt.unionByName(
                 out, allowMissingColumns=True)
         if out is None:
-            return self.spark.createDataFrame([], SEEN_SCHEMA)
+            return seen_ops.empty(self.spark, SEEN_SCHEMA)
         if min_round > 0:
             out = out.filter(
                 F.coalesce(F.col("round"), F.lit(0)) >= min_round)
@@ -384,7 +378,6 @@ class CrawlDriver:
             blooms = self.seen_bloom.read()
             # blob payload size rides in the snapshot metadata so the
             # broadcast-vs-cogroup probe choice costs zero Spark jobs
-            # (r2 ran first()+count() here every round)
             meta = self.seen_bloom.metadata()
             bloom_size = meta.get("size_bytes")
 
@@ -399,9 +392,9 @@ class CrawlDriver:
                 host_budgets,
                 robots_ops.crawl_delay_budgets(robots_rules, cfg))
 
-        # conditional GETs once cycle candidates carry the prior ETag
-        # (seed and link rows lack the column, or read it as null via
-        # mergeSchema, and fetch unconditionally)
+        # conditional GETs once cycle candidates carry the prior ETag (seed
+        # and link rows lack the column, or read it as null, and fetch
+        # unconditionally)
         inm_col = ("prev_etag" if self.object_store_root is not None
                    and "prev_etag" in frontier_df.columns else None)
         result = round_plan.run_round(
@@ -523,13 +516,11 @@ class CrawlDriver:
             failed=int(metrics.get("failed") or 0),
             new_links=new_links,
             unchanged=int(metrics.get("unchanged") or 0))
-        self.rounds.append(
-            self.spark.createDataFrame(
-                [(round_id, frontier_snap, seen_snap, indexed_snap,
-                  failures_snap, stats_snap, lineage_snap, summary.admitted,
-                  summary.stored, summary.discarded, summary.failed)],
-                ROUNDS_SCHEMA),
-            meta)
+        self.rounds.append(self.rounds.stage_rows(
+            [(round_id, frontier_snap, seen_snap, indexed_snap,
+              failures_snap, stats_snap, lineage_snap, summary.admitted,
+              summary.stored, summary.discarded, summary.failed)],
+            ROUNDS_SCHEMA), meta)
         admitted.unpersist()
         processed.unpersist()
         return summary
@@ -676,10 +667,7 @@ class CrawlDriver:
         """First round of the ACTIVE incremental cycle, or 0 (whole-crawl
         window — no cycle ever began). Scheduling and the seen-set are
         scoped to rounds ≥ this boundary."""
-        if not self.cycles.exists():
-            return 0
-        row = self.cycles.read().agg(F.max("start_round")).first()
-        return int(row[0]) if row[0] is not None else 0
+        return max((r["start_round"] for r in self.cycles.rows()), default=0)
 
     def begin_incremental_cycle(self, listing_df: DataFrame, *,
                                 version_cols=("etag", "size"),
@@ -712,10 +700,8 @@ class CrawlDriver:
         from pyspark.sql import Observation
         from fess_ds_s3_spark.operators import incremental as inc
         start_round = self.last_round() + 1
-        cycle_id = 1
-        if self.cycles.exists():
-            prev_cycle = self.cycles.read().agg(F.max("cycle")).first()[0]
-            cycle_id = int(prev_cycle or 0) + 1
+        cycle_id = max((r["cycle"] for r in self.cycles.rows()),
+                       default=0) + 1
 
         # the prior ETag rides each candidate row so store-mode rounds GET
         # conditionally; null for added rows
@@ -799,9 +785,8 @@ class CrawlDriver:
                                candidates=n_cand, deleted=n_tomb)
         # commit point: the cycle (and its seen-generation boundary) exists
         # once this row is visible
-        self.cycles.append(
-            self.spark.createDataFrame(
-                [(cycle_id, start_round, n_cand, n_tomb)], CYCLES_SCHEMA),
+        self.cycles.append(self.cycles.stage_rows(
+            [(cycle_id, start_round, n_cand, n_tomb)], CYCLES_SCHEMA),
             {"cycle": cycle_id})
         return summary
 

@@ -19,6 +19,12 @@ the same *semantics* over plain parquet:
 - per-snapshot **lineage metadata** (round id, parent snapshot, caller
   metrics) is stored in the manifest, satisfying the "per-partition lineage +
   metrics" requirement together with ``plans.lineage``.
+- the manifest is the **table metadata** Iceberg reads without a scan:
+  ``schemas`` maps each committed data directory to its Spark schema (reads
+  pass their union, in commit order, to ``.schema()``: no inference job),
+  and ``rows`` maps each directory staged by ``stage_rows`` to its rows (a
+  small ledger's ``rows()`` is then a JSON read). Directories committed
+  without them fall back to mergeSchema inference and a Spark read.
 
 Splitting the write lets a caller stage several tables' data files
 concurrently and then commit their manifests serially in a fixed order
@@ -32,7 +38,7 @@ only touches this interface (see plans/round.py), nothing else changes.
 The reference's resume primitive is keyset pagination (``startAfter =
 lastKey``, AmazonS3Client.java:144-146); snapshots generalize it: a crashed
 run re-reads the last committed snapshot and continues bit-identically
-(tested in tests/test_resume.py).
+(tested in tests/test_crawl_resume.py).
 """
 
 from __future__ import annotations
@@ -45,7 +51,11 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -68,6 +78,22 @@ class Staged:
     """Data files written by :meth:`SnapshotTable.stage`, not yet committed."""
     root: str  # the owning table's root directory
     rel: str   # the data directory, relative to ``root``
+    schema: dict  # the files' Spark schema, ``StructType.jsonValue()``
+    rows: list | None = None  # the rows themselves (stage_rows only)
+
+
+def _merged_schema(schemas: dict[str, Any],
+                   dirs: list[str]) -> StructType | None:
+    """Union of the recorded schemas of ``dirs`` in first-appearance order;
+    None when a schema is missing or a column's recorded types differ."""
+    fields: dict[str, dict[str, Any]] = {}
+    for d in dirs:
+        if d not in schemas:
+            return None
+        for f in schemas[d]["fields"]:
+            if fields.setdefault(f["name"], f)["type"] != f["type"]:
+                return None
+    return StructType.fromJson({"fields": list(fields.values())})
 
 
 class SnapshotTable:
@@ -110,12 +136,11 @@ class SnapshotTable:
 
     def _snapshot(self, manifest: dict[str, Any],
                   snapshot_id: int | None) -> Snapshot | None:
-        snaps = manifest["snapshots"]
-        if not snaps:
-            return None
         if snapshot_id is None:
             snapshot_id = manifest["current"]
-        for s in snaps:
+            if snapshot_id is None:
+                return None
+        for s in manifest["snapshots"]:
             if s["snapshot_id"] == snapshot_id:
                 return Snapshot(**s)
         raise KeyError(f"{self.name}: no snapshot {snapshot_id}")
@@ -125,7 +150,18 @@ class SnapshotTable:
         them; pass the handle to :meth:`append` or :meth:`overwrite`."""
         rel = os.path.join("data", f"snap-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-        return Staged(self.root, rel)
+        return Staged(self.root, rel, df.schema.jsonValue())
+
+    def stage_rows(self, rows: list[tuple], schema: StructType) -> Staged:
+        """Stage a few driver-side rows with no Spark job: pyarrow writes
+        the data file, and the rows ride the manifest from the commit on,
+        where :meth:`rows` reads them without a scan."""
+        rel = os.path.join("data", f"snap-{uuid.uuid4().hex}")
+        os.makedirs(os.path.join(self.root, rel))
+        records = [dict(zip(schema.names, r)) for r in rows]
+        pq.write_table(pa.Table.from_pylist(records, to_arrow_schema(schema)),
+                       os.path.join(self.root, rel, "part-00000.parquet"))
+        return Staged(self.root, rel, schema.jsonValue(), records)
 
     def _new(self, data: DataFrame | Staged, mode: str,
              metadata: dict[str, Any] | None) -> int:
@@ -137,6 +173,9 @@ class SnapshotTable:
         dirs = [staged.rel] if mode == "overwrite" else (
             (parent.data_dirs if parent else []) + [staged.rel])
         snap_id = (parent.snapshot_id + 1) if parent else 1
+        manifest.setdefault("schemas", {})[staged.rel] = staged.schema
+        if staged.rows is not None:
+            manifest.setdefault("rows", {})[staged.rel] = staged.rows
         manifest["snapshots"].append({
             "snapshot_id": snap_id,
             "parent_id": parent.snapshot_id if parent else None,
@@ -239,13 +278,16 @@ class SnapshotTable:
             for s in retained:
                 s["data_dirs"] = [d for d in s["data_dirs"]
                                   if d in referenced]
-        manifest["snapshots"] = retained
-        self._commit(manifest)
         candidates: set[str] = set()
         for s in expired:
             candidates.update(s["data_dirs"])
             if s.get("delta_dir"):
                 candidates.add(s["delta_dir"])
+        manifest["snapshots"] = retained
+        for rel in candidates - referenced:
+            manifest.get("schemas", {}).pop(rel, None)
+            manifest.get("rows", {}).pop(rel, None)
+        self._commit(manifest)
         deleted = 0
         for rel in sorted(candidates - referenced):
             path = os.path.join(self.root, rel)
@@ -254,15 +296,35 @@ class SnapshotTable:
                 deleted += 1
         return {"expired": len(expired), "deleted_dirs": deleted}
 
+    def _scan(self, manifest: dict[str, Any], dirs: list[str]) -> DataFrame:
+        paths = [os.path.join(self.root, d) for d in dirs]
+        schema = _merged_schema(manifest.get("schemas", {}), dirs)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*paths)
+        # no usable recorded schema: infer it; mergeSchema keeps columns a
+        # later delta gained (without it one arbitrary file's schema wins)
+        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+
     def read(self, snapshot_id: int | None = None) -> DataFrame:
-        snap = self._snapshot(self._load(), snapshot_id)
+        manifest = self._load()
+        snap = self._snapshot(manifest, snapshot_id)
         if snap is None or not snap.data_dirs:
             raise KeyError(f"{self.name}: table has no snapshots yet")
-        paths = [os.path.join(self.root, d) for d in snap.data_dirs]
-        # mergeSchema: deltas written by different engine versions may have
-        # gained columns; without it the schema comes from an arbitrary
-        # file and newer columns silently disappear
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._scan(manifest, snap.data_dirs)
+
+    def rows(self) -> list[dict[str, Any]]:
+        """The current snapshot's rows, for small ledger tables: read from
+        the manifest, or collected by a Spark read when a directory has none
+        recorded (staged by :meth:`stage`, or committed before rows were)."""
+        manifest = self._load()
+        snap = self._snapshot(manifest, None)
+        if snap is None:
+            return []
+        recorded = manifest.get("rows", {})
+        if all(d in recorded for d in snap.data_dirs):
+            return [r for d in snap.data_dirs for r in recorded[d]]
+        return [r.asDict() for r in
+                self._scan(manifest, snap.data_dirs).collect()]
 
     def read_deltas(self, snapshot_ids: list[int]) -> DataFrame:
         """DataFrame over exactly the files ADDED by the given snapshots.
@@ -274,17 +336,10 @@ class SnapshotTable:
         replayed and committed (Iceberg analog: per-snapshot incremental
         scan pinned by the ledger)."""
         manifest = self._load()
-        by_id = {s["snapshot_id"]: Snapshot(**s)
-                 for s in manifest["snapshots"]}
-        dirs = []
-        for sid in snapshot_ids:
-            if sid not in by_id:
-                raise KeyError(f"{self.name}: no snapshot {sid}")
-            dirs.append(by_id[sid].delta)
+        dirs = [self._snapshot(manifest, sid).delta for sid in snapshot_ids]
         if not dirs:
             raise KeyError(f"{self.name}: no snapshots requested")
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.root, d) for d in dirs])
+        return self._scan(manifest, dirs)
 
     def metadata(self, snapshot_id: int | None = None) -> dict[str, Any]:
         snap = self._snapshot(self._load(), snapshot_id)

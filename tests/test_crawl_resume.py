@@ -4,6 +4,10 @@ AmazonS3Client.java:144-146 / AmazonS3ClientTest.java:187-201)."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -574,3 +578,128 @@ class TestAuthorityIntegration:
                          use_authority=True)
         assert d2.refresh_authority() == 0
         assert not d2.authority.exists()
+
+
+@pytest.fixture(scope="module")
+def cycled(spark, tmp_path_factory):
+    """Two rounds with link harvest, then an incremental cycle begun: the
+    frontier holds seed, links and cycle-candidate deltas, and round 0's
+    indexed delta lacks the ``url_hash`` column later rounds add."""
+    cfg = CrawlConfig(region="us-east-1", default_host_budget=10,
+                      bloom_expected=10_000, seen_partitions=8)
+    driver = CrawlDriver(spark, str(tmp_path_factory.mktemp("cycled")), cfg)
+    frontier = synthetic.synth_frontier(spark, 60, n_hosts=4, seed=9)
+    driver.seed(frontier)
+    driver.run(2, docs=_linking_docs(frontier), stop_when_empty=False)
+    driver.begin_incremental_cycle(
+        frontier.select("bucket", "key", "size", "etag"))
+    return driver
+
+
+SINKS = ("frontier", "seen", "indexed", "failures", "stats", "lineage")
+
+
+def _max_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _types(df) -> dict:
+    return {f.name: f.dataType for f in df.schema}
+
+
+def _rows(df) -> list[str]:
+    return sorted(repr(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _inferred(spark, table, dirs):
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(table.root, d) for d in dirs])
+
+
+class TestManifestBookkeeping:
+    def test_bookkeeping_launches_no_spark_job(self, spark, cycled):
+        before = _max_job_id(spark)
+        assert cycled.last_round() == 1
+        start = cycled.cycle_start()
+        assert start == 2
+        seen_ids, _ = cycled._ledgered("seen_snapshot")
+        cycled.committed_seen(min_round=start)
+        cycled.frontier.read()
+        cycled.seen_bloom.read()
+        cycled.seen.read_deltas(seen_ids)
+        assert _max_job_id(spark) == before
+
+    def test_reads_match_inferred_schema_rows_and_commit_order(self, spark,
+                                                               cycled):
+        reads = [(t, t.snapshots()[-1].data_dirs, t.read())
+                 for t in (cycled.catalog.table(n) for n in
+                           os.listdir(cycled.catalog.warehouse))
+                 if t.exists()]
+        for name in SINKS:
+            table = cycled.catalog.table(name)
+            ids, legacy = cycled._ledgered(f"{name}_snapshot")
+            assert ids and not legacy
+            by_id = {s.snapshot_id: s for s in table.snapshots()}
+            reads.append((table, [by_id[i].delta for i in ids],
+                          table.read_deltas(ids)))
+        assert {t.name for t, _, _ in reads} >= {*SINKS, "rounds", "cycles"}
+        for table, dirs, got in reads:
+            want = _inferred(spark, table, dirs)
+            assert _types(got) == _types(want), table.name
+            assert _rows(got) == _rows(want), table.name
+            order = []
+            for d in dirs:
+                order += [c for c in _inferred(spark, table, [d]).columns
+                          if c not in order]
+            assert got.columns == order, table.name
+
+    def test_manifests_without_new_keys_read_identically(self, spark, cycled,
+                                                         tmp_path):
+        wh = str(tmp_path / "old")
+        shutil.copytree(cycled.catalog.warehouse, wh)
+        for name in os.listdir(wh):
+            path = os.path.join(wh, name, "manifest.json")
+            if os.path.exists(path):
+                with open(path) as fh:
+                    manifest = json.load(fh)
+                manifest.pop("schemas", None)
+                manifest.pop("rows", None)
+                with open(path, "w") as fh:
+                    json.dump(manifest, fh)
+        old = CrawlDriver(spark, wh, cycled.cfg)
+        for name in ("rounds", "cycles"):
+            a = sorted(map(repr, old.catalog.table(name).rows()))
+            b = sorted(map(repr, cycled.catalog.table(name).rows()))
+            assert a == b, name
+        assert old.last_round() == cycled.last_round()
+        assert old.cycle_start() == cycled.cycle_start()
+        for name in SINKS:
+            col = f"{name}_snapshot"
+            assert old._ledgered(col) == cycled._ledgered(col)
+            a, b = old.read_committed(name), cycled.read_committed(name)
+            assert _types(a) == _types(b) and _rows(a) == _rows(b), name
+        for a, b in ((old.frontier.read(), cycled.frontier.read()),
+                     (old.seen_bloom.read(), cycled.seen_bloom.read()),
+                     (old.committed_seen(2), cycled.committed_seen(2))):
+            assert _types(a) == _types(b) and _rows(a) == _rows(b)
+
+    def test_linkless_rounds_read_the_frontier_once(self, spark, cfg,
+                                                    tmp_path):
+        """Rounds without docs ledger the same frontier snapshot id; the
+        committed frontier read must still see each seed row once."""
+        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
+        frontier = synthetic.synth_frontier(spark, 60, n_hosts=4, seed=9)
+        driver.seed(frontier)
+        driver.run(3, stop_when_empty=False)
+        assert driver.read_committed("frontier").count() == frontier.count()
+        assert driver._ledgered("frontier_snapshot") == ([1], [])
+
+    def test_empty_seen_set_is_a_local_relation(self, spark, cfg, tmp_path):
+        driver = CrawlDriver(spark, str(tmp_path / "wh"), cfg)
+        driver.seed(synthetic.synth_frontier(spark, 10, n_hosts=2, seed=1))
+        qe = driver.committed_seen()._jdf.queryExecution()
+        for plan in (qe.optimizedPlan(), qe.executedPlan()):
+            assert "ExistingRDD" not in plan.toString()
+            assert "LogicalRDD" not in plan.toString()

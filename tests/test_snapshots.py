@@ -6,6 +6,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from fess_ds_s3_spark.sources.snapshots import Catalog, SnapshotTable
 
@@ -265,3 +266,59 @@ class TestExpireSnapshots:
         table.append(_df(spark, [1]))
         with pytest.raises(ValueError):
             table.expire_snapshots(reference="bogus")
+
+
+class TestManifestMaps:
+    SCHEMA = StructType([StructField("v", IntegerType(), False)])
+
+    def _manifest(self, table):
+        with open(table._manifest_path) as fh:
+            return json.load(fh)
+
+    def test_staged_rows_read_back_from_manifest_and_files(self, spark,
+                                                          table):
+        s1 = table.append(table.stage_rows([(1,), (2,)], self.SCHEMA))
+        table.append(table.stage_rows([(3,)], self.SCHEMA))
+        assert table.rows() == [{"v": 1}, {"v": 2}, {"v": 3}]
+        assert sorted(r.v for r in table.read().collect()) == [1, 2, 3]
+        assert [r.v for r in table.read(s1).collect()] == [1, 2]
+        table.append(_df(spark, [4]))  # no rows recorded: a Spark read
+        assert sorted(r["v"] for r in table.rows()) == [1, 2, 3, 4]
+
+    def test_uncommitted_stage_adds_nothing_to_manifest(self, spark, table):
+        table.append(_df(spark, [1]))
+        before = self._manifest(table)
+        table.stage(_df(spark, [2]))
+        table.stage_rows([(3,)], self.SCHEMA)
+        assert self._manifest(table) == before
+        assert table.rows() == [{"v": 1}]
+
+    def test_expire_drops_map_entries_of_deleted_dirs(self, spark, table):
+        for v in ([1], [2], [3]):
+            table.append(table.stage_rows([(x,) for x in v], self.SCHEMA))
+        table.overwrite(table.stage_rows([(9,)], self.SCHEMA))
+        out = table.expire_snapshots(keep_last=1)
+        assert out["deleted_dirs"] == 3
+        manifest = self._manifest(table)
+        live = set(table.snapshots()[-1].data_dirs)
+        assert set(manifest["schemas"]) == live == set(manifest["rows"])
+        assert table.rows() == [{"v": 9}]
+
+    def test_conflicting_recorded_types_fall_back_to_inference(self, spark,
+                                                               table):
+        """Recorded types that differ by name read as mergeSchema does:
+        nested structs merge, an int and a bigint column raise."""
+        def inferred():
+            return spark.read.option("mergeSchema", "true").parquet(
+                *[os.path.join(table.root, d)
+                  for d in table.snapshots()[-1].data_dirs])
+
+        table.append(spark.createDataFrame([((1,),)], "s struct<a:int>"))
+        table.append(spark.createDataFrame([((2,),)], "s struct<b:int>"))
+        assert table.read().schema == inferred().schema
+        assert sorted(map(repr, table.read().collect())) == \
+            sorted(map(repr, inferred().collect()))
+        table.append(spark.createDataFrame([(3,)], "s bigint"))
+        for read in (inferred, table.read):
+            with pytest.raises(Exception, match="CANNOT_MERGE|merge"):
+                read().collect()
