@@ -9,7 +9,10 @@ the SAME values inside ``mapInArrow`` with pyarrow's RE2 kernels
 (linear-time DFA — the ``\\b(?:...)\\b`` alternation scan over the whole
 sf1.0 corpus takes ~40 ms single-threaded vs ~1.6 s distributed Java
 regex) and cheap Python string slicing, per guide §4.2 (hand whole
-batches to vectorized native libraries).
+batches to vectorized native libraries). ``curate_metrics`` is the one
+scoring path of plans/curate.py; every kernel input passes the job-free
+``partition_floor`` (scans floored to ``defaultParallelism``, adaptive
+inputs left to AQE).
 
 Exact-equivalence notes (why the outputs are bit-identical, not merely
 similar):
@@ -42,6 +45,8 @@ blanks, multi-space runs).
 from __future__ import annotations
 
 import hashlib
+import json
+import logging
 
 import numpy as np
 import pyarrow as pa
@@ -57,6 +62,8 @@ from fess_ds_s3_spark.functions.text import _LANG_MARKERS, EN_STOPWORDS
 #: lacks \x0B)
 _JAVA_WS = "[ \\t\\n\\x0B\\f\\r]"
 
+_log = logging.getLogger(__name__)
+
 
 def partition_floor(src: DataFrame) -> DataFrame:
     """Parallelism floor for a Python kernel stage (guide §2.5/§6, the
@@ -67,12 +74,23 @@ def partition_floor(src: DataFrame) -> DataFrame:
     UP to it (round-robin; every kernel here is row-wise, so placement
     cannot change any value). A large input that already has >=
     defaultParallelism partitions keeps its layout and pays no shuffle —
-    the floor never becomes a cap at 100 TB."""
-    sc = src.sparkSession.sparkContext
-    natural = sc.defaultParallelism
-    if src.rdd.getNumPartitions() < natural:
-        return src.repartition(natural)
-    return src
+    the floor never becomes a cap at 100 TB. The decision runs no Spark
+    job: an adaptive plan (it reads a shuffle) is returned as is — its
+    partition count would run every upstream stage (2 jobs, ~0.9 s) and
+    AQE sets it anyway — and only a plan with no exchange is probed
+    (plans only, ~0.05 s). Logs one JSON line per call: ``decision``
+    (repartition/keep/adaptive), probed ``partitions`` (null if
+    adaptive), ``natural``."""
+    natural = src.sparkSession.sparkContext.defaultParallelism
+    plan = src._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        decision, parts = "adaptive", None
+    else:
+        parts = src.rdd.getNumPartitions()
+        decision = "repartition" if parts < natural else "keep"
+    _log.info(json.dumps({"event": "partition_floor", "decision": decision,
+                          "partitions": parts, "natural": natural}))
+    return src.repartition(natural) if decision == "repartition" else src
 
 _STOP_PATTERN = r"\b(?:" + "|".join(EN_STOPWORDS) + r")\b"
 _LANG_PATTERNS = [(lang, r"\b(?:" + "|".join(ws) + r")\b")
@@ -122,18 +140,16 @@ def curate_metrics(docs: DataFrame, *, text: str = "text",
     """One Arrow pass over ``(id, text)`` → the curate-funnel score
     columns ``(id_col, *keep, lang_guess, ws_tokens, _stop_hits, fp)``,
     value-identical to the functions/text.py expressions (equivalence
-    notes in the module docstring). ``stopword_ratio`` is NOT computed
-    here — derive it in Spark from ``_stop_hits / ws_tokens`` (the
-    original expression over the same integers), which also removes the
-    old plan's duplicate hits+tokens regex scans."""
-    cols = [id_col, *keep, text]
-    src = partition_floor(docs.select(*cols))
+    notes in the module docstring). ``stopword_ratio`` is derived from
+    the counts by :func:`stopword_ratio_from_counts`."""
+    src = partition_floor(docs.select(id_col, *keep, text))
+    nullable = src.schema[text].nullable  # NULL only for NULL text
     out_schema = StructType(
         [src.schema[c] for c in (id_col, *keep)]
         + [StructField("lang_guess", StringType(), False),
-           StructField("ws_tokens", LongType(), True),
-           StructField("_stop_hits", IntegerType(), True),
-           StructField("fp", StringType(), True)])
+           StructField("ws_tokens", LongType(), nullable),
+           StructField("_stop_hits", IntegerType(), nullable),
+           StructField("fp", StringType(), nullable)])
     n_keep = 1 + len(keep)
 
     def _kernel(batches):
@@ -152,15 +168,14 @@ def curate_metrics(docs: DataFrame, *, text: str = "text",
     return src.mapInArrow(_kernel, out_schema)
 
 
-def stopword_ratio_from_counts(hits: str = "_stop_hits",
-                               tokens: str = "ws_tokens") -> F.Column:
+def stopword_ratio_from_counts() -> F.Column:
     """The ``stopword_ratio`` expression over already-computed counts —
     identical operands to ``functions.text.stopword_ratio`` (hits and
     tokens of the lowered text equal those of the raw text), one
     division instead of two more regex scans."""
-    return (F.when(F.col(tokens) == 0, F.lit(0.0))
-            .otherwise(F.round(F.col(hits).cast("double")
-                               / F.col(tokens), 4)))
+    return (F.when(F.col("ws_tokens") == 0, F.lit(0.0))
+            .otherwise(F.round(F.col("_stop_hits").cast("double")
+                               / F.col("ws_tokens"), 4)))
 
 
 def shingle_sets(docs: DataFrame, *, text: str = "text",

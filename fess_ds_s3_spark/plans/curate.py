@@ -9,7 +9,8 @@ text metrics (functions/text.py) and exact dedup (operators/dedup.py)
 into that funnel as ONE declarative plan:
 
 1. **Score** — language-ID, whitespace token count, stopword hits/ratio,
-   md5 fingerprint. Pure JVM column math, no shuffle, no UDF.
+   md5 fingerprint: one Arrow/RE2 pass (functions/arrow_text, behind its
+   job-free partition floor), shared by both funnels. No shuffle.
 2. **Filter** — language allowlist, minimum token count, minimum
    stopword density. The density threshold is an exact integer
    cross-multiplication (``hits * den >= tokens * num``), never a float
@@ -103,37 +104,13 @@ def curate_corpus(docs: DataFrame, *,
     corpus rows; the output then carries ``source_col``. The cap window
     is salted two-pass over ``cap_salt_buckets`` (0 → single window).
     """
-    num, den = min_stopword
     if sample is not None:
         docs = docs.filter(hash_sample(id_col, *sample, seed=sample_seed))
-    # r6: one Arrow/RE2 pass computes the score columns (value-identical
-    # twins of the functions/text.py expressions — equivalence notes in
-    # functions/arrow_text.py); the ratio is derived from the counted
-    # columns instead of re-scanning the text twice more
-    scored = (arrow_text.curate_metrics(
-        docs, text=text, id_col=id_col,
-        keep=(source_col,) if max_per_source is not None else ())
-        .withColumn("stopword_ratio",
-                    arrow_text.stopword_ratio_from_counts()))
-    kept = scored.filter(
-        F.col("lang_guess").isin(*langs)
-        & (F.col("ws_tokens") >= F.lit(min_tokens))
-        & (F.col("_stop_hits") * F.lit(den)
-           >= F.col("ws_tokens") * F.lit(num)))
-    # id_col leads the struct, so appending source never changes the min
-    winner_fields = [id_col, "lang_guess", "ws_tokens", "stopword_ratio"]
-    if max_per_source is not None:
-        winner_fields.append(source_col)
-    winner = F.min(F.struct(*winner_fields)).alias("_w")
+    keep = (source_col,) if max_per_source is not None else ()
     out_cols = ["fp", id_col, "lang_guess", "ws_tokens",
-                "stopword_ratio", "dup_count"]
-    if max_per_source is not None:
-        out_cols.append(source_col)
-    survivors = (kept.groupBy("fp")
-                 .agg(winner, F.count(F.lit(1)).alias("dup_count"))
-                 .select("fp", *[f"_w.{f}" for f in winner_fields],
-                         "dup_count")
-                 .select(*out_cols))
+                "stopword_ratio", "dup_count", *keep]
+    survivors = _score_gate_fold(docs, text, id_col, keep, langs,
+                                 min_tokens, min_stopword).select(*out_cols)
     if near_dup_keep not in ("greedy", "cluster"):
         raise ValueError("near_dup_keep must be 'greedy' or 'cluster'")
     if near_dup_threshold is not None:
@@ -192,13 +169,13 @@ def curate_interleaved(docs: DataFrame, *,
 
     Scale shape: span stats and extraction are per-row JVM array
     expressions (no explode — a 10k-span doc never becomes 10k rows);
-    the structural filters run before the single fingerprint shuffle, so
+    the text is scored by :func:`curate_corpus`'s Arrow/RE2 kernel; the
+    structural filters run before the single fingerprint shuffle, so
     the wide stage sees only the kept fraction. Output adds ``n_spans``
     / ``n_media`` (the survivor's) to the :func:`curate_corpus` schema.
     """
     from fess_ds_s3_spark.operators.extract import text_from_spans
     sp = F.col(spans)
-    num, den = min_stopword
     scored = docs.select(
         F.col(id_col),
         text_from_spans(spans).alias("_text"),
@@ -215,20 +192,30 @@ def curate_interleaved(docs: DataFrame, *,
             <= F.col("n_spans") * F.lit(m_num))
     if drop_broken_media:
         scored = scored.filter(~F.col("_broken"))
-    scored = scored.select(
-        F.col(id_col), "n_spans", "n_media",
-        T.lang_id("_text").alias("lang_guess"),
-        T.token_count_ws("_text").alias("ws_tokens"),
-        T.stopword_hits("_text").alias("_stop_hits"),
-        T.stopword_ratio("_text").alias("stopword_ratio"),
-        T.fingerprint_md5("_text").alias("fp"))
+    return _score_gate_fold(scored, "_text", id_col, ("n_spans", "n_media"),
+                            langs, min_tokens, min_stopword)
+
+
+def _score_gate_fold(docs: DataFrame, text: str, id_col: str,
+                     keep: tuple[str, ...], langs: Sequence[str],
+                     min_tokens: int, min_stopword: tuple[int, int]
+                     ) -> DataFrame:
+    """Score (arrow_text.curate_metrics) → text gates → one ``groupBy``
+    on the fingerprint keeping the min-id survivor: ``(fp, id_col,
+    lang_guess, ws_tokens, stopword_ratio, *keep, dup_count)``. ``id_col``
+    leads the struct, so ``keep`` columns never change which row wins."""
+    num, den = min_stopword
+    scored = (arrow_text.curate_metrics(docs, text=text, id_col=id_col,
+                                        keep=keep)
+              .withColumn("stopword_ratio",
+                          arrow_text.stopword_ratio_from_counts()))
     kept = scored.filter(
         F.col("lang_guess").isin(*langs)
         & (F.col("ws_tokens") >= F.lit(min_tokens))
         & (F.col("_stop_hits") * F.lit(den)
            >= F.col("ws_tokens") * F.lit(num)))
     winner_fields = [id_col, "lang_guess", "ws_tokens", "stopword_ratio",
-                     "n_spans", "n_media"]
+                     *keep]
     winner = F.min(F.struct(*winner_fields)).alias("_w")
     return (kept.groupBy("fp")
             .agg(winner, F.count(F.lit(1)).alias("dup_count"))
@@ -261,8 +248,6 @@ def funnel_report(docs: DataFrame, *,
     is never scanned twice and no stage materializes an intermediate.
     """
     num, den = min_stopword
-    # r6: the four score columns come from the shared Arrow/RE2 kernel
-    # (value-identical twins — see functions/arrow_text.py)
     scored = arrow_text.curate_metrics(docs, text=text, id_col=id_col) \
         .select(F.col(id_col).alias("_id"),
                 F.col("lang_guess").alias("_lang"),

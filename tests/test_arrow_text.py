@@ -6,6 +6,9 @@ multi-space runs)."""
 
 from __future__ import annotations
 
+import json
+import logging
+
 from pyspark.sql import functions as F
 
 from fess_ds_s3_spark.functions import arrow_text as AT
@@ -88,3 +91,64 @@ class TestShingleKernel:
         assert sorted(map(tuple, legacy.collect())) == sorted(
             map(tuple,
                 dedup.explode_shingle_hashes(d, n=3).collect()))
+
+
+def _max_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _grouped(spark):
+    """A fresh aggregate: its plan reads a shuffle, so it is adaptive."""
+    return (spark.range(0, 200, 1, 3)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .agg(F.count(F.lit(1)).alias("n")))
+
+
+def _one_file_scan(spark, tmp_path):
+    out = str(tmp_path / "one")
+    spark.range(50).coalesce(1).write.parquet(out)
+    return spark.read.parquet(out)
+
+
+class TestPartitionFloor:
+    def test_adaptive_input_runs_no_job(self, spark):
+        """Counting an adaptive plan's partitions would run its upstream
+        shuffle stages; the floor must decide from the plan alone."""
+        g = _grouped(spark)
+        before = _max_job_id(spark)
+        out = AT.partition_floor(g)
+        assert _max_job_id(spark) == before
+        assert out is g
+        assert sorted(map(tuple, out.collect())) == \
+            sorted(map(tuple, _grouped(spark).collect()))
+
+    def test_one_file_scan_is_floored(self, spark, tmp_path):
+        src = _one_file_scan(spark, tmp_path)
+        assert src.rdd.getNumPartitions() == 1
+        before = _max_job_id(spark)
+        out = AT.partition_floor(src)
+        assert _max_job_id(spark) == before
+        assert out.rdd.getNumPartitions() == \
+            spark.sparkContext.defaultParallelism
+
+    def test_logs_one_decision_per_call(self, spark, tmp_path, caplog):
+        natural = spark.sparkContext.defaultParallelism
+        inputs = [_one_file_scan(spark, tmp_path),
+                  spark.range(0, 100, 1, natural), _grouped(spark)]
+        caplog.set_level(logging.INFO, logger=AT.__name__)
+        lines = []
+        for df in inputs:
+            caplog.clear()
+            AT.partition_floor(df)
+            recs = [r for r in caplog.records if r.name == AT.__name__]
+            assert len(recs) == 1
+            lines.append(json.loads(recs[0].getMessage()))
+        assert lines == [
+            {"event": "partition_floor", "decision": "repartition",
+             "partitions": 1, "natural": natural},
+            {"event": "partition_floor", "decision": "keep",
+             "partitions": natural, "natural": natural},
+            {"event": "partition_floor", "decision": "adaptive",
+             "partitions": None, "natural": natural}]

@@ -59,6 +59,26 @@ class TestMinHashLSH:
         assert lsh == exact
         assert (0, 5) in exact or (0, 6) in exact  # near-dups found
 
+    def test_pair_rows_are_pinned(self, spark, docs):
+        """The pair rows on this fixture, fixed: the same rows whether
+        the input is a scan (floored by a repartition) or reads a
+        shuffle (left to AQE)."""
+        want = [(0, 1, 17, 17, 1.0), (0, 2, 17, 17, 1.0),
+                (0, 5, 14, 20, 0.7), (0, 6, 14, 20, 0.7),
+                (1, 2, 17, 17, 1.0), (1, 5, 14, 20, 0.7),
+                (1, 6, 14, 20, 0.7), (2, 5, 14, 20, 0.7),
+                (2, 6, 14, 20, 0.7), (3, 4, 3, 3, 1.0),
+                (5, 6, 13, 21, 0.619048)]
+        shuffled = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+        for src in (docs, shuffled):
+            got = dedup.dedup_minhash_lsh(src, num_hashes=128, bands=32,
+                                          shingle_n=3, threshold=0.5)
+            assert sorted(map(tuple, got.collect())) == want
+        default = dedup.dedup_minhash_lsh(docs).collect()
+        assert sorted(map(tuple, default)) == [
+            (0, 1, 15, 15, 1.0), (0, 2, 15, 15, 1.0), (1, 2, 15, 15, 1.0),
+            (3, 4, 3, 3, 1.0)]
+
     def test_exact_pair_counts_are_integers(self, spark, docs):
         out = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
         row = out.first()

@@ -9,7 +9,11 @@ fails on any public top-level ``def``/``class`` of ``fess_ds_s3_spark/``,
 or public method of a public class, whose name appears as a ``NAME``
 token nowhere outside its own body. A second check holds the crawl
 driver's options to the same rule: every keyword parameter of
-``CrawlDriver.__init__`` is passed by name in some production call.
+``CrawlDriver.__init__`` is passed by name in some production call. A
+third check keeps plan building job-free: no package module touches
+``.rdd`` except the no-exchange branch of ``arrow_text.partition_floor``
+(on an adaptive plan, ``.rdd`` runs every upstream shuffle stage while
+the plan is still being built).
 
 Import lines, strings, comments and ``tests/`` do not count as callers.
 Pure Python; no Spark session.
@@ -157,3 +161,34 @@ def test_every_driver_option_is_set_by_a_production_caller():
     assert not unset, (
         "CrawlDriver options no production caller passes (delete them or "
         "make the behaviour unconditional): " + ", ".join(unset))
+
+
+def _allowed_rdd_lines() -> range:
+    """Lines of the no-exchange branch of ``partition_floor``: the
+    ``else`` of the ``if`` that tests for an ``AdaptiveSparkPlanExec``
+    root."""
+    path = PACKAGE / "functions" / "arrow_text.py"
+    tree = ast.parse(path.read_text())
+    floor = next(n for n in tree.body if isinstance(n, ast.FunctionDef)
+                 and n.name == "partition_floor")
+    branch = next(n for n in ast.walk(floor) if isinstance(n, ast.If)
+                  and any(isinstance(c, ast.Constant)
+                          and c.value == "AdaptiveSparkPlanExec"
+                          for c in ast.walk(n.test)))
+    assert branch.orelse, "partition_floor lost its no-exchange branch"
+    return range(branch.orelse[0].lineno, branch.orelse[-1].end_lineno + 1)
+
+
+def test_rdd_is_touched_only_by_the_no_exchange_floor_probe():
+    floor_file = PACKAGE / "functions" / "arrow_text.py"
+    allowed = _allowed_rdd_lines()
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Attribute) and node.attr == "rdd"
+                    and not (path == floor_file
+                             and node.lineno in allowed)):
+                hits.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not hits, (
+        "package code touching .rdd (on an adaptive plan it runs the "
+        "upstream shuffle stages at plan-build time): " + ", ".join(hits))
